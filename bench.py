@@ -475,46 +475,21 @@ def run_crawl_only():
     spark.stop()
 
 
-def _stage_task_counts(event_dir: str) -> list[dict]:
-    """Parse a Spark event log dir into [{stage, name, tasks, ms}]
-    rows — the 'no single-task stage' evidence for the payload-scale
-    image bench (round-3 verdict item 7). Reuses the reader shape of
-    scripts/stage_times.py (rolling-v2 dirs, zstd)."""
-    import io
+def stage_task_report(evdir: str) -> tuple[list[dict], list[str], str]:
+    """The 'no single-task stage' evidence (round-3 verdict item 7)
+    from the event log at ``evdir``: its completed stages, the names
+    of the 1-task stages slower than 2 s, and a markdown table of
+    every stage's task count and wall time."""
+    from scripts.stage_times import read_stages
 
-    names = []
-    for root_, _dirs, files in os.walk(event_dir):
-        # non-rolling logs are named local-<ts>[.inprogress][.zstd];
-        # rolling-v2 dirs hold events_* parts — take every file
-        names += [os.path.join(root_, f) for f in files
-                  if not f.startswith("appstatus")]
-    rows = []
-    for path in sorted(names):
-        if path.endswith(".zstd"):
-            import pyarrow as pa
-            fh = io.TextIOWrapper(
-                pa.input_stream(path, compression="zstd"),
-                encoding="utf-8")
-        else:
-            fh = open(path)
-        with fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if ev.get("Event") != "SparkListenerStageCompleted":
-                    continue
-                si = ev["Stage Info"]
-                sub = si.get("Submission Time")
-                comp = si.get("Completion Time")
-                rows.append({
-                    "stage": si["Stage ID"],
-                    "name": si["Stage Name"].split("\n")[0][:60],
-                    "tasks": si["Number of Tasks"],
-                    "ms": (comp - sub) if sub and comp else None,
-                })
-    return sorted(rows, key=lambda r: r["stage"])
+    stages, _, _ = read_stages(evdir)
+    single = [s["name"] for s in stages
+              if s["ntask"] == 1 and s["comp"] - s["sub"] > 2000]
+    table = ("| stage | tasks | wall ms | name |\n|---|---|---|---|\n"
+             + "".join(f"| {s['sid']} | {s['ntask']} "
+                       f"| {s['comp'] - s['sub']} | {s['name']} |\n"
+                       for s in stages))
+    return stages, single, table
 
 
 def run_textscale():
@@ -824,9 +799,7 @@ def run_imagescale():
     probe_post = cpu_capacity_probe(8)
     spark.stop()
 
-    stages = _stage_task_counts(evdir)
-    single = [s for s in stages
-              if s["tasks"] == 1 and (s["ms"] or 0) > 2000]
+    stages, single, stage_table = stage_task_report(evdir)
     out = {
         "mode": "imagescale",
         "n_images_base": n_images,
@@ -839,7 +812,7 @@ def run_imagescale():
         "n_in_clusters": stats["n_in_clusters"],
         "n_clusters": stats["n_clusters"],
         "n_stages": len(stages),
-        "slow_single_task_stages": [s["name"] for s in single],
+        "slow_single_task_stages": single,
         "host_probe_pre_sec": probe_pre,
         "host_probe_post_sec": probe_post,
     }
@@ -874,10 +847,7 @@ def run_imagescale():
             "'slow single-task stages' below lists any 1-task stage "
             ">2 s).\n\n"
             f"slow single-task stages: {single or 'none'}\n\n"
-            "| stage | tasks | wall ms | name |\n|---|---|---|---|\n"
-            + "".join(
-                f"| {s['stage']} | {s['tasks']} | {s['ms']} "
-                f"| {s['name']} |\n" for s in stages))
+            + stage_table)
     shutil.rmtree(evdir, ignore_errors=True)
     if os.environ.get("SPARK_GRAFT_IMG_KEEP") != "1":
         shutil.rmtree(corpus_dir, ignore_errors=True)

@@ -11,39 +11,56 @@ serial gap (app wall not covered by any running stage), which is the
 driver-side Amdahl term the scaling gate pays for.
 """
 import json
+import os
+import re
 import sys
 
 
-def _open(path):
-    """Accept a rolling-v2 event-log dir, a .zstd file, or plain text."""
-    import io
-    import os
+def _log_files(path: str) -> list[str]:
+    """Every event-log file under ``path``: the file itself, or — for a
+    rolling-v2 dir, an app dir or any dir tree of logs — each file but
+    the appstatus markers and hidden checksum files, parts in numeric
+    order (events_2 before events_10)."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for root, _dirs, names in os.walk(path):
+        out += [os.path.join(root, n) for n in names
+                if not n.startswith(("appstatus", "."))]
+    return sorted(out, key=lambda p: [int(t) if t.isdigit() else t
+                                      for t in re.split(r"(\d+)", p)])
 
-    if os.path.isdir(path):
-        names = [n for n in os.listdir(path) if n.startswith("events")]
-        if not names:  # app dir containing eventlog_v2_* subdir
-            sub = [n for n in os.listdir(path)
-                   if n.startswith("eventlog_v2")]
-            path = os.path.join(path, sub[0])
-            names = [n for n in os.listdir(path) if n.startswith("events")]
-        path = os.path.join(path, sorted(names)[0])
+
+def _open(path: str):
+    """A .zstd or plain-text event-log file, as text."""
     if path.endswith(".zstd"):
+        import io
+
         import pyarrow as pa
         return io.TextIOWrapper(
             pa.input_stream(path, compression="zstd"), encoding="utf-8")
     return open(path)
 
 
-def main() -> None:
-    path = sys.argv[1]
-    top = int(sys.argv[2].split("=")[-1]) if len(sys.argv) > 2 else 30
+def iter_events(path: str):
+    """Parsed JSON events of the event log(s) at ``path``."""
+    for f in _log_files(path):
+        with _open(f) as fh:
+            for line in fh:
+                try:
+                    yield json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+
+
+def read_stages(path: str) -> tuple[list[dict], int | None, int | None]:
+    """Completed stages of the event log at ``path``, in submission
+    order, each with sid, name, ntask, sub/comp (epoch ms), run_ms,
+    gc_ms, sh_read, sh_write and ndone — plus the app's start and end
+    timestamps (None when absent)."""
     stages: dict = {}
     app_start = app_end = None
-    for line in _open(path):
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
+    for ev in iter_events(path):
         e = ev.get("Event")
         if e == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"]
@@ -79,9 +96,15 @@ def main() -> None:
                              .get("Local Bytes Read", 0))
             s["sh_write"] += (m.get("Shuffle Write Metrics", {})
                               .get("Shuffle Bytes Written", 0))
-
     rows = [s for s in stages.values() if s["sub"] and s["comp"]]
     rows.sort(key=lambda s: s["sub"])
+    return rows, app_start, app_end
+
+
+def main() -> None:
+    path = sys.argv[1]
+    top = int(sys.argv[2].split("=")[-1]) if len(sys.argv) > 2 else 30
+    rows, app_start, app_end = read_stages(path)
     total_run = sum(s["run_ms"] for s in rows) / 1e3
     # serial gap: app wall minus the union of [sub, comp] spans
     spans = sorted((s["sub"], s["comp"]) for s in rows)

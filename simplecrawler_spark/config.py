@@ -124,17 +124,12 @@ class CrawlConfig:
     fetch_concurrency: int = 8
     # checkpoint/resume
     checkpoint: bool = True
-    # R5 seed/done-seed state engine. "driver": seed + done-seed sets
-    # live as Python sets (fast below ~10^5 seeds, O(|seeds|) driver
-    # memory). "table": seeds live ONLY in the r0 frontier partition
-    # and done-seeds in a parquet sidecar — per-round done-skip and
-    # seed-completion become anti-joins/semi-joins and the driver
-    # keeps two counters, so a sitemap-scale (10^7-10^8) seed ingest
-    # never materialises a seed list in driver memory. "auto": driver
-    # below seed_driver_max seeds, table at/above (crawl_df — seeds
-    # arriving as a DataFrame — always uses table).
-    seed_state_mode: str = "auto"
-    seed_driver_max: int = 100_000
+    # R5 seed state has one engine: seeds live ONLY in the r0 frontier
+    # partition and completed seeds in the snapshot store's done_seeds
+    # table, so done-skip and seed completion are anti-/semi-joins and
+    # the driver keeps two counters. "table" is the only legal value;
+    # the field stays for existing callers and will be removed.
+    seed_state_mode: str = "table"
     # table maintenance cadence: every N rounds (after that round's
     # snapshot commits) compact the seen/results tables' committed
     # append dirs (SnapshotStore.compact — Iceberg rewriteDataFiles
@@ -162,6 +157,12 @@ class CrawlConfig:
     # well-formed HTML but also matches <a> markup inside comments and
     # <script> text (divergence documented + pinned in test_parse.py).
     link_extractor: str = "stdlib"
+
+    def __post_init__(self) -> None:
+        if self.seed_state_mode != "table":
+            raise ValueError(
+                f"seed_state_mode={self.seed_state_mode!r}: the only "
+                "seed-state engine is 'table'")
 
     def as_dict(self) -> dict:
         return asdict(self)

@@ -17,7 +17,8 @@ north rule mandates (BASELINE.json:6,14):
                     → canonicalize → same-authority     (P1/P2, F12, F16, F8, R3)
       new         = dedupe(round) → bloom + anti-join(seen)   (R1/R4)
       seen       += new;  frontier_{r+1} = new ∪ deferred     (R9)
-      snapshot    = commit (frontier, seen, results, metrics, bloom sidecar)
+      snapshot    = commit (frontier, seen, results, done_seeds, metrics,
+                    bloom sidecar)
     Terminate when frontier_{r+1} is empty (R7/R8 — equivalent to the
     reference's seen==done / queue-timeout exits, SURVEY.md §2.6.1).
 
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 
 from simplecrawler_spark.config import CrawlConfig
 from simplecrawler_spark.functions.canonical import (
-    canon_parts, canonicalize_df, url_hash,
+    canonicalize_df, url_hash,
 )
 from simplecrawler_spark.operators.parse import (
     attach_links_canonical, explode_page_links,
@@ -136,6 +137,7 @@ class FrontierCrawler:
             "frontier": schemas.FRONTIER, "seen": schemas.SEEN,
             "results": schemas.RESULTS, "metrics": schemas.METRICS,
             "crawl_log": schemas.CRAWL_LOG, "robots": schemas.ROBOTS,
+            "done_seeds": schemas.DONE_SEEDS,
         })
         self.bloom: BloomSeen | None = None
         self._bloom_path = os.path.join(self.root, "sidecar", "bloom.npz")
@@ -150,28 +152,15 @@ class FrontierCrawler:
         # R5 done-skip state. The ONLY urls that can be both done and
         # re-enter the frontier are seeds (a seed is never added to
         # seen — crawler.py:198-199, SURVEY.md §2.6.1 — so a page
-        # linking back to it re-enqueues it once). Two engines
-        # (cfg.seed_state_mode): "driver" tracks the handful of seed
-        # urls as Python sets — fastest while seeds are few; "table"
-        # (round-4 verdict item 4) keeps seeds ONLY in the r0 frontier
-        # partition and done-seeds in a parquet sidecar, so the driver
-        # holds two COUNTERS and a 10^7+-seed ingest never builds an
-        # O(|seeds|) Python set. Joins replace set lookups: done-skip
-        # is an anti-join (AQE broadcasts while small), completion is
-        # a semi-join appended to the sidecar.
-        self._seed_norms: set[str] = set()
-        self._done_seeds: set[str] = set()
-        # cached done-seed DF for the R5 anti-join: the set stops
-        # changing once every seed has fetched (usually after round 0),
-        # so rebuilding a driver-side DF per round is wasted serial time
-        self._done_seeds_df = None
-        self._done_seeds_df_size = -1
-        # table-mode seed state: counters + sidecar path only
-        self._seed_table_mode = (self.cfg.seed_state_mode == "table")
+        # linking back to it re-enqueues it once). Seeds live only in
+        # the r0 frontier partition and completed seeds in the
+        # done_seeds table, which each round's snapshot commits with
+        # its results; the driver holds two footer-derived COUNTERS,
+        # so a 10^7+-seed ingest never builds an O(|seeds|) Python
+        # set. Done-skip is an anti-join (AQE broadcasts while small),
+        # completion a semi-join appended to done_seeds.
         self._n_seeds = 0
-        self._n_done_seeds = 0
-        self._done_seed_dir = os.path.join(self.root, "sidecar",
-                                           "done_seeds")
+        self._n_seeds_done = 0
         # S4 robots state: authorities are tracked driver-side
         # ({authority: scheme}), so robots discovery never scans the
         # frontier. New authorities surface from the (persisted,
@@ -205,80 +194,55 @@ class FrontierCrawler:
 
     # ------------------------------------------------------------------ #
 
-    def _seed_frontier(self, seeds: list[str]) -> DataFrame:
-        rows, seen_norm = [], set()
-        for s in seeds:
-            norm, scheme, authority, host, *_ = canon_parts(s)
-            if norm in seen_norm:
-                continue  # seed set semantics
-            seen_norm.add(norm)
-            if authority:
-                self._auth_pending.setdefault(authority, scheme or "http")
-            rows.append((norm, s, None, authority, host, 0, 0.0, None, 0))
-        self._n_seeds = len(rows)
-        if not self._seed_table_mode:
-            self._seed_norms = seen_norm
-        df = self.spark.createDataFrame(rows, schemas.FRONTIER)
-        return df.withColumn("url_hash", url_hash(F.col("url_norm")))
-
     def _seed_frontier_from_df(self, seeds_df: DataFrame,
                                url_col: str = "url_raw") -> DataFrame:
-        """Frontier rows from a DataFrame of raw seed urls — the
-        10^7+-seed entry (sitemap dumps, prior-crawl exports): the
-        seed list NEVER exists driver-side. One Arrow canonicalisation
-        pass, min-struct dedupe on url_norm (set semantics, ties to
-        the lexicographically-least raw form — deterministic), then
-        the frontier projection. Authorities register through the same
-        bounded distinct-collect the streaming sweep uses."""
+        """Frontier rows from a DataFrame of raw seed urls: the seed
+        list NEVER exists driver-side. One Arrow canonicalisation
+        pass over the trimmed non-blank seeds, then min-struct dedupe
+        on url_norm (set semantics, ties to the lexicographically-least
+        raw form — deterministic)."""
         canon = canonicalize_df(
             seeds_df.where(F.length(F.trim(F.col(url_col))) > 0)
             .withColumn(url_col, F.trim(F.col(url_col))))
         batch = (canon.groupBy("url_norm")
                  .agg(F.min(F.struct(F.col(url_col).alias("url_raw"),
-                                     "authority", "host", "scheme"))
+                                     "authority", "host"))
                       .alias("s"))
                  .select("url_norm", "s.url_raw", "s.authority",
-                         "s.host", "s.scheme"))
-        # authorities register the same way the streaming sweep does —
-        # a distinct-collect at AUTHORITY grain (robots must be fetched
-        # once per authority regardless, so this is the floor, and it
-        # is RobotsState-bounded downstream, never O(|seeds|))
-        self._register_authorities({
-            row.authority: row.scheme or "http"
-            for row in (batch.select("authority", "scheme")
-                        .where(F.col("authority") != "")
-                        .distinct().collect())})
-        return batch.select(
-            "url_norm", "url_raw", url_hash(F.col("url_norm"))
-            .alias("url_hash"), "authority", "host",
+                         "s.host"))
+        return self._frontier_rows(batch, 0)
+
+    @staticmethod
+    def _frontier_rows(df: DataFrame, rnd: int) -> DataFrame:
+        """Depth-0 frontier rows for round ``rnd`` from (url_norm,
+        url_raw, authority, host) — seeds, streamed and requeued urls."""
+        return df.select(
+            "url_norm", "url_raw",
+            url_hash(F.col("url_norm")).alias("url_hash"),
+            "authority", "host",
             F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
             F.lit(None).cast("string").alias("discovered_from"),
-            F.lit(0).alias("round"))
+            F.lit(rnd).alias("round"))
 
-    # -- table-mode seed state (round-4 verdict item 4) ---------------- #
+    @staticmethod
+    def _seen_rows(df: DataFrame, rnd: int) -> DataFrame:
+        """Seen-table rows for frontier rows admitted in round ``rnd``."""
+        return df.select(
+            "url_hash", "url_norm",
+            host_bucket_expr(F.col("host")).alias("host_bucket"),
+            F.lit(rnd).alias("round_added"))
+
+    def _new_bloom(self) -> BloomSeen:
+        cfg = self.cfg
+        return BloomSeen(
+            expected_items=max(cfg.bloom_min_items,
+                               cfg.bloom_initial_capacity),
+            fpp=cfg.bloom_fpp)
 
     def _seed_table(self) -> DataFrame:
-        """The seed set AS A TABLE: round-0 frontier url_norms — the
-        single source of truth in table mode (nothing driver-side)."""
+        """The seed set AS A TABLE: round-0 frontier url_norms."""
         return (self.store.read("frontier", partition="r0")
                 .where(F.col("round") == 0).select("url_norm").distinct())
-
-    def _read_done_seeds(self) -> DataFrame:
-        return self.spark.read.schema("url_norm string").parquet(
-            self._done_seed_dir)
-
-    def _append_done_seeds(self, done: DataFrame) -> int:
-        """Append newly-completed seed norms to the sidecar; returns
-        how many landed (bounded work: at most |seeds| rows EVER cross
-        this path, most in round 0)."""
-        done = done.select("url_norm").persist()
-        n = done.count()
-        if n:
-            os.makedirs(self._done_seed_dir, exist_ok=True)
-            done.coalesce(1).write.mode("append").parquet(
-                self._done_seed_dir)
-        done.unpersist()
-        return n
 
     def _ensure_robots(self) -> None:
         """Fetch robots.txt for pending authorities. The reference
@@ -301,8 +265,7 @@ class FrontierCrawler:
         rows_df = fetch_robots_table(self.spark, missing, self.fetcher,
                                      self.cfg)
         path = self.store.append("robots", rows_df)
-        n_rows = sum(
-            f["rows"] for f in self.store._pending["robots"][-1]["lineage"])
+        n_rows = self.store.append_rows(path)
         # fold counters/bounded caches from the WRITTEN parquet — the
         # fetch never re-runs, and past the closure limit rule text
         # never crosses back to the driver
@@ -322,21 +285,20 @@ class FrontierCrawler:
             if auth and not self._rstate.known_exact(auth):
                 self._auth_pending.setdefault(auth, scheme or "http")
 
-    def _note_new_authorities(self, new: DataFrame) -> None:
-        """Collect authorities first seen in this round's `new` rows
-        (one small job on an already-persisted DF) — the no-bloom
-        fallback; with a bloom the crawl piggybacks this onto the
-        filter-build pass (add_df(collect_authorities=True)) and saves
-        the job. Skipped entirely when same_authority_only — no new
-        authority can appear."""
-        if self.cfg.same_authority_only:
-            return
-        rows = (new.select(
-                    "authority",
-                    F.split("url_norm", "://").getItem(0).alias("scheme"))
-                .where(F.col("authority") != "").distinct().collect())
-        self._register_authorities(
-            {row.authority: row.scheme for row in rows})
+    @staticmethod
+    def _authorities(df: DataFrame) -> dict[str, str]:
+        """{authority: scheme} of frontier rows — one distinct-collect
+        at AUTHORITY grain (robots are fetched once per authority, so
+        this is the floor; RobotsState bounds it downstream). With a
+        bloom, callers piggyback this onto the filter-build pass
+        (add_df(collect_authorities=True)) instead."""
+        return {row.authority: row.scheme or "http"
+                for row in (df.select(
+                                "authority",
+                                F.split("url_norm", "://").getItem(0)
+                                .alias("scheme"))
+                            .where(F.col("authority") != "")
+                            .distinct().collect())}
 
     # ------------------------------------------------------------------ #
 
@@ -346,39 +308,24 @@ class FrontierCrawler:
         strings, crawler.py:244-251)."""
         if isinstance(seeds, str):
             seeds = [seeds]
-        cfg = self.cfg
-        if (cfg.seed_state_mode == "auto"
-                and len(seeds) >= cfg.seed_driver_max):
-            self._seed_table_mode = True
-        if cfg.bloom_enabled:
-            self.bloom = BloomSeen(expected_items=max(cfg.bloom_min_items, cfg.bloom_initial_capacity),
-                                   fpp=cfg.bloom_fpp)
-        self.store.append("frontier", self._seed_frontier(seeds),
-                          partition="r0")
-        return self._run_rounds(start_round=0)
+        return self.crawl_df(self.spark.createDataFrame(
+            [(s,) for s in seeds], "url_raw string"))
 
     def crawl_df(self, seeds_df: DataFrame,
                  url_col: str = "url_raw") -> DataFrame:
         """Run the BFS fixpoint from a DataFrame of raw seed urls —
         the sitemap-scale entry (round-4 verdict item 4): seeds are
-        canonicalised, deduped and staged entirely as DataFrames, the
-        R5 seed state runs in table mode (counters + sidecar, no
-        O(|seeds|) Python set), and the driver never sees a url.
-        Identical final state to crawl() on the same seed set."""
-        cfg = self.cfg
-        if cfg.seed_state_mode != "driver":
-            self._seed_table_mode = True
-        if cfg.bloom_enabled:
-            self.bloom = BloomSeen(expected_items=max(cfg.bloom_min_items, cfg.bloom_initial_capacity),
-                                   fpp=cfg.bloom_fpp)
-        fr = self._seed_frontier_from_df(seeds_df, url_col=url_col)
-        self.store.append("frontier", fr, partition="r0")
-        if self._seed_table_mode:
-            self._n_seeds = self._seed_table().count()
-        else:
-            self._seed_norms = {r.url_norm for r in
-                                self._seed_table().collect()}
-            self._n_seeds = len(self._seed_norms)
+        canonicalised, deduped and staged entirely as DataFrames, and
+        the driver never sees a url — only the seed count (footers)
+        and the seeds' distinct authorities (for robots)."""
+        if self.cfg.bloom_enabled:
+            self.bloom = self._new_bloom()
+        path = self.store.append(
+            "frontier", self._seed_frontier_from_df(seeds_df, url_col),
+            partition="r0")
+        self._n_seeds = self.store.append_rows(path)
+        self._register_authorities(
+            self._authorities(self.spark.read.parquet(path)))
         return self._run_rounds(start_round=0)
 
     def _run_rounds(self, start_round: int) -> DataFrame:
@@ -394,6 +341,11 @@ class FrontierCrawler:
                 # the round's OWN snapshot commits them (a driver
                 # listdir when nothing is staged — free)
                 swept = self._sweep_stream_pending(r)
+                if r == 0:
+                    # round-0 stream rows join the seed table (every
+                    # round-0 frontier row), so they count as seeds —
+                    # the same r0 footer count resume reads
+                    self._n_seeds += swept
                 if row_count == 0 and swept == 0:
                     break  # R7/R8 fixpoint: nothing new, nothing streamed
                 # partition-pruned scan: only round r's data dirs are
@@ -438,9 +390,9 @@ class FrontierCrawler:
         _SUCCESS marker — Spark writes it last, so a batch the sink is
         writing right now is skipped and picked up next round) into
         round ``r``'s frontier partition, exactly like the between-
-        crawls direct path: cross-batch dedupe, seen anti-join, seen +
-        bloom insertion, authority registration. Returns the exact
-        post-anti-join row count (parquet footers — no count() job).
+        crawls direct path: cross-batch dedupe, then _admit. Returns
+        the exact post-anti-join row count (parquet footers — no
+        count() job).
         Appends land in store._pending from THIS (the loop) thread
         only; the streaming thread never touches the store mid-crawl."""
         if not os.path.isdir(self._stream_pending_dir):
@@ -460,36 +412,32 @@ class FrontierCrawler:
                       .alias("s"))
                  .select("url_norm", "s.url_raw", "s.authority",
                          "s.host"))
-        rows = batch.select(
-            "url_norm", "url_raw",
-            url_hash(F.col("url_norm")).alias("url_hash"),
-            "authority", "host",
-            F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
-            F.lit(None).cast("string").alias("discovered_from"),
-            F.lit(r).alias("round"),
-        )
+        n_new = self._admit(self._frontier_rows(batch, r), r)
+        self._stream_consumed.extend(dirs)
+        return n_new
+
+    def _admit(self, rows: DataFrame, rnd: int) -> int:
+        """Admit depth-0 frontier rows into round ``rnd`` the way a
+        round admits its discovered links (crawler.py:160-163 —
+        enqueue ⇒ enter seen): anti-join seen (bloom-prefiltered),
+        append to the frontier and seen tables, add to the bloom and
+        register the new authorities for robots. Returns the admitted
+        row count (parquet footers)."""
         new = anti_join_seen(rows, self.store.read("seen"),
                              self.bloom).persist()
-        self.store.append("frontier", new, partition=f"r{r}")
-        self.store.append("seen", new.select(
-            "url_hash", "url_norm",
-            host_bucket_expr(F.col("host")).alias("host_bucket"),
-            F.lit(r).alias("round_added")), partition=f"r{r}")
+        n_new = self.store.append_rows(
+            self.store.append("frontier", new, partition=f"r{rnd}"))
+        self.store.append("seen", self._seen_rows(new, rnd),
+                          partition=f"r{rnd}")
         if self.bloom is not None:
-            self.bloom.add_df(new)
+            auths = self.bloom.add_df(new, row_count=n_new,
+                                      collect_authorities=True)
             self._sync_bloom_membership()
-        self._register_authorities({
-            row.authority: row.scheme or "http"
-            for row in (new.select(
-                            "authority",
-                            F.split("url_norm", "://").getItem(0)
-                            .alias("scheme"))
-                        .where(F.col("authority") != "")
-                        .distinct().collect())})
+        else:
+            auths = self._authorities(new)
+        self._register_authorities(auths)
         new.unpersist()
-        self._stream_consumed.extend(dirs)
-        pend = self.store._pending.get("frontier", [])
-        return sum(f["rows"] for f in pend[-1]["lineage"])
+        return n_new
 
     def _drop_consumed_stream_dirs(self) -> None:
         """Delete staged stream batches the just-committed round
@@ -534,31 +482,14 @@ class FrontierCrawler:
 
         # R5: skip anything already done. Only re-discovered seeds can
         # be done-but-in-frontier (see __init__ note), so the done-skip
-        # never scans the results table: a literal filter for a few
-        # seeds, a broadcast anti-join for many (a large isin-literal
-        # list bloats every job's plan and is O(|seeds|) per row).
-        # Table mode: anti-join against the done-seed sidecar — AQE
-        # broadcasts while it is small; at sitemap scale it is a hash
-        # join on the key the frontier already carries.
-        if self._seed_table_mode:
-            eligible = (frontier_r if not self._n_done_seeds
-                        else frontier_r.join(self._read_done_seeds(),
-                                             "url_norm", "left_anti"))
-        elif not self._done_seeds:
-            eligible = frontier_r
-        elif len(self._done_seeds) <= 64:
-            eligible = frontier_r.filter(
-                ~F.col("url_norm").isin(sorted(self._done_seeds)))
-        else:
-            if self._done_seeds_df_size != len(self._done_seeds):
-                if self._done_seeds_df is not None:
-                    self._done_seeds_df.unpersist()
-                self._done_seeds_df = self.spark.createDataFrame(
-                    [(s,) for s in sorted(self._done_seeds)],
-                    "url_norm string").persist()
-                self._done_seeds_df_size = len(self._done_seeds)
-            eligible = frontier_r.join(F.broadcast(self._done_seeds_df),
-                                       "url_norm", "left_anti")
+        # never scans the results table: it anti-joins the done_seeds
+        # table — AQE broadcasts it while it is small; at sitemap scale
+        # it is a hash join on the key the frontier already carries.
+        eligible = frontier_r
+        if self._n_seeds_done:
+            eligible = eligible.join(self.store.read("done_seeds"),
+                                     "url_norm", "left_anti")
+        seeds_pending = self._n_seeds_done < self._n_seeds
 
         # S4/G4: robots — pending authorities were noted driver-side
         # (seeds at crawl(); discoveries ride on the prior round's
@@ -706,35 +637,20 @@ class FrontierCrawler:
 
         # R5 upkeep: record which seeds completed this round (a seed
         # that errored stays pending and is refetchable if
-        # re-discovered — exact reference semantics, crawler.py:168-174)
-        if self._seed_table_mode:
-            # completion via joins, counters only: new done = this
-            # round's done fetches ∩ seed table ∖ already-done. At
-            # most |seeds| rows EVER cross this append, nearly all in
-            # round 0; once the counters agree the check is free.
-            if self._n_done_seeds < self._n_seeds:
-                new_done = (fetched.filter(done_cond)
-                            .join(self._seed_table(), "url_norm",
-                                  "left_semi"))
-                if self._n_done_seeds:
-                    new_done = new_done.join(self._read_done_seeds(),
-                                             "url_norm", "left_anti")
-                self._n_done_seeds += self._append_done_seeds(new_done)
-        else:
-            pending_seeds = self._seed_norms - self._done_seeds
-            if pending_seeds and len(pending_seeds) <= 64:
-                hit = (fetched.filter(
-                        F.col("url_norm").isin(sorted(pending_seeds)))
-                       .filter(done_cond).select("url_norm").collect())
-                self._done_seeds.update(row.url_norm for row in hit)
-            elif pending_seeds:
-                pend_df = self.spark.createDataFrame(
-                    [(s,) for s in sorted(pending_seeds)],
-                    "url_norm string")
-                hit = (fetched.join(F.broadcast(pend_df), "url_norm",
-                                    "left_semi")
-                       .filter(done_cond).select("url_norm").collect())
-                self._done_seeds.update(row.url_norm for row in hit)
+        # re-discovered — exact reference semantics, crawler.py:168-174).
+        # New done = this round's done fetches ∩ seed table ∖
+        # already-done, appended to done_seeds so this round's snapshot
+        # commits it with the results. At most |seeds| rows EVER cross
+        # this append, nearly all in round 0; once the counters agree
+        # the check is free.
+        if seeds_pending:
+            new_done = (fetched.filter(done_cond).select("url_norm")
+                        .join(self._seed_table(), "url_norm", "left_semi"))
+            if self._n_seeds_done:
+                new_done = new_done.join(self.store.read("done_seeds"),
+                                         "url_norm", "left_anti")
+            self._n_seeds_done += self.store.append_rows(
+                self.store.append("done_seeds", new_done.distinct()))
         _mark("seed_check")
 
         # P1/P2/P3 + F12/F16/F8 + R3: the parse already ran inside the
@@ -835,10 +751,16 @@ class FrontierCrawler:
             "depth", priority.alias("priority"), "discovered_from",
             F.lit(r + 1).alias("round"),
         )
+        if budgeted and seeds_pending:
+            # a pending seed is not in seen, so one the budget deferred
+            # and a page rediscovered this round would enter the next
+            # frontier twice and be fetched twice: keep only the
+            # deferred depth-0 copy (a deferred url already in seen
+            # never reaches next_new, so nothing else drops)
+            next_new = next_new.join(deferred.select("url_norm"),
+                                     "url_norm", "left_anti")
         new_dir = self.store.append("frontier", next_new, f"r{r + 1}")
-        new_count = sum(
-            f["rows"]
-            for f in self.store._pending["frontier"][-1]["lineage"])
+        new_count = self.store.append_rows(new_dir)
         newf = (self.spark.read.parquet(new_dir) if new_count
                 else None)
         _mark("frontier_write")
@@ -848,10 +770,8 @@ class FrontierCrawler:
         # input) updates in the main thread
         if newf is not None:
             fut_seen = pool.submit(
-                self.store.append, "seen", newf.select(
-                    "url_hash", "url_norm",
-                    host_bucket_expr(F.col("host")).alias("host_bucket"),
-                    F.lit(r).alias("round_added")), f"r{r}")
+                self.store.append, "seen", self._seen_rows(newf, r),
+                f"r{r}")
             futures.append(fut_seen)
         else:
             fut_seen = None
@@ -861,14 +781,11 @@ class FrontierCrawler:
         # construction — skip the job entirely
         defer_count = 0
         if budgeted:
-            self.store.append(
+            defer_count = self.store.append_rows(self.store.append(
                 "frontier",
                 deferred.withColumn("round", F.lit(r + 1)).select(
                     *next_new.columns),
-                partition=f"r{r + 1}")
-            defer_count = sum(
-                f["rows"]
-                for f in self.store._pending["frontier"][-1]["lineage"])
+                partition=f"r{r + 1}"))
 
         if self.bloom is not None:
             if newf is not None:
@@ -894,22 +811,20 @@ class FrontierCrawler:
             self.bloom.save(self._bloom_path)
             self._sync_bloom_membership()
             _mark("bloom_save")
-        elif newf is not None:
-            self._note_new_authorities(newf)
+        elif newf is not None and not cfg.same_authority_only:
+            # no-bloom fallback (no new authority can appear when
+            # same_authority_only)
+            self._register_authorities(self._authorities(newf))
         if fut_seen is not None:
             fut_seen.result()
         fut_results.result()
         _mark("write_join")
 
         # row counts from parquet footers (no extra jobs)
-        pend = self.store._pending
-        counts = {t: sum(f["rows"] for a in pend.get(t, [])
-                         for f in a["lineage"])
-                  for t in ("results", "seen", "frontier")}
         metrics = {
             "round": r,
-            "done_new": counts["results"],
-            "new_urls": counts["seen"],
+            "done_new": self.store.rows("results", pending=True),
+            "new_urls": self.store.rows("seen", pending=True),
             "frontier_next": new_count + defer_count,
             "wall_secs": time.monotonic() - t0,
             "phases": phases,
@@ -991,7 +906,7 @@ class FrontierCrawler:
             self._pr_df = (
                 self.spark.read.parquet(path)
                 .select(F.col("v").cast("string").alias("_pr_v"),
-                        F.col(col).cast("long").alias("_pr_rank")))
+                        F.col(col).cast("double").alias("_pr_rank")))
         return self._pr_df
 
     def link_edges(self) -> DataFrame:
@@ -1078,9 +993,7 @@ class FrontierCrawler:
         if getattr(self, "cuckoo", None) is not None:
             self.cuckoo.delete_df(expired)
         if self.bloom is not None:
-            self.bloom = BloomSeen(
-                expected_items=max(self.cfg.bloom_min_items, self.cfg.bloom_initial_capacity),
-                fpp=self.cfg.bloom_fpp)
+            self.bloom = self._new_bloom()
             self.bloom.add_df(self.store.read("seen"))
             self.bloom.save(self._bloom_path)
             self._sync_bloom_membership()
@@ -1088,8 +1001,8 @@ class FrontierCrawler:
 
     def requeue(self, urls: DataFrame) -> int:
         """Re-enqueue previously-expired urls for the next round (their
-        next fetch re-adds them to seen/results). Rows need the
-        frontier columns url_norm/url_hash/authority/host; depth and
+        next fetch re-adds them to seen/results). Rows need url_norm
+        (authority/host are re-derived when absent); depth and
         provenance restart at 0/None."""
         next_round = (self.store.latest_round() or 0) + 1
         if "authority" in urls.columns:
@@ -1103,17 +1016,11 @@ class FrontierCrawler:
                 F.col("url_norm"), r"^[^:/?#]+://([^/?#]*)", 1)
         host = (F.col("host") if "host" in urls.columns
                 else F.substring_index(authority, "@", -1))
-        rows = urls.select(
+        rows = self._frontier_rows(urls.select(
             "url_norm", F.lit(None).cast("string").alias("url_raw"),
-            "url_hash",
-            authority.alias("authority"), host.alias("host"),
-            F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
-            F.lit(None).cast("string").alias("discovered_from"),
-            F.lit(next_round).alias("round"),
-        )
-        self.store.append("frontier", rows, partition=f"r{next_round}")
-        pend = self.store._pending.get("frontier", [])
-        return sum(f["rows"] for f in pend[-1]["lineage"])
+            authority.alias("authority"), host.alias("host")), next_round)
+        return self.store.append_rows(self.store.append(
+            "frontier", rows, partition=f"r{next_round}"))
 
     def ingest_stream(self, source_dir: str, checkpoint_dir: str,
                       available_now: bool = True):
@@ -1172,35 +1079,7 @@ class FrontierCrawler:
                  .write.mode("errorifexists").parquet(dest))
                 return
             rnd = (self.store.latest_round() or 0) + 1
-            rows = batch_df.select(
-                "url_norm", "url_raw",
-                url_hash(F.col("url_norm")).alias("url_hash"),
-                "authority", "host",
-                F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
-                F.lit(None).cast("string").alias("discovered_from"),
-                F.lit(rnd).alias("round"),
-            )
-            new = anti_join_seen(rows, self.store.read("seen"),
-                                 self.bloom).persist()
-            self.store.append("frontier", new, partition=f"r{rnd}")
-            self.store.append("seen", new.select(
-                "url_hash", "url_norm",
-                host_bucket_expr(F.col("host")).alias("host_bucket"),
-                F.lit(rnd).alias("round_added")), partition=f"r{rnd}")
-            if self.bloom is not None:
-                self.bloom.add_df(new)
-                self._sync_bloom_membership()
-            self._register_authorities({
-                row.authority: row.scheme or "http"
-                for row in (new.select(
-                                "authority",
-                                F.split("url_norm", "://").getItem(0)
-                                .alias("scheme"))
-                            .where(F.col("authority") != "")
-                            .distinct().collect())})
-            pend = self.store._pending.get("frontier", [])
-            n_new = (sum(f["rows"] for f in pend[-1]["lineage"])
-                     if pend else 0)
+            n_new = self._admit(self._frontier_rows(batch_df, rnd), rnd)
             # durable per-batch commit: the snapshot round stays at the
             # last crawl round (rnd - 1), so later batches land in the
             # same next-round partition and continue_crawl resumes at it
@@ -1208,7 +1087,6 @@ class FrontierCrawler:
                 "stream_batch": int(batch_id),
                 "stream_new_urls": n_new,
             })
-            new.unpersist()
 
         writer = (canonical_seed_stream(self.spark, source_dir).writeStream
                   .foreachBatch(sink)
@@ -1246,37 +1124,18 @@ class FrontierCrawler:
         if last is None:
             raise RuntimeError("nothing to resume — no committed snapshot")
         cfg = self.cfg
-        # recover the R5 seed state from the checkpoint (two tiny jobs,
-        # once per resume): seeds = round-0 frontier; done = those
-        # already present in results
-        seed_df = self._seed_table()
-        n_seed_rows = (None if self._seed_table_mode
-                       else seed_df.count())
-        if self._seed_table_mode or (
-                cfg.seed_state_mode == "auto"
-                and n_seed_rows >= cfg.seed_driver_max):
-            # table-mode resume: counters from two joins, the
-            # done-seed sidecar rebuilt from results ∩ seeds — no
-            # O(|seeds|) collect anywhere
-            self._seed_table_mode = True
-            self._n_seeds = (n_seed_rows if n_seed_rows is not None
-                             else seed_df.count())
-            shutil.rmtree(self._done_seed_dir, ignore_errors=True)
-            done = (self.store.read("results")
-                    .join(seed_df, "url_norm", "left_semi")
-                    .select("url_norm").distinct())
-            self._n_done_seeds = self._append_done_seeds(done)
-        else:
-            self._seed_norms = {row.url_norm
-                                for row in seed_df.collect()}
-            if self._seed_norms:
-                sdf = self.spark.createDataFrame(
-                    [(s,) for s in sorted(self._seed_norms)],
-                    "url_norm string")
-                done = (self.store.read("results")
-                        .join(F.broadcast(sdf), "url_norm", "left_semi")
-                        .select("url_norm").distinct().collect())
-                self._done_seeds = {row.url_norm for row in done}
+        # the R5 seed state is committed table data: both counters
+        # come from parquet footers (seeds: the r0 frontier partition)
+        self._n_seeds = self.store.rows("frontier", partition="r0")
+        if self._n_seeds and "done_seeds" not in \
+                self.store.last_snapshot["tables"]:
+            # round 0 always commits a done_seeds append, so seeds
+            # without one mean a checkpoint from a build that kept
+            # completed seeds elsewhere: resuming would refetch them
+            raise RuntimeError(
+                f"checkpoint at {self.root} has seeds but no done_seeds "
+                "table (written by an older build); restart the crawl")
+        self._n_seeds_done = self.store.rows("done_seeds")
         # rebuild the BOUNDED robots view from the persisted table —
         # one aggregate for the counters, caches only within their
         # limits, authority bloom from the sidecar (else a distributed
@@ -1292,16 +1151,10 @@ class FrontierCrawler:
         resume_frontier = (self.store.read("frontier",
                                            partition=f"r{last + 1}")
                            .where(F.col("round") == last + 1))
-        for row in (resume_frontier.select(
-                        "authority",
-                        F.split("url_norm", "://").getItem(0).alias("scheme"))
-                    .where(F.col("authority") != "").distinct().collect()):
-            self._auth_pending.setdefault(row.authority,
-                                          row.scheme or "http")
+        self._register_authorities(self._authorities(resume_frontier))
         if cfg.bloom_enabled and self.bloom is None:
             # sidecar missing → rebuild the filter from the seen table
-            self.bloom = BloomSeen(expected_items=max(cfg.bloom_min_items, cfg.bloom_initial_capacity),
-                                   fpp=cfg.bloom_fpp)
+            self.bloom = self._new_bloom()
             self.bloom.add_df(self.store.read("seen"))
         self._sync_bloom_membership()
         return self._run_rounds(start_round=last + 1)

@@ -84,6 +84,12 @@ CRAWL_LOG = T.StructType([
     T.StructField("detail", T.StringType(), True),
 ])
 
+# seeds whose fetch completed (R5 done-skip): the only urls that can be
+# both done and back in the frontier
+DONE_SEEDS = T.StructType([
+    T.StructField("url_norm", T.StringType(), True),
+])
+
 METRICS = T.StructType([
     T.StructField("round", T.IntegerType(), True),
     T.StructField("metric", T.StringType(), True),

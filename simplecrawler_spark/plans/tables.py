@@ -218,6 +218,32 @@ class SnapshotStore:
     def is_empty(self, table: str) -> bool:
         return not self._paths(table) or self.read(table).isEmpty()
 
+    # -- row counts (parquet footers — never a Spark job) -------------------
+
+    def append_rows(self, path: str) -> int:
+        """Exact row count of the pending append at ``path`` — the
+        footer lineage append() recorded when it wrote the dir."""
+        with self._pending_lock:
+            for appends in self._pending.values():
+                for a in appends:
+                    if a["path"] == path:
+                        return sum(f["rows"] for f in a["lineage"])
+        raise KeyError(f"no pending append at {path!r}")
+
+    def rows(self, table: str, partition: str | None = None,
+             pending: bool = False) -> int:
+        """Exact row count of ``table`` (or of one partition) as read()
+        would see it; ``pending=True`` counts only the appends not yet
+        committed. Committed dirs are counted from their footers."""
+        with self._pending_lock:
+            recorded = {a["path"]: a["lineage"]
+                        for a in self._pending.get(table, [])}
+        paths = self._paths(table, partition)
+        if pending:
+            paths = [p for p in paths if p in recorded]
+        return sum(f["rows"] for p in paths
+                   for f in recorded.get(p) or _parquet_lineage(p))
+
     # -- maintenance (Iceberg expireSnapshots / removeOrphanFiles /
     #    rewriteDataFiles) ---------------------------------------------------
 

@@ -760,30 +760,96 @@ def test_fair_round_budget_no_host_starvation(spark):
 
 
 # --------------------------------------------------------------------------
-# R5 seed state engines (round-4 verdict item 4: seeds off the driver)
+# R5 seed state: seeds in the r0 frontier, completed seeds in the
+# snapshot store's done_seeds table (round-4 verdict item 4: seeds off
+# the driver)
 # --------------------------------------------------------------------------
 
-def test_table_seed_mode_parity(spark, tmp_path):
-    """seed_state_mode='table' (counters + done-seed sidecar, joins
-    instead of Python sets) reaches the identical visited set and
-    depths as the driver-set engine on the reference graph."""
-    rows = crawler_server_rows(BASE)
-    a = crawl(spark, tmp_path / "drv", rows, BASE)
-    b = crawl(spark, tmp_path / "tbl", rows, BASE,
-              CrawlConfig(seed_state_mode="table"))
-    assert b._seed_table_mode
-    assert b._seed_norms == set() and b._done_seeds == set()
-    assert b._n_seeds == 1 and b._n_done_seeds == 1
-    assert a.result_urls() == b.result_urls()
-    da = {r.url_norm: r.depth for r in a.results().collect()}
-    db = {r.url_norm: r.depth for r in b.results().collect()}
-    assert da == db
+def _done_seed_urls(crawler) -> list[str]:
+    return sorted(r.url_norm for r in
+                  crawler.store.read("done_seeds").collect())
+
+
+def _seed_loop_rows(n=5):
+    """``n`` seeds on one host, each page linking to every seed."""
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links,
+    )
+
+    seeds = [f"http://loop.test/p{i}" for i in range(n)]
+    return seeds, [_row(s, body=make_html_from_links(seeds))
+                   for s in seeds]
+
+
+def test_deferred_rediscovered_seed_fetched_once(spark, tmp_path):
+    """A seed the per-host budget defers and a page rediscovers in the
+    same round sits twice in the next frontier (a seed is not in
+    seen until rediscovered); it must still be fetched once, at the
+    seed's depth 0, and counted once as a done seed."""
+    seeds, rows = _seed_loop_rows()
+    cfg = CrawlConfig(max_per_host_per_round=3, obey_robots=False)
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=str(tmp_path / "crawl"))
+    c.crawl(seeds)
+    got = sorted((r.url_norm, r.depth) for r in c.results().collect())
+    assert got == [(s, 0) for s in seeds]
+    assert _done_seed_urls(c) == seeds
+
+
+def test_round0_stream_rows_keep_seed_check_running(spark, tmp_path):
+    """A stream batch swept in at round 0 joins the seed table; the
+    seed counter must count it too, or its completion stops the seed
+    check while a budget-deferred seed is still pending."""
+    from simplecrawler_spark.sources.fixtures import _row
+
+    seeds = ["http://a.test/s0", "http://a.test/s1"]
+    late = "http://b.test/late"
+    rows = [_row(u, body="") for u in seeds + [late]]
+    cfg = CrawlConfig(max_per_host_per_round=1, obey_robots=False,
+                      same_authority_only=False)
+    root = str(tmp_path / "crawl")
+    spark.createDataFrame(
+        [(late, late, "b.test", "b.test")],
+        "url_norm string, url_raw string, authority string, host string"
+    ).write.parquet(os.path.join(root, "stream_pending", "batch-0"))
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=root)
+    c.crawl(seeds)
+    assert sorted(r.url_norm for r in c.results().collect()) \
+        == sorted(seeds + [late])
+    assert _done_seed_urls(c) == sorted(seeds + [late])
+
+
+def test_resume_refuses_checkpoint_without_done_seeds(spark, tmp_path):
+    """A checkpoint whose seeds have no committed done_seeds table (an
+    older build kept completed seeds elsewhere) must not resume with
+    every seed silently pending again."""
+    import glob
+    import json
+
+    seeds, rows = _seed_loop_rows()
+    cfg = CrawlConfig(max_per_host_per_round=3, obey_robots=False,
+                      max_rounds=1)
+    root = str(tmp_path / "crawl")
+    FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                    cfg, root=root).crawl(seeds)
+    for path in glob.glob(os.path.join(root, "**", "snap-*.json"),
+                          recursive=True):
+        with open(path) as fh:
+            snap = json.load(fh)
+        snap["tables"].pop("done_seeds")
+        with open(path, "w") as fh:
+            json.dump(snap, fh)
+    resumed = FrontierCrawler.resume(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
+    with pytest.raises(RuntimeError, match="no done_seeds table"):
+        resumed.continue_crawl()
 
 
 def test_crawl_df_seed_entry(spark, tmp_path):
     """crawl_df: seeds arrive as a DataFrame (the sitemap-scale
     entry) — blank/duplicate seeds drop via the relational dedupe,
-    table mode is forced, and the final state matches crawl(list)."""
+    and the final state matches crawl(list)."""
     rows = crawler_server_rows(BASE)
     cfg = CrawlConfig()
     fetcher = TableFetcher(site_graph_df(spark, rows), cfg)
@@ -792,39 +858,64 @@ def test_crawl_df_seed_entry(spark, tmp_path):
     seeds = spark.createDataFrame(
         [(BASE,), (BASE,), ("   ",), (BASE + "/",)], "url_raw string")
     c.crawl_df(seeds)
-    assert c._seed_table_mode and c._seed_norms == set()
-    assert c._n_seeds == 1 and c._n_done_seeds == 1
+    assert c.store.read("frontier", partition="r0").count() == 1
+    assert _done_seed_urls(c) == [BASE + "/"]
     ref = crawl(spark, tmp_path / "lst", rows, BASE)
     assert c.result_urls() == ref.result_urls()
 
 
-def test_table_seed_mode_resume(spark, tmp_path):
-    """Resume in table mode: the done-seed sidecar rebuilds from
-    results ∩ r0-frontier with counters only — final state identical
-    to an uninterrupted table-mode run."""
-    rows = crawler_server_rows(BASE)
-    cfg = CrawlConfig(max_per_host_per_round=2, max_rounds=2,
-                      seed_state_mode="table")
-    crawler = crawl(spark, tmp_path / "killed", rows, BASE, cfg)
+def test_seed_state_kill_and_resume(spark, tmp_path):
+    """Kill the crawl while round 1 commits: its done-seed appends die
+    with its results, the resumed crawler reads the done_seeds table
+    the round-0 snapshot committed (exactly the seeds in the committed
+    results), and the final state equals an uninterrupted crawl."""
+    seeds, rows = _seed_loop_rows()
+    cfg = CrawlConfig(max_per_host_per_round=3, obey_robots=False)
+    root = str(tmp_path / "killed" / "crawl")
+    killed = FrontierCrawler(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg, root=root)
+    commit = killed.store.commit_snapshot
 
-    cfg2 = CrawlConfig(max_per_host_per_round=2, max_rounds=50,
-                       seed_state_mode="table")
-    fetcher = TableFetcher(site_graph_df(spark, rows), cfg2)
+    def crash_at_round_1(round_no, metrics=None):
+        if round_no == 1:
+            raise RuntimeError("killed")
+        return commit(round_no, metrics)
+
+    killed.store.commit_snapshot = crash_at_round_1
+    with pytest.raises(RuntimeError, match="killed"):
+        killed.crawl(seeds)
+
     resumed = FrontierCrawler.resume(
-        spark, fetcher, str(tmp_path / "killed" / "crawl"), cfg2)
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
+    committed = sorted(r.url_norm for r in resumed.results().collect())
+    assert len(committed) == 3  # the budget's round-0 share
+    assert _done_seed_urls(resumed) == committed
     resumed.continue_crawl()
-    assert resumed._seed_norms == set() and resumed._done_seeds == set()
-    assert resumed._n_seeds == 1 and resumed._n_done_seeds == 1
 
-    full = crawl(spark, tmp_path / "full", rows, BASE,
-                 CrawlConfig(max_per_host_per_round=2, max_rounds=50))
-    assert resumed.result_urls() == full.result_urls()
+    full = FrontierCrawler(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg,
+        root=str(tmp_path / "full" / "crawl"))
+    full.crawl(seeds)
+
+    def state(c):
+        return (sorted((r.url_norm, r.depth) for r in c.results().collect()),
+                _done_seed_urls(c),
+                sorted(r.url_norm for r in c.store.read("seen").collect()))
+
+    assert state(resumed) == state(full)
+    assert _done_seed_urls(resumed) == seeds
+
+
+def test_seed_state_mode_single_valued():
+    assert CrawlConfig().seed_state_mode == "table"
+    with pytest.raises(ValueError, match="seed_state_mode"):
+        CrawlConfig(seed_state_mode="driver")
 
 
 def test_million_seed_crawl_no_driver_seed_state(spark, tmp_path):
-    """Forced 10^6-seed crawl through crawl_df: no O(|seeds|) Python
-    set ever exists on the driver (both sets stay empty, only the two
-    counters move) and every seed lands in results exactly once."""
+    """Forced 10^6-seed crawl through crawl_df: the seed list never
+    reaches the driver (only footer counts do) and every seed lands
+    in results and in done_seeds exactly once."""
     n = 1_000_000
     graph = spark.range(n).select(
         F.concat(F.lit("http://big.test/p"), F.col("id")).alias("url"),
@@ -836,7 +927,7 @@ def test_million_seed_crawl_no_driver_seed_state(spark, tmp_path):
         F.lit(None).cast("string").alias("redirect_location"),
         F.lit(None).cast("string").alias("ua_required"),
         F.lit(None).cast("string").alias("image_id"))
-    cfg = CrawlConfig(obey_robots=False, seed_state_mode="auto")
+    cfg = CrawlConfig(obey_robots=False)
     fetcher = TableFetcher(graph, cfg)
     c = FrontierCrawler(spark, fetcher, cfg,
                         root=str(tmp_path / "mega" / "crawl"))
@@ -844,10 +935,42 @@ def test_million_seed_crawl_no_driver_seed_state(spark, tmp_path):
         F.concat(F.lit("http://big.test/p"), F.col("id"))
         .alias("url_raw"))
     c.crawl_df(seeds)
-    assert c._seed_table_mode
-    assert c._seed_norms == set() and c._done_seeds == set()
-    assert c._n_seeds == n and c._n_done_seeds == n
+    assert c.store.rows("done_seeds") == n
+    assert c.store.read("done_seeds").distinct().count() == n
     assert c.results().count() == n
+
+
+def test_fractional_rank_scores_order_scheduling(spark, tmp_path):
+    """priority_source='rank' with scores in [0, 1] (an external
+    quality score): the higher-scored page fetches first under a
+    1/host budget — even against the url_hash tie-break, which is all
+    that is left if the scores truncate to 0."""
+    from simplecrawler_spark.functions.canonical import url_hash
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links,
+    )
+
+    seed = "http://q.test/"
+    pages = ["http://q.test/a", "http://q.test/b"]
+    rows = [_row(seed, body=make_html_from_links(pages))]
+    rows += [_row(p, body="") for p in pages]
+    # give the higher score to the page the tie-break schedules last
+    by_hash = [r.u for r in spark.createDataFrame(
+        [(p,) for p in pages], "u string")
+        .select("u", url_hash(F.col("u")).alias("h"))
+        .orderBy("h").collect()]
+    rank_path = str(tmp_path / "quality.parquet")
+    spark.createDataFrame([(by_hash[0], 0.25), (by_hash[1], 0.75)],
+                          "v string, quality double"
+                          ).write.parquet(rank_path)
+    cfg = CrawlConfig(max_per_host_per_round=1, priority_source="rank",
+                      rank_table_path=rank_path, rank_column="quality")
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=str(tmp_path / "crawl"))
+    c.crawl(seed)
+    rounds = {r.url_norm: r.round
+              for r in c.results().select("url_norm", "round").collect()}
+    assert rounds[by_hash[1]] < rounds[by_hash[0]]
 
 
 def test_hits_authority_priority_schedules_ranked_pages_first(

@@ -52,6 +52,30 @@ def test_lineage_rowcounts(spark, tmp_path):
     assert os.path.basename(manifest) == "snap-000001.json"
 
 
+def test_row_counts_from_footers(spark, tmp_path):
+    """append_rows/rows read parquet footers: per append, per
+    partition, pending-only, and committed dirs after a reopen."""
+    st = _store(spark, tmp_path)
+
+    def seen(n, r):
+        return spark.createDataFrame(
+            [(i, f"http://h/{r}/{i}", 0, r) for i in range(n)], schemas.SEEN)
+
+    p0 = st.append("seen", seen(3, 0), partition="r0")
+    assert st.append_rows(p0) == 3
+    st.commit_snapshot(0)
+    p1 = st.append("seen", seen(4, 1), partition="r1")
+    assert st.append_rows(p1) == 4
+    assert st.rows("seen") == 7
+    assert st.rows("seen", partition="r0") == 3
+    assert st.rows("seen", pending=True) == 4
+    assert st.rows("frontier") == 0
+    st.commit_snapshot(1)
+    reopened = _store(spark, tmp_path)
+    assert reopened.rows("seen") == 7
+    assert reopened.rows("seen", pending=True) == 0
+
+
 def test_expire_and_vacuum(spark, tmp_path):
     """Iceberg-style maintenance: expire drops old manifests (current
     state + resume intact), vacuum then removes every data dir no
