@@ -219,7 +219,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("event_id").alias("url_hash"),
             F.col("event_id"))
         cfg = CrawlConfig(max_per_host_per_round=5)
-        scheduled, _ = schedule_budget(ev, {}, cfg)
+        scheduled, _ = schedule_budget(ev, cfg)
         return scheduled.select("host", "event_id")
 
     def q_crawl_bfs(spark, sf):
@@ -545,8 +545,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """G4: stdlib-robotparser can_fetch gate vs a first-match-wins
         prefix-rule oracle (rule order matters: Allow /p/12 precedes
         Disallow /p/1, so /p/12* stays fetchable)."""
-        import pandas as pd
-
         robots_txt = ("User-agent: *\n"
                       "Allow: /p/12\n"
                       "Disallow: /p/1\n"
@@ -557,13 +555,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.when(F.col("event_id") % 3 == 0, F.lit("/p/"))
                  .otherwise(F.lit("/q/")),
                 (F.col("event_id") % 25).cast("string")).alias("url_norm"),
-            F.lit("rb.test").alias("authority"),
             "event_id")
-        robots_rows = pd.DataFrame({
-            "authority": ["rb.test"], "robots_txt": [robots_txt],
-            "crawl_delay": [None]})
-        from simplecrawler_spark.operators.robots import can_fetch_filter
-        return (can_fetch_filter(urls, robots_rows, CrawlConfig())
+        # authority parsed from the url, as in a frontier: a literal
+        # would fold the join key away into a nested-loop join
+        urls = urls.withColumn("authority",
+                               F.split("url_norm", "/").getItem(2))
+        rules = spark.createDataFrame([("rb.test", robots_txt)],
+                                      "authority string, robots_txt string")
+        from simplecrawler_spark.operators.robots import can_fetch
+        return (can_fetch(urls, F.broadcast(rules), CrawlConfig())
                 .select("event_id"))
 
     def q_image_features(spark, sf):

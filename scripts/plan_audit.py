@@ -88,12 +88,12 @@ def main():
                   F.col("user_id").cast("string").alias("authority"),
                   F.lit(0.0).alias("priority"),
                   F.col("event_id").alias("url_hash")))
-    sched_fast, _ = schedule_budget(ev, {}, CrawlConfig())
+    sched_fast, _ = schedule_budget(ev, CrawlConfig())
     plan_fast = formatted(sched_fast)
     sections.append(("politeness fast path (no delays)", plan_fast))
     checks.append(("unconstrained politeness plans no Exchange",
                    n_ops(plan_fast, "Exchange") == 0, ""))
-    sched_win, _ = schedule_budget(ev, {}, CrawlConfig(
+    sched_win, _ = schedule_budget(ev, CrawlConfig(
         max_per_host_per_round=5))
     plan_win = formatted(sched_win)
     sections.append(("politeness window (budget=5)", plan_win))
@@ -103,6 +103,20 @@ def main():
          and n_ops(plan_win, "WindowGroupLimit") >= 1,
          f"exchanges={n_ops(plan_win, 'Exchange')}, "
          f"group_limits={n_ops(plan_win, 'WindowGroupLimit')}"))
+
+    # 3b. robots gate: the frontier hash-joins the rules side (the
+    # build side) once and one Arrow eval runs the stdlib parser
+    plan = formatted(qs["q_robots_gate"](spark, SF_DIR))
+    sections.append(("q_robots_gate", plan))
+    n_joins = sum(n_ops(plan, j) for j in (
+        "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+        "BroadcastNestedLoopJoin", "CartesianProduct"))
+    checks.append(("robots gate: one join against the rules, one Arrow eval",
+                   n_joins == 1 and n_ops(plan, "BroadcastHashJoin") == 1
+                   and "BuildRight" in plan
+                   and n_ops(plan, "ArrowEvalPython") == 1,
+                   f"joins={n_joins}, "
+                   f"arrow_evals={n_ops(plan, 'ArrowEvalPython')}"))
 
     # 4. seen anti-join structure
     plan = formatted(qs["q_seen_antijoin"](spark, SF_DIR))

@@ -106,13 +106,11 @@ class CrawlConfig:
     # threshold below
     bloom_membership: str = "auto"
     bloom_sidecar_min_bytes: int = 256 << 20
-    # robots state bounds (operators/robots.py RobotsState): the driver
-    # caches rule TEXT only while total authorities ≤ robots_closure_max
-    # (the can_fetch closure path), and the literal crawl-delay map only
-    # while delay-carrying authorities ≤ robots_delay_map_max; past
-    # either limit the cache is dropped permanently and evaluation moves
-    # to relational joins against the persisted robots table. Lower
-    # these to force the join paths (tests do).
+    # retired robots knobs: the robots table is the only rule source for
+    # the can_fetch gate and the politeness window (operators/robots.py,
+    # operators/politeness.py), so no code reads these. They stay only
+    # because perfbench/workloads.py passes them; the next benchmark
+    # change drops that argument, then the fields (with seed_state_mode).
     robots_closure_max: int = 10_000
     robots_delay_map_max: int = 10_000
     # fetch

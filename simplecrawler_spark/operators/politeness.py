@@ -18,20 +18,10 @@ Scale note: row_number over PARTITION BY host is a single shuffle on
 host; hot hosts are bounded by the budget itself, so the skewed tail
 never fans out into the fetch stage.
 
-Two delay-lookup paths, mirroring robots.can_fetch_filter/_join:
-  * ``schedule_budget`` inlines ``delay_by_auth`` as a plan literal
-    (F.create_map) — right while delay-carrying authorities are rare
-    (robots Crawl-delay directives usually are).
-  * ``schedule_budget_join`` derives the budget from a relational join
-    against the persisted robots table's crawl_delay column — the
-    authority-scale path (the literal map bloats analysis/codegen past
-    ~10^4 entries). AQE broadcasts the delay side while it is small
-    and co-shuffles on authority once it isn't. The window logic is
-    identical either way (shared ``_rank_split``).
-The crawl loop switches at DELAY_MAP_MAX_AUTHORITIES
-(plans/crawl.py), exactly like the robots CLOSURE_MAX_AUTHORITIES
-switch; equivalence is pinned by
-tests/test_crawl.py::test_politeness_join_equals_literal_path.
+The budget's crawl_delay comes from a left join against the persisted
+robots table's crawl_delay column (AQE broadcasts the delay side while
+it is small and co-shuffles on authority once it isn't); the crawl
+loop passes the table only once some authority carries a delay.
 """
 
 from __future__ import annotations
@@ -46,11 +36,6 @@ from simplecrawler_spark.config import CrawlConfig
 # matches the CrawlConfig default; set a smaller cap to force the window
 UNLIMITED_BUDGET = 1_000_000
 
-# above this many delay-carrying authorities the plan-literal map stops
-# scaling (it is re-analysed/codegen'd into every round's plan) and the
-# budget comes from a join against the robots table instead
-DELAY_MAP_MAX_AUTHORITIES = 10_000
-
 
 def _budget_from_delay(delay: Column, cfg: CrawlConfig) -> Column:
     """Per-row budget from a (nullable) crawl_delay seconds column."""
@@ -62,58 +47,37 @@ def _budget_from_delay(delay: Column, cfg: CrawlConfig) -> Column:
                   F.least(budget, from_delay)).otherwise(budget)
 
 
-def _rank_split(frontier: DataFrame, budget: Column,
-                extra_drop: tuple[str, ...] = ()) -> tuple[DataFrame, DataFrame]:
-    """Window-rank per host and split at the budget."""
-    w = Window.partitionBy("host").orderBy(
-        F.col("priority").asc(), F.col("url_hash").asc())
-    ranked = frontier.withColumn("_rank", F.row_number().over(w)) \
-                     .withColumn("_budget", budget)
-    drop = ["_rank", "_budget", *extra_drop]
-    scheduled = ranked.filter(F.col("_rank") <= F.col("_budget")).drop(*drop)
-    deferred = ranked.filter(F.col("_rank") > F.col("_budget")).drop(*drop)
-    return scheduled, deferred
-
-
-def schedule_budget(frontier: DataFrame, delay_by_auth: dict[str, float],
-                    cfg: CrawlConfig) -> tuple[DataFrame, DataFrame]:
+def schedule_budget(frontier: DataFrame, cfg: CrawlConfig,
+                    robots_df: DataFrame | None = None
+                    ) -> tuple[DataFrame, DataFrame]:
     """Split a round's frontier into (scheduled, deferred) by per-host
     budget. Returns both; deferred must be re-appended to the next
     round's frontier.
 
-    Fast path: with no crawl delays and an unconstrained per-host cap,
-    every row is scheduled — the per-host window (a shuffle on host)
-    is skipped entirely.
+    * no ``robots_df`` and an unconstrained per-host cap: every row is
+      scheduled — the per-host window (a shuffle on host) is skipped;
+    * no ``robots_df``: every host gets the fixed cap;
+    * ``robots_df`` (authority, …, crawl_delay): a row whose authority
+      has a delay gets min(cap, max(1, floor(round_seconds/delay))),
+      any other row the cap. The join adds no rows and the frontier's
+      column shape is restored.
     """
-    if not delay_by_auth and cfg.max_per_host_per_round >= UNLIMITED_BUDGET:
+    if robots_df is None and cfg.max_per_host_per_round >= UNLIMITED_BUDGET:
         return frontier, frontier.limit(0)
-    if delay_by_auth:
-        mapping = F.create_map(*[
-            F.lit(x) for pair in delay_by_auth.items() for x in pair])
-        budget = _budget_from_delay(mapping[F.col("authority")], cfg)
-    else:
-        budget = F.lit(int(cfg.max_per_host_per_round))
-    return _rank_split(frontier, budget)
-
-
-def schedule_budget_join(frontier: DataFrame, robots_df: DataFrame,
-                         cfg: CrawlConfig) -> tuple[DataFrame, DataFrame]:
-    """G5 at authority scale: the budget's crawl_delay comes from a
-    left join against the robots TABLE (authority, …, crawl_delay)
-    instead of a plan-literal map. Same split semantics as
-    ``schedule_budget``: a frontier row whose authority has no delay
-    row gets the unconstrained cap; the join adds no rows (left) and
-    the helper column is dropped before returning."""
-    delays = (robots_df.select("authority", "crawl_delay")
-              .where(F.col("crawl_delay").isNotNull()))
-    joined = frontier.join(delays, "authority", "left")
-    scheduled, deferred = _rank_split(
-        joined, _budget_from_delay(F.col("crawl_delay"), cfg),
-        extra_drop=("crawl_delay",))
-    # the join reorders columns (join key first) — restore the
-    # frontier's projection so downstream consumers see one shape
+    ranked = frontier
+    budget = F.lit(int(cfg.max_per_host_per_round))
+    if robots_df is not None:
+        delays = (robots_df.select("authority", "crawl_delay")
+                  .where(F.col("crawl_delay").isNotNull()))
+        ranked = frontier.join(delays, "authority", "left")
+        budget = _budget_from_delay(F.col("crawl_delay"), cfg)
+    w = Window.partitionBy("host").orderBy(
+        F.col("priority").asc(), F.col("url_hash").asc())
+    ranked = ranked.withColumn("_rank", F.row_number().over(w)) \
+                   .withColumn("_budget", budget)
     cols = frontier.columns
-    return scheduled.select(cols), deferred.select(cols)
+    return (ranked.filter(F.col("_rank") <= F.col("_budget")).select(cols),
+            ranked.filter(F.col("_rank") > F.col("_budget")).select(cols))
 
 
 def apply_global_budget(scheduled: DataFrame, deferred: DataFrame,
@@ -131,7 +95,7 @@ def apply_global_budget(scheduled: DataFrame, deferred: DataFrame,
     the cap is armed."""
     if cfg.max_urls_per_round >= UNLIMITED_BUDGET:
         return scheduled, deferred
-    if getattr(cfg, "round_budget_mode", "cheapest") == "fair":
+    if cfg.round_budget_mode == "fair":
         # fair share: Hamilton-apportion the cap across hosts by
         # pending count, take each host's cheapest rows up to its
         # share. One host-grain count agg + broadcast join + the

@@ -7,55 +7,32 @@ Reference semantics (crawler.py:182-194, 224-239):
     (crawler.py:201-203) — the engine mirrors that: the robots table is
     always built, the gate is applied only when obey_robots.
   * can_fetch evaluated by stdlib urllib.robotparser — the engine uses
-    the SAME parser for exact parity, host-cached inside an Arrow
-    batch (host count ≪ URL count; the text is broadcast, the per-URL
-    work is a dict lookup + prefix match).
-  * crawl_delay feeds the politeness budget (G5) — extracted once per
-    (host, user_agent) driver-side.
+    the SAME parser for exact parity: the frontier left-joins the
+    robots table on authority and each Arrow batch caches one parser
+    per distinct authority.
+  * crawl_delay feeds the politeness budget (G5) — parsed
+    executor-side when the rules are fetched and stored as a column of
+    the robots table, which the politeness window joins.
 
 The reference is single-site (one robots fetch per crawl); the engine
 generalises to one robots row per authority, built by fetching
 `scheme://authority/robots.txt` through the same fetcher used for
-pages.
+pages. The persisted robots table is the only rule source; the driver
+keeps three counters over it (RobotsState).
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
-import io
-import math
 from urllib.robotparser import RobotFileParser
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from simplecrawler_spark.config import CrawlConfig
-from simplecrawler_spark.functions.canonical import canon_parts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
-
-
-def robots_urls_for(frontier: DataFrame) -> DataFrame:
-    """Distinct `scheme://authority/robots.txt` fetch rows for every
-    authority present in the frontier (reference Hyperlink.with_path,
-    hyperlink.py:83-85)."""
-    doms = (
-        frontier.select("authority", F.split("url_norm", "://")
-                        .getItem(0).alias("scheme"))
-        .where(F.col("authority") != "")
-        .distinct()
-    )
-    url = F.concat(F.col("scheme"), F.lit("://"), F.col("authority"),
-                   F.lit("/robots.txt"))
-    return doms.select(
-        url.alias("url_norm"), url.alias("url_raw"),
-        F.col("authority").alias("host"), "authority",
-        F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
-        F.lit(-1).alias("round"),
-    )
 
 
 def _fetch_robots_rows(fetcher, df: DataFrame) -> DataFrame:
@@ -149,85 +126,18 @@ def fetch_robots_table(spark, auth_scheme: dict[str, str], fetcher,
         .alias("crawl_delay"))
 
 
-def fetch_robots_for(spark, auth_scheme: dict[str, str], fetcher,
-                     cfg: CrawlConfig) -> pd.DataFrame:
-    """Driver-side pandas variant of fetch_robots_table — debugging /
-    small-crawl surface only; the crawl loop itself never materialises
-    robots text on the driver."""
-    if not any(a for a in auth_scheme):
-        return pd.DataFrame(columns=["authority", "robots_txt", "crawl_delay"])
-    return fetch_robots_table(spark, auth_scheme, fetcher, cfg).toPandas()
-
-
-def build_robots_table(frontier: DataFrame, fetcher,
-                       cfg: CrawlConfig) -> pd.DataFrame:
-    """Fetch+gate robots.txt per authority of ``frontier`` → small
-    driver-side pandas table (authority, robots_txt, crawl_delay).
-    Empty rules on any error (crawler.py:191-192)."""
-    gated = _gate_robots_df(
-        _fetch_robots_rows(fetcher, robots_urls_for(frontier)))
-    return gated.select(
-        "authority", "robots_txt",
-        crawl_delay_col(F.col("robots_txt"), cfg.user_agent)
-        .alias("crawl_delay")).toPandas()
-
-
-# above this many authorities, the rule table stops riding in a UDF
-# closure (it would be re-pickled into every task and live whole on
-# every executor) and becomes a relational join side instead
-CLOSURE_MAX_AUTHORITIES = 10_000
-
-
-def can_fetch_filter(frontier: DataFrame, robots_rows: pd.DataFrame,
-                     cfg: CrawlConfig) -> DataFrame:
+def can_fetch(frontier: DataFrame, robots_df: DataFrame,
+              cfg: CrawlConfig) -> DataFrame:
     """G4: keep frontier rows the robots rules allow for cfg.user_agent.
 
-    Evaluation is the stdlib RobotFileParser itself (exact reference
-    parity), one parser per distinct authority cached across the Arrow
-    batch; rule text rides in the UDF closure (broadcast-sized: one
-    row per authority). Past CLOSURE_MAX_AUTHORITIES the closure stops
-    scaling and evaluation switches to can_fetch_join — same semantics,
-    rules as a join side."""
-    if not cfg.obey_robots or robots_rows.empty:
-        return frontier
-    if not any((txt or "") for txt in robots_rows["robots_txt"]):
-        # every authority has empty rules — RobotFileParser allows all
-        # (crawler.py:191-192 error→empty parity); skip the UDF stage
-        return frontier
-    if len(robots_rows) > CLOSURE_MAX_AUTHORITIES:
-        robots_df = frontier.sparkSession.createDataFrame(
-            robots_rows[["authority", "robots_txt"]])
-        return can_fetch_join(frontier, robots_df, cfg)
-    txt_by_auth = dict(zip(robots_rows["authority"], robots_rows["robots_txt"]))
-    agent = cfg.user_agent
-
-    @F.pandas_udf(T.BooleanType())
-    def allowed(authority: pd.Series, url_norm: pd.Series) -> pd.Series:
-        cache: dict[str, RobotFileParser] = {}
-        out = []
-        for auth, url in zip(authority, url_norm):
-            txt = txt_by_auth.get(auth, "")
-            rp = cache.get(auth)
-            if rp is None:
-                rp = RobotFileParser()
-                rp.parse((txt or "").splitlines())
-                cache[auth] = rp
-            out.append(bool(rp.can_fetch(agent, url)))
-        return pd.Series(out)
-
-    return frontier.filter(allowed(F.col("authority"), F.col("url_norm")))
-
-
-def can_fetch_join(frontier: DataFrame, robots_df: DataFrame,
-                   cfg: CrawlConfig) -> DataFrame:
-    """G4 at authority scale: rules live in a TABLE
-    (authority, robots_txt), the frontier left-joins it on authority
-    (AQE broadcasts while the table is small, co-shuffles on authority
-    once it isn't — at web scale both sides are already partitionable
-    by authority/host), and the same stdlib parser evaluates each row.
-    A frontier row with no rules — unknown authority or empty text —
-    is allowed, exactly like the closure path and the reference's
-    error→empty behaviour (crawler.py:191-192)."""
+    Rules live in a TABLE (authority, robots_txt); the frontier
+    left-joins it on authority (AQE broadcasts while the table is
+    small, co-shuffles on authority once it isn't — at web scale both
+    sides are already partitionable by authority/host), and the stdlib
+    parser evaluates each row. A frontier row with no rules — unknown
+    authority or empty text — is allowed, like the reference's
+    error→empty behaviour (crawler.py:191-192). The table must hold
+    at most one row per authority, or the join duplicates pages."""
     if not cfg.obey_robots:
         return frontier
     agent = cfg.user_agent
@@ -253,185 +163,21 @@ def can_fetch_join(frontier: DataFrame, robots_df: DataFrame,
         robots_df.select("authority", "robots_txt"), "authority", "left")
     return (joined.filter(allowed(F.col("robots_txt"), F.col("authority"),
                                   F.col("url_norm")))
-            .drop("robots_txt"))
-
-
-def crawl_delay_map(robots_rows: pd.DataFrame) -> dict[str, float]:
-    """authority → crawl_delay seconds (None rows dropped)."""
-    if robots_rows.empty:
-        return {}
-    out = {}
-    for auth, delay in zip(robots_rows["authority"], robots_rows["crawl_delay"]):
-        if delay is not None and not pd.isna(delay):
-            out[auth] = float(delay)
-    return out
-
-
-def parse_robots_text(txt: str, user_agent: str) -> RobotFileParser:
-    """Driver-side helper mirroring reference _get_robots result."""
-    rp = RobotFileParser()
-    rp.parse((txt or "").splitlines())
-    return rp
-
-
-# ---------------------------------------------------------------------- #
-# Bounded driver-side robots state (round-3 verdict item 1): the
-# persisted robots TABLE is the single source of truth; the driver keeps
-# counters, a small bloom over authority NAMES, and caches that are
-# dropped permanently once the crawl crosses the closure/delay-map
-# limits. Nothing driver-side is O(total authorities × rule text).
-# ---------------------------------------------------------------------- #
-
-AUTH_BLOOM_FILE = "authority_bloom.npz"
-
-
-class AuthorityBloom:
-    """Driver-side Bloom filter over authority strings — the bounded
-    replacement for ``set(robots_frame["authority"])`` membership.
-
-    Direction of error is safe by construction: the bloom only ever
-    concludes "definitely NOT fetched yet" (skip the confirm join) or
-    "maybe fetched" (confirm EXACTLY via anti-join against the robots
-    table). A false positive costs one redundant confirm-join row; a
-    silent skipped robots fetch is impossible. Deterministic blake2b
-    double hashing (same scheme family as CuckooSeen), so bits persist
-    across processes."""
-
-    def __init__(self, capacity: int = 1 << 17, fpp: float = 1e-3,
-                 seed: int = 29):
-        m = int(-capacity * math.log(fpp) / (math.log(2) ** 2))
-        self.m = 1 << max(13, m.bit_length())
-        self.k = max(1, round(-math.log2(fpp)))
-        self.seed = seed
-        self.capacity = capacity
-        self.fpp = fpp
-        self.bits = np.zeros(self.m // 8, dtype=np.uint8)
-        self.added = 0
-
-    def _positions(self, auth: str) -> list[int]:
-        d = hashlib.blake2b(auth.encode("utf-8", "surrogatepass"),
-                            digest_size=16,
-                            salt=self.seed.to_bytes(8, "little")).digest()
-        h1 = int.from_bytes(d[:8], "little") % self.m
-        h2 = (int.from_bytes(d[8:], "little") % self.m) | 1
-        return [(h1 + i * h2) % self.m for i in range(self.k)]
-
-    def add(self, auth: str) -> None:
-        for p in self._positions(auth):
-            self.bits[p >> 3] |= np.uint8(1 << (p & 7))
-        self.added += 1
-
-    def might_contain(self, auth: str) -> bool:
-        return all(self.bits[p >> 3] & (1 << (p & 7))
-                   for p in self._positions(auth))
-
-    def saturated(self) -> bool:
-        return self.added > 4 * self.capacity
-
-    def add_df(self, df: DataFrame, col: str = "authority") -> int:
-        """Distributed build/rebuild from the robots table: each
-        partition ORs its authorities into a partial bitset and only
-        the m/8-byte partials return to the driver — never one row per
-        authority. Python-side blake2b per row is acceptable here: this
-        runs once per resume-without-sidecar or per amortised growth
-        rebuild, not per round."""
-        m, k, seed = self.m, self.k, self.seed
-
-        def gen(batches):
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            n = 0
-            idx = np.arange(k, dtype=np.int64)
-            for pdf in batches:
-                for a in pdf[col]:
-                    if not a:
-                        continue
-                    d = hashlib.blake2b(
-                        a.encode("utf-8", "surrogatepass"), digest_size=16,
-                        salt=seed.to_bytes(8, "little")).digest()
-                    h1 = int.from_bytes(d[:8], "little") % m
-                    h2 = (int.from_bytes(d[8:], "little") % m) | 1
-                    pos = (h1 + idx * h2) % m
-                    np.bitwise_or.at(
-                        bits, pos >> 3,
-                        np.left_shift(1, (pos & 7)).astype(np.uint8))
-                    n += 1
-            yield pd.DataFrame({"bits": [bits.tobytes()], "n": [n]})
-
-        rows = (df.select(col).mapInPandas(gen, "bits binary, n long")
-                .collect())
-        for row in rows:
-            np.bitwise_or(self.bits, np.frombuffer(row.bits, dtype=np.uint8),
-                          out=self.bits)
-            self.added += row.n
-        return self.added
-
-    def to_bytes(self) -> bytes:
-        buf = io.BytesIO()
-        np.savez(buf, m=self.m, k=self.k, seed=self.seed,
-                 capacity=self.capacity, fpp=self.fpp, added=self.added,
-                 bits=self.bits)
-        return buf.getvalue()
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "AuthorityBloom":
-        z = np.load(io.BytesIO(data))
-        obj = cls.__new__(cls)
-        obj.m = int(z["m"]); obj.k = int(z["k"]); obj.seed = int(z["seed"])
-        obj.capacity = int(z["capacity"]); obj.fpp = float(z["fpp"])
-        obj.added = int(z["added"]); obj.bits = z["bits"].copy()
-        return obj
+            .select(frontier.columns))
 
 
 class RobotsState:
-    """Bounded driver-side view of the persisted robots table.
+    """Driver-side counters over the persisted robots table, which is
+    the only rule source: ``n_authorities`` (rows fetched),
+    ``n_nonempty`` (rows with rule text — none means the gate can be
+    skipped, since empty rules allow everything) and ``n_delays`` (rows
+    with a Crawl-delay — any means the politeness window joins the
+    table). Rule text and delays never live on the driver."""
 
-    Holds ONLY:
-      * counters (n_authorities / n_nonempty / n_delays) — every
-        closure↔join and literal-map↔join switch keys off these, never
-        off a materialised frame;
-      * ``text_cache`` {authority: robots_txt} while n_authorities ≤
-        closure_max (the can_fetch CLOSURE path needs the text); the
-        cache is dropped PERMANENTLY the round the crawl crosses the
-        limit and evaluation moves to can_fetch_join over the table;
-      * ``delays`` {authority: crawl_delay} while n_delays ≤ delay_max
-        (the plan-literal politeness path); dropped permanently past it
-        in favour of schedule_budget_join;
-      * an AuthorityBloom over authority names for known-membership.
-
-    Membership protocol (split_missing): cache-exact while the cache
-    lives; past it, bloom-definitely-new skips the confirm join and
-    bloom-maybe rows are confirmed EXACTLY by an anti-join against the
-    robots table — a bloom false positive can never skip a robots
-    fetch, and a bloom that is stale/lost only costs extra confirm
-    rows. Reference semantics preserved throughout: error→empty rules,
-    per-user-agent evaluation (crawler.py:182-194)."""
-
-    def __init__(self, closure_max: int = CLOSURE_MAX_AUTHORITIES,
-                 delay_max: int | None = None,
-                 bloom_capacity: int = 1 << 17):
-        from simplecrawler_spark.operators.politeness import (
-            DELAY_MAP_MAX_AUTHORITIES,
-        )
-        self.closure_max = closure_max
-        self.delay_max = (DELAY_MAP_MAX_AUTHORITIES if delay_max is None
-                          else delay_max)
+    def __init__(self):
         self.n_authorities = 0
         self.n_nonempty = 0
         self.n_delays = 0
-        self.text_cache: dict[str, str] | None = {}
-        self.delays: dict[str, float] | None = {}
-        self.bloom = AuthorityBloom(capacity=bloom_capacity)
-        self._frame: pd.DataFrame | None = None  # lazy closure-path frame
-
-    # -- switches (counter-keyed, round-3 verdict item 1) ----------------
-
-    @property
-    def use_join_gate(self) -> bool:
-        return self.text_cache is None
-
-    @property
-    def use_delay_join(self) -> bool:
-        return self.delays is None
 
     @property
     def any_rules(self) -> bool:
@@ -441,170 +187,42 @@ class RobotsState:
     def any_delays(self) -> bool:
         return self.n_delays > 0
 
-    def robots_frame(self) -> pd.DataFrame:
-        """(authority, robots_txt, crawl_delay) frame for the closure
-        path — bounded by closure_max by construction."""
-        if self.text_cache is None:
-            raise RuntimeError(
-                "closure-path frame requested past closure_max — "
-                "use can_fetch_join against the robots table")
-        if self._frame is None:
-            delays = self.delays or {}
-            self._frame = pd.DataFrame({
-                "authority": list(self.text_cache),
-                "robots_txt": list(self.text_cache.values()),
-                "crawl_delay": [delays.get(a) for a in self.text_cache],
-            })
-        return self._frame
-
-    def known_exact(self, auth: str) -> bool:
-        """True only on a PROVEN-known authority (cache hit). Past the
-        cache this returns False — registration stays cheap and the
-        per-round split_missing confirm join supplies exactness."""
-        return self.text_cache is not None and auth in self.text_cache
-
-    # -- membership -------------------------------------------------------
-
     def split_missing(self, pending: dict[str, str],
                       robots_df: DataFrame) -> dict[str, str]:
         """The subset of ``pending`` {authority: scheme} NOT yet in the
-        robots table. Exact from the cache while it lives; else a bloom
-        split where only maybe-known rows pay one anti-join against the
-        table (column-pruned authority scan)."""
-        pending = {a: s for a, s in pending.items() if a}
-        if not pending:
-            return {}
-        if self.text_cache is not None:
-            return {a: s for a, s in pending.items()
-                    if a not in self.text_cache}
-        missing = {a: s for a, s in pending.items()
-                   if not self.bloom.might_contain(a)}
-        maybe = {a: s for a, s in pending.items() if a not in missing}
-        if maybe:
-            spark = robots_df.sparkSession
-            mdf = spark.createDataFrame(
-                [(a,) for a in sorted(maybe)], "authority string")
-            for row in mdf.join(robots_df.select("authority"),
-                                "authority", "left_anti").collect():
-                missing[row.authority] = maybe[row.authority]
-        return missing
+        robots table: one column-pruned anti-join collect, skipped
+        while the table is empty."""
+        if not pending or not self.n_authorities:
+            return pending
+        # a pandas frame rides Arrow into the JVM: about half the
+        # cost of Python rows at a few hundred authorities
+        mdf = robots_df.sparkSession.createDataFrame(
+            pd.DataFrame({"authority": sorted(pending)}), "authority string")
+        return {row.authority: pending[row.authority]
+                for row in mdf.join(robots_df.select("authority"),
+                                    "authority", "left_anti").collect()}
 
-    # -- updates ------------------------------------------------------------
-
-    def register_fetched(self, appended_df: DataFrame,
-                         authorities: dict[str, str],
-                         n_rows: int) -> None:
-        """Fold one round's appended robots rows into the bounded
-        state. ``appended_df`` is the parquet read-back of the append
-        (bounded by the round's pending authorities). Driver collects
-        are bounded: full rows only while the text cache lives; past
-        the closure limit only (authority, crawl_delay, nonempty) —
-        rule TEXT never crosses to the driver again."""
-        for a in authorities:
-            self.bloom.add(a)
-        self.n_authorities += n_rows
-        self._frame = None
-        if (self.text_cache is not None
-                and self.n_authorities <= self.closure_max):
-            rows = appended_df.select(
-                "authority", "robots_txt", "crawl_delay").collect()
-            for r in rows:
-                self.text_cache[r.authority] = r.robots_txt or ""
-                if r.robots_txt:
-                    self.n_nonempty += 1
-                if r.crawl_delay is not None:
-                    self.n_delays += 1
-                    if self.delays is not None:
-                        self.delays[r.authority] = float(r.crawl_delay)
-        else:
-            self.text_cache = None
-            rows = appended_df.select(
-                "authority", "crawl_delay",
-                (F.coalesce(F.col("robots_txt"), F.lit("")) != F.lit(""))
-                .alias("nonempty")).collect()
-            for r in rows:
-                if r.nonempty:
-                    self.n_nonempty += 1
-                if r.crawl_delay is not None:
-                    self.n_delays += 1
-                    if self.delays is not None:
-                        self.delays[r.authority] = float(r.crawl_delay)
-        if self.delays is not None and self.n_delays > self.delay_max:
-            self.delays = None
-
-    def maybe_grow(self, robots_df: DataFrame) -> bool:
-        """Amortised-doubling rebuild of the authority bloom from the
-        table once it saturates (same O(1)-per-key story as the URL
-        bloom). Saturation only raises confirm-join traffic, never
-        correctness, so this is a performance valve."""
-        if not self.bloom.saturated():
-            return False
-        self.bloom = AuthorityBloom(capacity=self.bloom.added * 4,
-                                    fpp=self.bloom.fpp)
-        self.bloom.add_df(robots_df)
-        return True
-
-    # -- persistence (sidecar) ---------------------------------------------
-
-    def save(self, sidecar) -> None:
-        """Persist the bloom bits (counters/caches are recomputed from
-        the table at resume — the table is the source of truth, so a
-        stale sidecar can only cost extra confirm rows)."""
-        sidecar.write_bytes(AUTH_BLOOM_FILE, self.bloom.to_bytes())
-
-    @classmethod
-    def from_table(cls, robots_df: DataFrame, sidecar=None,
-                   closure_max: int = CLOSURE_MAX_AUTHORITIES,
-                   delay_max: int | None = None,
-                   bloom_capacity: int = 1 << 17) -> "RobotsState":
-        """Resume path: counters from ONE aggregate over the robots
-        table; caches loaded only within their bounds; bloom from the
-        sidecar, else rebuilt distributed. The driver never
-        materialises the full text column."""
-        st = cls(closure_max=closure_max, delay_max=delay_max,
-                 bloom_capacity=bloom_capacity)
-        agg = robots_df.agg(
+    def register_fetched(self, appended_df: DataFrame) -> None:
+        """Fold robots rows (one round's append, or the whole table on
+        resume) into the counters with one aggregate."""
+        agg = appended_df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum((F.coalesce(F.col("robots_txt"), F.lit("")) != F.lit(""))
                   .cast("long")).alias("ne"),
             F.count("crawl_delay").alias("nd")).collect()[0]
-        st.n_authorities = int(agg.n or 0)
-        st.n_nonempty = int(agg.ne or 0)
-        st.n_delays = int(agg.nd or 0)
-        if st.n_authorities == 0:
-            return st
-        if st.n_authorities <= closure_max:
-            for r in robots_df.collect():  # bounded by closure_max
-                st.text_cache[r.authority] = r.robots_txt or ""
-                if r.crawl_delay is not None:
-                    st.delays[r.authority] = float(r.crawl_delay)
-                st.bloom.add(r.authority)
-            return st
-        st.text_cache = None
-        if st.n_delays <= st.delay_max:
-            for r in (robots_df.where(F.col("crawl_delay").isNotNull())
-                      .select("authority", "crawl_delay").collect()):
-                st.delays[r.authority] = float(r.crawl_delay)
-        else:
-            st.delays = None
-        loaded = False
-        if sidecar is not None and sidecar.exists(AUTH_BLOOM_FILE):
-            try:
-                st.bloom = AuthorityBloom.from_bytes(
-                    sidecar.read_bytes(AUTH_BLOOM_FILE))
-                loaded = True
-            except Exception:
-                loaded = False
-        if not loaded:
-            st.bloom = AuthorityBloom(
-                capacity=max(bloom_capacity, 4 * st.n_authorities))
-            st.bloom.add_df(robots_df)
+        self.n_authorities += int(agg.n or 0)
+        self.n_nonempty += int(agg.ne or 0)
+        self.n_delays += int(agg.nd or 0)
+
+    @classmethod
+    def from_table(cls, robots_df: DataFrame) -> "RobotsState":
+        """Resume path: the counters from one aggregate over the
+        table."""
+        st = cls()
+        st.register_fetched(robots_df)
         return st
 
 
 __all__ = [
-    "robots_urls_for", "build_robots_table", "fetch_robots_table",
-    "fetch_robots_for", "crawl_delay_col", "can_fetch_filter",
-    "can_fetch_join", "crawl_delay_map", "parse_robots_text",
-    "AuthorityBloom", "RobotsState", "canon_parts",
+    "fetch_robots_table", "crawl_delay_col", "can_fetch", "RobotsState",
 ]

@@ -57,11 +57,10 @@ from simplecrawler_spark.operators.parse import (
 )
 from simplecrawler_spark.operators.partitioning import repartition_salted
 from simplecrawler_spark.operators.politeness import (
-    UNLIMITED_BUDGET, apply_global_budget,
-    schedule_budget, schedule_budget_join,
+    UNLIMITED_BUDGET, apply_global_budget, schedule_budget,
 )
 from simplecrawler_spark.operators.robots import (
-    RobotsState, can_fetch_filter, can_fetch_join, fetch_robots_table,
+    RobotsState, can_fetch, fetch_robots_table,
 )
 from simplecrawler_spark.operators.seen import (
     BloomSeen, anti_join_seen, host_bucket_expr,
@@ -141,14 +140,10 @@ class FrontierCrawler:
         })
         self.bloom: BloomSeen | None = None
         self._bloom_path = os.path.join(self.root, "sidecar", "bloom.npz")
-        # S4 robots state — bounded driver-side view of the persisted
-        # robots TABLE (the single source of truth): counters + an
-        # authority bloom + caches dropped past the closure/delay
-        # limits. The driver never holds every authority's rule text
-        # (round-3 verdict item 1).
-        self._rstate = RobotsState(
-            closure_max=self.cfg.robots_closure_max,
-            delay_max=self.cfg.robots_delay_map_max)
+        # S4 robots state — three counters over the persisted robots
+        # TABLE, the only rule source: the gate, the politeness window
+        # and split_missing all read the table itself.
+        self._rstate = RobotsState()
         # R5 done-skip state. The ONLY urls that can be both done and
         # re-enter the frontier are seeds (a seed is never added to
         # seen — crawler.py:198-199, SURVEY.md §2.6.1 — so a page
@@ -191,6 +186,7 @@ class FrontierCrawler:
         self._stream_pending_dir = os.path.join(self.root, "stream_pending")
         self._stream_consumed: list[str] = []
         self._crawl_active = False
+        self._in_round = False
 
     # ------------------------------------------------------------------ #
 
@@ -250,11 +246,10 @@ class FrontierCrawler:
         (crawler.py:201-203); multi-authority crawls extend that to
         once per authority. Pending authorities are tracked
         driver-side (bounded per round), membership against the
-        already-fetched set is the RobotsState protocol (exact cache →
-        bloom split + confirm anti-join against the table), and the
-        fetched text + its crawl-delay parse stay executor-side: the
-        rows append STRAIGHT to the robots table; the driver folds in
-        only bounded counters/caches (round-3 verdict item 1)."""
+        already-fetched set is one anti-join against the table
+        (RobotsState.split_missing), and the fetched text + its
+        crawl-delay parse stay executor-side: the rows append STRAIGHT
+        to the robots table; the driver folds in only counters."""
         pending, self._auth_pending = self._auth_pending, {}
         if not pending:
             return
@@ -265,31 +260,24 @@ class FrontierCrawler:
         rows_df = fetch_robots_table(self.spark, missing, self.fetcher,
                                      self.cfg)
         path = self.store.append("robots", rows_df)
-        n_rows = self.store.append_rows(path)
-        # fold counters/bounded caches from the WRITTEN parquet — the
-        # fetch never re-runs, and past the closure limit rule text
-        # never crosses back to the driver
-        self._rstate.register_fetched(self.spark.read.parquet(path),
-                                      missing, n_rows)
-        self._rstate.maybe_grow(self.store.read("robots"))
-        self._rstate.save(self.store.sidecar("robots_state"))
+        # fold the counters from the WRITTEN parquet — the fetch never
+        # re-runs, and rule text never crosses back to the driver
+        self._rstate.register_fetched(self.spark.read.parquet(path))
 
     def _register_authorities(self, pairs: dict[str, str]) -> None:
-        """Queue authorities not PROVEN fetched for the next round's
-        robots discovery. Proven-known (cache hit) rows drop here for
-        free; past the cache every candidate stays pending and
-        _ensure_robots's bloom-split + confirm anti-join supplies the
-        exact membership — pending is bounded by one round's distinct
-        discoveries either way."""
+        """Queue authorities for the next round's robots discovery;
+        _ensure_robots's anti-join against the table drops the ones
+        already fetched. Pending is bounded by one round's distinct
+        discoveries."""
         for auth, scheme in pairs.items():
-            if auth and not self._rstate.known_exact(auth):
+            if auth:
                 self._auth_pending.setdefault(auth, scheme or "http")
 
     @staticmethod
     def _authorities(df: DataFrame) -> dict[str, str]:
         """{authority: scheme} of frontier rows — one distinct-collect
         at AUTHORITY grain (robots are fetched once per authority, so
-        this is the floor; RobotsState bounds it downstream). With a
+        this is the floor; split_missing drops known ones). With a
         bloom, callers piggyback this onto the filter-build pass
         (add_df(collect_authorities=True)) instead."""
         return {row.authority: row.scheme or "http"
@@ -493,22 +481,16 @@ class FrontierCrawler:
 
         # S4/G4: robots — pending authorities were noted driver-side
         # (seeds at crawl(); discoveries ride on the prior round's
-        # bloom-build pass via _register_authorities). Past the
-        # closure-broadcast limit, rules are evaluated against the
-        # persisted robots TABLE via a relational join instead of the
-        # driver-side pandas copy.
+        # bloom-build pass via _register_authorities); rules are
+        # evaluated by a join against the persisted robots TABLE.
         self._ensure_robots()
         _mark("robots_fetch")
         if not cfg.obey_robots or not self._rstate.any_rules:
             # no non-empty rules anywhere → RobotFileParser allows all
             # (crawler.py:191-192 error→empty parity): skip the gate
             allowed = eligible
-        elif self._rstate.use_join_gate:
-            allowed = can_fetch_join(eligible, self.store.read("robots"),
-                                     cfg)
         else:
-            allowed = can_fetch_filter(eligible,
-                                       self._rstate.robots_frame(), cfg)
+            allowed = can_fetch(eligible, self.store.read("robots"), cfg)
 
         # S5 transcript rows (crawl_log only — one extra anti-join for
         # the robots-blocked complement, zero cost when off)
@@ -525,18 +507,12 @@ class FrontierCrawler:
         # consumed ONCE on the unbudgeted fast path (fetch; next
         # frontier), so caching them is pure overhead — persist only
         # when a second consumer exists (budgeted window recomputation
-        # or the crawl_log CRAWLING selector).
-        # Past cfg.robots_delay_map_max delay-carrying authorities the
-        # literal map stops scaling — the RobotsState drops the dict
-        # permanently and the budget derives from a join against the
-        # persisted robots table (same counter-keyed switch shape as
-        # the robots closure→join gate above).
-        if self._rstate.any_delays and self._rstate.use_delay_join:
-            scheduled, deferred = schedule_budget_join(
-                allowed, self.store.read("robots"), cfg)
-        else:
-            scheduled, deferred = schedule_budget(
-                allowed, self._rstate.delays or {}, cfg)
+        # or the crawl_log CRAWLING selector). Once any authority
+        # carries a Crawl-delay the budget joins the robots table's
+        # crawl_delay column.
+        scheduled, deferred = schedule_budget(
+            allowed, cfg,
+            self.store.read("robots") if self._rstate.any_delays else None)
         scheduled, deferred = apply_global_budget(scheduled, deferred, cfg)
         budgeted = self._rstate.any_delays or (
             cfg.max_per_host_per_round < UNLIMITED_BUDGET) or (
@@ -1071,7 +1047,7 @@ class FrontierCrawler:
         )
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            if self._crawl_active or getattr(self, "_in_round", False):
+            if self._crawl_active or self._in_round:
                 dest = os.path.join(self._stream_pending_dir,
                                     f"batch-{_uuid.uuid4().hex[:12]}")
                 (batch_df.select("url_norm", "url_raw", "authority",
@@ -1136,18 +1112,11 @@ class FrontierCrawler:
                 f"checkpoint at {self.root} has seeds but no done_seeds "
                 "table (written by an older build); restart the crawl")
         self._n_seeds_done = self.store.rows("done_seeds")
-        # rebuild the BOUNDED robots view from the persisted table —
-        # one aggregate for the counters, caches only within their
-        # limits, authority bloom from the sidecar (else a distributed
-        # rebuild); a resume re-reads, never re-fetches, and never
-        # materialises the full text column driver-side. Then re-note
-        # the resume frontier's authorities so any NOT yet fetched get
-        # picked up by _ensure_robots.
-        self._rstate = RobotsState.from_table(
-            self.store.read("robots"),
-            sidecar=self.store.sidecar("robots_state"),
-            closure_max=cfg.robots_closure_max,
-            delay_max=cfg.robots_delay_map_max)
+        # rebuild the robots counters from the persisted table with
+        # one aggregate; a resume re-reads, never re-fetches. Then
+        # re-note the resume frontier's authorities so any NOT yet
+        # fetched get picked up by _ensure_robots.
+        self._rstate = RobotsState.from_table(self.store.read("robots"))
         resume_frontier = (self.store.read("frontier",
                                            partition=f"r{last + 1}")
                            .where(F.col("round") == last + 1))

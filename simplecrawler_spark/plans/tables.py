@@ -144,37 +144,42 @@ class SnapshotStore:
         return path
 
     def commit_snapshot(self, round_no: int, metrics: dict | None = None) -> str:
-        snap_id = (self._last_snapshot["id"] + 1) if self._last_snapshot else 1
-        tables = {k: list(v) for k, v in self._committed.items()}
-        partitions = {k: dict(v) for k, v in self._partitions.items()}
-        lineage: dict[str, list] = {}
-        for table, appends in self._pending.items():
-            tables.setdefault(table, []).extend(a["path"] for a in appends)
-            for a in appends:
-                if a.get("partition") is not None:
-                    partitions.setdefault(table, {})[a["path"]] = a["partition"]
-            lineage[table] = [
-                {"path": a["path"], "partition": a.get("partition"),
-                 "files": a["lineage"]} for a in appends
-            ]
-        snap = {
-            "id": snap_id,
-            "round": round_no,
-            "tables": tables,
-            "partitions": partitions,
-            "new_lineage": lineage,
-            "metrics": metrics or {},
-        }
-        tmp = os.path.join(self._snap_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(snap, fh, indent=1)
-        final = os.path.join(self._snap_dir, f"snap-{snap_id:06d}.json")
-        os.rename(tmp, final)
-        self._committed = tables
-        self._partitions = partitions
-        self._pending = {}
-        self._last_snapshot = snap
-        return final
+        with self._pending_lock:  # serialised with compact()'s swap
+            snap_id = (self._last_snapshot["id"] + 1
+                       if self._last_snapshot else 1)
+            tables = {k: list(v) for k, v in self._committed.items()}
+            partitions = {k: dict(v) for k, v in self._partitions.items()}
+            lineage: dict[str, list] = {}
+            for table, appends in self._pending.items():
+                tables.setdefault(table, []).extend(
+                    a["path"] for a in appends)
+                for a in appends:
+                    if a.get("partition") is not None:
+                        partitions.setdefault(table, {})[a["path"]] = \
+                            a["partition"]
+                lineage[table] = [
+                    {"path": a["path"], "partition": a.get("partition"),
+                     "files": a["lineage"]} for a in appends
+                ]
+            snap = {
+                "id": snap_id,
+                "round": round_no,
+                "tables": tables,
+                "partitions": partitions,
+                "new_lineage": lineage,
+                "metrics": metrics or {},
+            }
+            tmp = os.path.join(self._snap_dir, f".tmp-{uuid.uuid4().hex}")
+            with open(tmp, "w") as fh:
+                json.dump(snap, fh, indent=1)
+            final = os.path.join(self._snap_dir,
+                                 f"snap-{snap_id:06d}.json")
+            os.rename(tmp, final)
+            self._committed = tables
+            self._partitions = partitions
+            self._pending = {}
+            self._last_snapshot = snap
+            return final
 
     # -- read -------------------------------------------------------------
 
@@ -322,14 +327,19 @@ class SnapshotStore:
             rewritten[tag] = {"old": dirs, "new": newdir}
         if rewritten:
             replaced = {p for rw in rewritten.values() for p in rw["old"]}
-            newlist = [p for p in committed if p not in replaced]
-            for tag, rw in rewritten.items():
-                newlist.append(rw["new"])
-                if tag is not None:
-                    tags[rw["new"]] = tag
-                for p in rw["old"]:
-                    tags.pop(p, None)
+            # swap against the CURRENT committed list, not the one read
+            # before the rewrite: a dir another thread appended and
+            # committed meanwhile must survive
             with self._pending_lock:
+                newlist = [p for p in self._committed.get(table, [])
+                           if p not in replaced]
+                tags = dict(self._partitions.get(table, {}))
+                for tag, rw in rewritten.items():
+                    newlist.append(rw["new"])
+                    if tag is not None:
+                        tags[rw["new"]] = tag
+                    for p in rw["old"]:
+                        tags.pop(p, None)
                 self._committed[table] = newlist
                 if tags:
                     self._partitions[table] = tags

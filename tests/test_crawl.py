@@ -138,8 +138,13 @@ def test_robots_disallow_and_delay(spark, tmp_path):
     assert BASE + "/world" not in urls
     assert BASE + "/" in urls
     assert BASE + "/mime/text/css" in urls
-    # delay recorded for the politeness budget (bounded literal cache)
-    assert crawler._rstate.delays.get("fixture:9999") == 1.0
+    # delay recorded in the robots table for the politeness budget
+    assert _robots_delays(crawler) == {"fixture:9999": 1.0}
+
+
+def _robots_delays(crawler):
+    return {r.authority: r.crawl_delay
+            for r in crawler.store.read("robots").collect()}
 
 
 def test_robots_blocks_everything_for_other_agent(spark, tmp_path):
@@ -149,59 +154,71 @@ def test_robots_blocks_everything_for_other_agent(spark, tmp_path):
     assert crawler.result_urls() == set()
 
 
-def test_can_fetch_join_equals_closure_path(spark):
-    """G4 at authority scale: the join-based evaluator must admit
-    exactly the rows the closure-based evaluator admits, for many
-    authorities with distinct rule sets (including no-rules and
-    empty-rules authorities)."""
-    import pandas as pd
-    from simplecrawler_spark.operators.robots import (
-        can_fetch_filter, can_fetch_join,
-    )
-    from pyspark.sql import functions as F
+def test_can_fetch_matches_robotfileparser(spark):
+    """G4: can_fetch admits exactly the rows a per-row stdlib
+    RobotFileParser admits, across agent-specific groups, empty
+    rules and authorities with no robots row at all."""
+    from urllib.robotparser import RobotFileParser
 
-    n_auth = 40
-    robots = pd.DataFrame({
-        "authority": [f"a{i}.test" for i in range(n_auth)],
-        "robots_txt": [
-            "" if i % 5 == 0 else
-            f"User-agent: *\nDisallow: /private{i % 3}\n"
-            for i in range(n_auth)],
-        "crawl_delay": [None] * n_auth,
-    })
+    from simplecrawler_spark.operators.robots import can_fetch
+
+    rules = {}
+    for i in range(40):
+        if i % 5 == 0:
+            rules[f"a{i}.test"] = ""
+        elif i % 5 == 1:
+            rules[f"a{i}.test"] = ("User-agent: Tester\nDisallow: /private1\n"
+                                   "\nUser-agent: *\nDisallow: /private2\n")
+        else:
+            rules[f"a{i}.test"] = f"User-agent: *\nDisallow: /private{i % 3}\n"
+    # a40..a49 have no robots row
     frontier = spark.range(600).select(
         F.concat(F.lit("a"), (F.col("id") % 50).cast("string"),
                  F.lit(".test")).alias("authority"),
         F.concat(F.lit("http://a"), (F.col("id") % 50).cast("string"),
                  F.lit(".test/private"), (F.col("id") % 4).cast("string"),
-                 F.lit("/p"), F.col("id").cast("string")).alias("url_norm"))
-    cfg = CrawlConfig()
-    via_closure = {r.url_norm for r in
-                   can_fetch_filter(frontier, robots, cfg).collect()}
-    robots_df = spark.createDataFrame(robots[["authority", "robots_txt"]])
-    via_join = {r.url_norm for r in
-                can_fetch_join(frontier, robots_df, cfg).collect()}
-    assert via_join == via_closure
-    assert 0 < len(via_join) < 600  # both gates actually filtered
+                 F.lit("/p"), F.col("id").cast("string")).alias("url_norm"),
+        F.col("id"))
+    robots_df = spark.createDataFrame(
+        sorted(rules.items()), "authority string, robots_txt string")
+    rows = frontier.collect()
+    for agent in ("Tester", "Other"):
+        want = set()
+        for r in rows:
+            rp = RobotFileParser()
+            rp.parse(rules.get(r.authority, "").splitlines())
+            if rp.can_fetch(agent, r.url_norm):
+                want.add(r.url_norm)
+        got = can_fetch(frontier, robots_df, CrawlConfig(user_agent=agent))
+        assert got.columns == frontier.columns
+        assert {r.url_norm for r in got.collect()} == want
+        assert 0 < len(want) < 600  # the gate actually filtered
+
+
+# (round, url_norm) of every fetched page of the robots fixture crawl
+# as Tester — captured from the closure-gate / literal-delay-map engines
+# before they were removed. round_seconds=10 leaves the Crawl-delay: 1
+# budget (10 per round) unconstrained; round_seconds=1 cuts it to one
+# page per round.
+ROBOTS_ROUNDS_UNBUDGETED = [
+    (0, BASE + "/"), (1, BASE + "/mime/image/png"),
+    (1, BASE + "/mime/text/css"), (1, BASE + "/mime/text/pdf")]
+ROBOTS_ROUNDS_DELAY_BUDGETED = [
+    (0, BASE + "/"), (1, BASE + "/mime/text/css"),
+    (2, BASE + "/mime/text/pdf"), (3, BASE + "/mime/image/png")]
+
+
+def _per_round(crawler):
+    return sorted((r.round, r.url_norm) for r in crawler.results().collect())
 
 
 def test_crawl_robots_join_path_same_visited_set(spark, tmp_path):
-    """Force the authority-scale branch (rules evaluated via
-    can_fetch_join against the persisted robots table, text cache
-    dropped) — the visited set must equal the closure-path crawl, and
-    the driver must never hold a rule-text cache."""
+    """The robots-table gate blocks /hello and /world for Tester and
+    fetches the rest in the pinned rounds."""
     rows = crawler_server_rows(BASE, robots_txt=ROBOTS_FIXTURE_TXT)
     cfg = CrawlConfig(user_agent="Tester", round_seconds=10.0)
-    want = crawl(spark, tmp_path / "closure", rows, BASE, cfg).result_urls()
-
-    cfg_join = CrawlConfig(user_agent="Tester", round_seconds=10.0,
-                           robots_closure_max=0)
-    crawler = crawl(spark, tmp_path / "join", rows, BASE, cfg_join)
-    got = crawler.result_urls()
-    assert got == want
-    assert BASE + "/hello" not in got
-    assert crawler._rstate.text_cache is None   # cache really dropped
-    assert crawler._rstate.use_join_gate
+    crawler = crawl(spark, tmp_path, rows, BASE, cfg)
+    assert _per_round(crawler) == ROBOTS_ROUNDS_UNBUDGETED
 
 
 def test_resume_reuses_persisted_robots(spark, tmp_path):
@@ -228,7 +245,8 @@ def test_resume_reuses_persisted_robots(spark, tmp_path):
     assert fetch_log == []  # rules came from the store, not the network
     urls = resumed.result_urls()
     assert BASE + "/hello" not in urls          # still enforced
-    assert resumed._rstate.delays.get("fixture:9999") == 1.0
+    assert _robots_delays(resumed) == {"fixture:9999": 1.0}
+    assert resumed._rstate.n_delays == 1
 
 
 def test_disobey_robots(spark, tmp_path):
@@ -259,16 +277,38 @@ def test_politeness_budget_defers_not_drops(spark, tmp_path):
     assert len(crawler.store.snapshots()) >= 6
 
 
-def test_politeness_join_equals_literal_path(spark):
-    """G5 at authority scale: schedule_budget_join (crawl_delay from
-    the robots table) must split the frontier exactly like the
-    literal-map path, for many authorities with and without delays,
-    including the cap interaction."""
-    from simplecrawler_spark.operators.politeness import (
-        schedule_budget, schedule_budget_join,
-    )
+def _python_split(rows, delays, cfg):
+    """Reference G5 split: per host, rows ranked by (priority,
+    url_hash); budget = min(cap, max(1, floor(round_seconds/delay)))
+    for a delayed authority, else the cap."""
+    import math
+
+    by_host = {}
+    for r in rows:
+        by_host.setdefault(r.host, []).append(r)
+    scheduled, deferred = set(), set()
+    for host_rows in by_host.values():
+        host_rows.sort(key=lambda r: (r.priority, r.url_hash))
+        for rank, r in enumerate(host_rows, 1):
+            delay = delays.get(r.authority)
+            budget = cfg.max_per_host_per_round
+            if delay is not None:
+                budget = min(budget,
+                             max(1, math.floor(cfg.round_seconds / delay)))
+            (scheduled if rank <= budget else deferred).add(r.url_norm)
+    return scheduled, deferred
+
+
+def test_schedule_budget_matches_python_split(spark):
+    """G5: schedule_budget splits the frontier exactly like a
+    pure-Python per-host ranking, on all three paths — fast path (no
+    delays, no cap), fixed cap, and delays joined from the robots
+    table (authorities with and without a delay row, and the cap
+    interaction)."""
+    from simplecrawler_spark.operators.politeness import schedule_budget
 
     delays = {f"a{i}.test": float(1 + i % 4) for i in range(0, 40, 2)}
+    delays["a2.test"] = 0.3  # floor(10/0.3) = 33 > cap: the cap wins
     frontier = spark.range(600).select(
         F.concat(F.lit("a"), (F.col("id") % 50).cast("string"),
                  F.lit(".test")).alias("authority"),
@@ -277,43 +317,37 @@ def test_politeness_join_equals_literal_path(spark):
         F.concat(F.lit("http://a"), (F.col("id") % 50).cast("string"),
                  F.lit(".test/p"), F.col("id").cast("string")).alias("url_norm"),
         F.col("id").alias("url_hash"),
-        F.lit(0.0).alias("priority"))
-    cfg = CrawlConfig(round_seconds=10.0, max_per_host_per_round=7)
-    s_lit, d_lit = schedule_budget(frontier, delays, cfg)
+        (F.col("id") % 7).cast("double").alias("priority"))
+    rows = frontier.collect()
     robots_df = spark.createDataFrame(
-        [(f"a{i}.test", "", delays.get(f"a{i}.test"))
-         for i in range(50)],
+        [(f"a{i}.test", "", delays.get(f"a{i}.test")) for i in range(45)],
         "authority string, robots_txt string, crawl_delay double")
-    s_join, d_join = schedule_budget_join(frontier, robots_df, cfg)
-    assert ({r.url_norm for r in s_join.collect()}
-            == {r.url_norm for r in s_lit.collect()})
-    assert ({r.url_norm for r in d_join.collect()}
-            == {r.url_norm for r in d_lit.collect()})
-    # the join path restores the frontier's column shape
-    assert s_join.columns == frontier.columns
-    assert d_join.count() > 0  # the budget actually deferred rows
+
+    def split(cfg, robots=None):
+        s, d = schedule_budget(frontier, cfg, robots)
+        assert s.columns == frontier.columns == d.columns
+        return ({r.url_norm for r in s.collect()},
+                {r.url_norm for r in d.collect()})
+
+    cfg = CrawlConfig(round_seconds=10.0, max_per_host_per_round=7)
+    want = _python_split(rows, delays, cfg)
+    assert split(cfg, robots_df) == want
+    assert want[1]  # the budget actually deferred rows
+    assert split(cfg) == _python_split(rows, {}, cfg)
+    unlimited = CrawlConfig(round_seconds=10.0)
+    assert split(unlimited) == ({r.url_norm for r in rows}, set())
+    assert split(unlimited, robots_df) == _python_split(rows, delays,
+                                                        unlimited)
 
 
 def test_crawl_politeness_join_path_same_visited_set(spark, tmp_path):
-    """Force the authority-scale politeness branch (budget from a join
-    against the persisted robots table, literal delay map dropped) —
-    visited set AND per-round scheduling must equal the literal-map
-    crawl."""
+    """With Crawl-delay: 1 and round_seconds=1 the budget joined from
+    the robots table fetches one page per round, in the pinned
+    rounds."""
     rows = crawler_server_rows(BASE, robots_txt=ROBOTS_FIXTURE_TXT)
-    cfg = CrawlConfig(user_agent="Tester", round_seconds=10.0)
-    want = crawl(spark, tmp_path / "literal", rows, BASE, cfg)
-
-    cfg_join = CrawlConfig(user_agent="Tester", round_seconds=10.0,
-                           robots_delay_map_max=0)
-    got = crawl(spark, tmp_path / "join", rows, BASE, cfg_join)
-    assert got._rstate.delays is None and got._rstate.use_delay_join
-
-    def per_round(c):
-        return sorted((r.round, r.url_norm)
-                      for r in c.results().collect())
-
-    assert got.result_urls() == want.result_urls()
-    assert per_round(got) == per_round(want)
+    cfg = CrawlConfig(user_agent="Tester", round_seconds=1.0)
+    crawler = crawl(spark, tmp_path, rows, BASE, cfg)
+    assert _per_round(crawler) == ROBOTS_ROUNDS_DELAY_BUDGETED
 
 
 def test_resume_identical_final_state(spark, tmp_path):

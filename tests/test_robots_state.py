@@ -1,16 +1,13 @@
-"""Bounded driver-side robots state (round-3 verdict item 1).
-
-The persisted robots TABLE is the single source of truth; the driver
-holds counters + an authority bloom + caches that are dropped
-permanently past the closure/delay limits. These tests pin:
-  * AuthorityBloom determinism, persistence, distributed rebuild;
-  * RobotsState cache-drop at the closure limit (including a >10k-
-    authority run where the driver never re-materialises rule text);
-  * split_missing exactness past the cache (bloom split + confirm
-    anti-join — a bloom false positive can never skip a robots fetch);
-  * multi-authority crawls: join-gate visited set == closure-gate
-    visited set, with the text cache provably gone;
-  * resume reconstructing the bounded view from the table.
+"""Driver-side robots state: three counters over the persisted robots
+table, which is the only rule source for the gate and the politeness
+window. These tests pin:
+  * split_missing exactness (one anti-join against the table, skipped
+    while the table is empty) at 12k authorities;
+  * the counter rebuild in from_table (the resume path);
+  * multi-authority crawls through the table gate, including a crawl
+    killed and resumed: the robots table keeps exactly one row per
+    authority (a duplicate row would make the gate's left join fetch
+    a page twice).
 
 Reference semantics preserved throughout: error→empty rules allow all,
 per-user-agent evaluation (/root/reference/simple_crawler/crawler.py:182-194).
@@ -22,125 +19,26 @@ import pytest
 from pyspark.sql import functions as F
 
 from simplecrawler_spark.config import CrawlConfig
-from simplecrawler_spark.operators.robots import (
-    AuthorityBloom, RobotsState,
-)
+from simplecrawler_spark.operators.robots import RobotsState
 from simplecrawler_spark.plans.crawl import FrontierCrawler
-from simplecrawler_spark.plans.tables import SidecarIO
 from simplecrawler_spark.sources.fetch import TableFetcher
 from simplecrawler_spark.sources.fixtures import (
     _row, make_html_from_links, site_graph_df,
 )
 
 
-# -- AuthorityBloom ----------------------------------------------------------
-
-def test_authority_bloom_membership_and_roundtrip(tmp_path):
-    bloom = AuthorityBloom(capacity=4096)
-    names = [f"a{i}.example.test" for i in range(2000)]
-    for n in names:
-        bloom.add(n)
-    # no false negatives, ever
-    assert all(bloom.might_contain(n) for n in names)
-    # false positives are rare at this fill
-    fps = sum(bloom.might_contain(f"other{i}.test") for i in range(2000))
-    assert fps < 100
-    # byte round-trip is exact (sidecar persistence)
-    io_obj = SidecarIO(str(tmp_path / "sc"))
-    io_obj.write_bytes("authority_bloom.npz", bloom.to_bytes())
-    back = AuthorityBloom.from_bytes(io_obj.read_bytes("authority_bloom.npz"))
-    assert back.added == 2000
-    assert all(back.might_contain(n) for n in names)
-    assert back.might_contain("never-added.test") == \
-        bloom.might_contain("never-added.test")
-
-
-def test_authority_bloom_distributed_rebuild(spark):
-    """add_df (the resume-without-sidecar path) must agree with
-    driver-side adds: partial bitsets OR to the same filter."""
-    names = [f"h{i}.test" for i in range(500)]
-    seq = AuthorityBloom(capacity=2048)
-    for n in names:
-        seq.add(n)
-    dist = AuthorityBloom(capacity=2048)
-    df = spark.createDataFrame([(n,) for n in names], "authority string") \
-              .repartition(8)
-    dist.add_df(df)
-    assert dist.added == 500
-    assert (dist.bits == seq.bits).all()
-
-
-# -- RobotsState bounds ------------------------------------------------------
-
 def _robots_df(spark, rows):
     return spark.createDataFrame(
         rows, "authority string, robots_txt string, crawl_delay double")
 
 
-def test_state_drops_text_cache_past_closure_max(spark):
-    st = RobotsState(closure_max=3, delay_max=100)
-    batch1 = _robots_df(spark, [
-        ("a0.test", "User-agent: *\nDisallow: /x\n", None),
-        ("a1.test", "", None),
-    ])
-    st.register_fetched(batch1, {"a0.test": "http", "a1.test": "http"}, 2)
-    assert st.text_cache is not None and not st.use_join_gate
-    assert (st.n_authorities, st.n_nonempty) == (2, 1)
-    frame = st.robots_frame()
-    assert set(frame["authority"]) == {"a0.test", "a1.test"}
-
-    batch2 = _robots_df(spark, [
-        ("a2.test", "User-agent: *\nCrawl-delay: 2\n", 2.0),
-        ("a3.test", "", None),
-    ])
-    st.register_fetched(batch2, {"a2.test": "http", "a3.test": "http"}, 2)
-    # crossed closure_max=3 → cache dropped PERMANENTLY, counters live on
-    assert st.text_cache is None and st.use_join_gate
-    assert (st.n_authorities, st.n_nonempty, st.n_delays) == (4, 2, 1)
-    assert st.delays == {"a2.test": 2.0}
-    with pytest.raises(RuntimeError):
-        st.robots_frame()
-    # membership still exact: knowns resolve via bloom+confirm
-    table = _robots_df(spark, [
-        ("a0.test", "x", None), ("a1.test", "", None),
-        ("a2.test", "y", 2.0), ("a3.test", "", None)])
-    missing = st.split_missing(
-        {"a1.test": "http", "a9.test": "https"}, table)
-    assert missing == {"a9.test": "https"}
-
-
-def test_state_delay_map_dropped_past_delay_max(spark):
-    st = RobotsState(closure_max=100, delay_max=2)
-    rows = [(f"d{i}.test", f"User-agent: *\nCrawl-delay: {i + 1}\n",
-             float(i + 1)) for i in range(4)]
-    st.register_fetched(_robots_df(spark, rows),
-                        {r[0]: "http" for r in rows}, 4)
-    assert st.n_delays == 4
-    assert st.delays is None and st.use_delay_join
-    assert st.any_delays  # the budgeted flag survives the drop
-
-
-def test_state_split_missing_confirm_join_beats_bloom_fp(spark):
-    """Force bloom false positives (tiny filter, saturated) — the
-    confirm anti-join must still fetch every truly-missing authority."""
-    st = RobotsState(closure_max=0, delay_max=10,
-                     bloom_capacity=1)  # minimum m → FPs guaranteed-ish
-    known = [(f"k{i}.test", "", None) for i in range(300)]
-    st.register_fetched(_robots_df(spark, known),
-                        {a: "http" for a, *_ in known}, 300)
-    table = _robots_df(spark, known)
-    pending = {f"k{i}.test": "http" for i in range(0, 300, 7)}
-    pending.update({f"new{i}.test": "http" for i in range(40)})
-    missing = st.split_missing(pending, table)
-    assert missing == {f"new{i}.test": "http" for i in range(40)}
-
-
 def test_state_scales_past_10k_authorities(spark):
-    """The judge's forcing test: >10k authorities flow through the
-    state at the DEFAULT closure limit; the text cache drops exactly
-    at the crossing, the driver never re-materialises rule text, and
-    membership stays exact."""
-    st = RobotsState()  # default closure_max = 10_000
+    """12k authorities fold into the counters with one aggregate and
+    membership stays exact: every known authority is dropped, every
+    new one kept."""
+    st = RobotsState()
+    # an empty table never runs the anti-join (robots_df is not read)
+    assert st.split_missing({"a.test": "http"}, None) == {"a.test": "http"}
     n = 12_000
     rows_df = spark.range(n).select(
         F.concat(F.lit("h"), F.col("id"), F.lit(".test")).alias("authority"),
@@ -149,38 +47,33 @@ def test_state_scales_past_10k_authorities(spark):
          .otherwise(F.lit("")).alias("robots_txt"),
         F.when(F.col("id") % 100 == 0, F.lit(1.5))
          .otherwise(F.lit(None).cast("double")).alias("crawl_delay"))
-    auths = {f"h{i}.test": "http" for i in range(n)}
-    st.register_fetched(rows_df, auths, n)
-    assert st.text_cache is None          # crossed 10k → dropped
-    assert st.n_authorities == n
-    assert st.n_nonempty == n // 3
-    assert st.n_delays == n // 100
-    assert st.delays is not None and len(st.delays) == n // 100
-    missing = st.split_missing(
-        {"h11999.test": "http", "brand-new.test": "http"}, rows_df)
-    assert missing == {"brand-new.test": "http"}
+    st.register_fetched(rows_df)
+    assert (st.n_authorities, st.n_nonempty, st.n_delays) == (
+        n, n // 3, n // 100)
+    assert st.any_rules and st.any_delays
+    pending = {f"h{i}.test": "http" for i in range(0, n, 7)}
+    pending.update({f"new{i}.test": "https" for i in range(40)})
+    assert st.split_missing(pending, rows_df) == {
+        f"new{i}.test": "https" for i in range(40)}
 
 
-def test_state_from_table_past_closure(spark, tmp_path):
+def test_state_from_table_past_closure(spark):
+    """Resume path: from_table rebuilds all three counters from the
+    table with one aggregate, and split_missing reads the table."""
     rows = [(f"r{i}.test",
              "" if i % 2 else "User-agent: *\nDisallow: /no\n",
              3.0 if i == 1 else None) for i in range(20)]
     table = _robots_df(spark, rows)
-    st = RobotsState.from_table(table, sidecar=None, closure_max=5,
-                                delay_max=10)
-    assert st.text_cache is None and st.use_join_gate
+    st = RobotsState.from_table(table)
     assert (st.n_authorities, st.n_nonempty, st.n_delays) == (20, 10, 1)
-    assert st.delays == {"r1.test": 3.0}
-    # bloom was rebuilt distributed (no sidecar): membership exact
     assert st.split_missing({"r7.test": "http", "zz.test": "http"},
                             table) == {"zz.test": "http"}
-    # and within the bound the cache loads fully
-    st2 = RobotsState.from_table(table, sidecar=None, closure_max=100,
-                                 delay_max=10)
-    assert st2.text_cache is not None and len(st2.text_cache) == 20
+    empty = RobotsState.from_table(_robots_df(spark, []))
+    assert (empty.n_authorities, empty.any_rules, empty.any_delays) == (
+        0, False, False)
 
 
-# -- multi-authority crawl through the join gate -----------------------------
+# -- multi-authority crawl through the table gate ----------------------------
 
 def _multi_authority_rows(n_auth: int):
     """n_auth authorities in a root→next-root chain; even authorities
@@ -199,9 +92,23 @@ def _multi_authority_rows(n_auth: int):
     return rows
 
 
+def _want(n_auth: int) -> set[str]:
+    want = {f"http://a{i}.test/" for i in range(n_auth)}
+    return want | {f"http://a{i}.test/secret"
+                   for i in range(n_auth) if i % 2}
+
+
+def _robots_rows_per_authority(crawler) -> dict[str, int]:
+    counts = (crawler.store.read("robots").groupBy("authority").count()
+              .collect())
+    return {r.authority: r["count"] for r in counts}
+
+
 @pytest.mark.parametrize("closure_max", [10_000, 2])
 def test_multi_authority_crawl_join_gate_same_set(spark, tmp_path,
                                                   closure_max):
+    """The table gate enforces each authority's rules. The retired
+    robots_closure_max knob is still accepted and changes nothing."""
     n_auth = 8
     rows = _multi_authority_rows(n_auth)
     cfg = CrawlConfig(same_authority_only=False,
@@ -210,40 +117,60 @@ def test_multi_authority_crawl_join_gate_same_set(spark, tmp_path,
     crawler = FrontierCrawler(spark, fetcher, cfg,
                               root=str(tmp_path / "crawl"))
     crawler.crawl("http://a0.test/")
-    urls = crawler.result_urls()
-    want = {f"http://a{i}.test/" for i in range(n_auth)}
-    want |= {f"http://a{i}.test/secret" for i in range(n_auth) if i % 2}
-    assert urls == want
+    assert crawler.result_urls() == _want(n_auth)
     assert crawler._rstate.n_authorities == n_auth
-    if closure_max < n_auth:
-        # forced past the bound mid-crawl: cache really dropped, gate
-        # ran relationally, rules still enforced (no even /secret)
-        assert crawler._rstate.text_cache is None
-        assert crawler._rstate.use_join_gate
+    assert crawler._rstate.n_nonempty == n_auth // 2
 
 
 def test_resume_past_closure_keeps_bounded_view(spark, tmp_path):
+    """A resumed crawl rebuilds the counters from the table and ends
+    with the uninterrupted crawl's results."""
     rows = _multi_authority_rows(6)
-    cfg = CrawlConfig(same_authority_only=False, robots_closure_max=2,
-                      max_rounds=2)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=2)
     fetcher = TableFetcher(site_graph_df(spark, rows), cfg)
     crawler = FrontierCrawler(spark, fetcher, cfg,
                               root=str(tmp_path / "crawl"))
     crawler.crawl("http://a0.test/")  # partial (2 rounds)
-    cfg2 = CrawlConfig(same_authority_only=False, robots_closure_max=2,
-                       max_rounds=50)
+    cfg2 = CrawlConfig(same_authority_only=False, max_rounds=50)
     resumed = FrontierCrawler.resume(
         spark, TableFetcher(site_graph_df(spark, rows), cfg2),
         crawler.root, cfg2)
     resumed.continue_crawl()
-    # the view was rebuilt BOUNDED from the table (continue_crawl's
-    # from_table) and stayed bounded through the remaining rounds
-    assert resumed._rstate.text_cache is None
-    assert resumed._rstate.use_join_gate
     assert resumed._rstate.n_authorities == 6
-    want_cfg = CrawlConfig(same_authority_only=False, max_rounds=50)
-    full = FrontierCrawler(
-        spark, TableFetcher(site_graph_df(spark, rows), want_cfg),
-        want_cfg, root=str(tmp_path / "full"))
-    full.crawl("http://a0.test/")
-    assert resumed.result_urls() == full.result_urls()
+    assert resumed._rstate.n_nonempty == 3
+    assert resumed.result_urls() == _want(6)
+
+
+def test_robots_table_one_row_per_authority_after_kill_and_resume(
+        spark, tmp_path):
+    """Kill a multi-authority crawl while round 2 commits — after that
+    round appended its robots rows — then resume: the robots table
+    holds exactly one row per authority and the results equal the
+    uninterrupted crawl."""
+    n_auth = 6
+    rows = _multi_authority_rows(n_auth)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=50)
+    root = str(tmp_path / "killed")
+    killed = FrontierCrawler(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg, root=root)
+    commit = killed.store.commit_snapshot
+
+    def crash_at_round_2(round_no, metrics=None):
+        if round_no == 2:
+            raise RuntimeError("killed")
+        return commit(round_no, metrics)
+
+    killed.store.commit_snapshot = crash_at_round_2
+    with pytest.raises(RuntimeError, match="killed"):
+        killed.crawl("http://a0.test/")
+    assert _robots_rows_per_authority(killed) == {
+        f"a{i}.test": 1 for i in range(3)}
+
+    resumed = FrontierCrawler.resume(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
+    resumed.continue_crawl()
+    assert _robots_rows_per_authority(resumed) == {
+        f"a{i}.test": 1 for i in range(n_auth)}
+    assert resumed._rstate.n_authorities == n_auth
+    assert resumed.result_urls() == _want(n_auth)
+    assert resumed.results().count() == len(_want(n_auth))

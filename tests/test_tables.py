@@ -191,6 +191,43 @@ def test_compact_leaves_pending_and_small_groups(spark, tmp_path):
     assert st.read("seen", partition="rB").count() == 1
 
 
+def test_compact_keeps_dir_committed_during_rewrite(spark, tmp_path,
+                                                   monkeypatch):
+    """A dir appended and committed while compact() rewrites (here:
+    from inside the rewrite's own parquet write) survives the swap,
+    keeps its partition tag, and stays in the next commit's manifest."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    st = _store(spark, tmp_path)
+    for r in range(3):
+        st.append("seen", spark.createDataFrame(
+            [(r, f"http://h{r}/", 0, r)], schemas.SEEN), partition="r0")
+        st.commit_snapshot(r)
+    write = DataFrameWriter.parquet
+    late: list[str] = []
+
+    def racing_write(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if not late:  # the rewrite's write; the append below writes too
+            late.append("")
+            late[0] = st.append("seen", spark.createDataFrame(
+                [(99, "http://late/", 0, 3)], schemas.SEEN), partition="r1")
+            st.commit_snapshot(3)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing_write)
+    out = st.compact("seen")
+    monkeypatch.undo()
+    assert out["groups_rewritten"] == 1
+    assert late[0] in st._committed["seen"]
+    assert st.read("seen").count() == 4
+    assert st.read("seen", partition="r1").count() == 1
+    st.commit_snapshot(4)
+    assert late[0] in st.last_snapshot["tables"]["seen"]
+    st2 = _store(spark, tmp_path)
+    assert st2.read("seen").count() == 4
+    assert st2.read("seen", partition="r1").count() == 1
+
+
 def test_compact_merge_partitions(spark, tmp_path):
     """merge_partitions=True collapses every committed dir into one
     untagged dir; rowset unchanged, and pruned reads keep the
