@@ -8,6 +8,8 @@ the properties the 100 TB design depends on:
   * predicate pushdown: PushedFilters non-empty where a filter exists
   * whole-stage codegen present on the JVM paths
   * the politeness fast path plans NO exchange when unconstrained
+  * the budgeted politeness split runs the robots gate once, beneath
+    the one cached relation both of its sides scan
   * the canonical fast path keeps one (and only one) Arrow eval per
     canonicalisation chain
 """
@@ -44,7 +46,10 @@ def main():
 
     import __spark_entry__ as E
     from simplecrawler_spark.config import CrawlConfig
-    from simplecrawler_spark.operators.politeness import schedule_budget
+    from simplecrawler_spark.operators.politeness import (
+        rank_budget, schedule_budget, split_budget,
+    )
+    from simplecrawler_spark.operators.robots import can_fetch
 
     # AQE off for the audit: explain() on an AdaptiveSparkPlan shows
     # the pre-execution plan without codegen annotations
@@ -117,6 +122,28 @@ def main():
                    and n_ops(plan, "ArrowEvalPython") == 1,
                    f"joins={n_joins}, "
                    f"arrow_evals={n_ops(plan, 'ArrowEvalPython')}"))
+
+    # 3c. budgeted politeness split: both sides filter the one cached
+    # gated, ranked frontier, so the gate's Arrow eval runs beneath it
+    frontier = ev.withColumn("url_norm", F.concat(
+        F.lit("http://"), F.col("authority"), F.lit("/p")))
+    gated = can_fetch(frontier, F.broadcast(spark.createDataFrame(
+        [("1", "User-agent: *\nDisallow: /p\n")],
+        "authority string, robots_txt string")), CrawlConfig())
+    ranked = rank_budget(gated, CrawlConfig(
+        max_per_host_per_round=5)).persist()
+    sides = [formatted(side).split("\n\n")[0]  # the plan tree
+             for side in split_budget(ranked, gated.columns)]
+    cached = [pl[pl.find("InMemoryRelation"):] for pl in sides]
+    sections.append(("budgeted politeness split (scheduled)", sides[0]))
+    checks.append(
+        ("budgeted politeness split: one gate Arrow eval beneath the one "
+         "cached relation both sides scan",
+         all(pl.count("InMemoryTableScan") == 1
+             and pl.count("ArrowEvalPython") == 1 for pl in sides)
+         and "ArrowEvalPython" in cached[0] and cached[0] == cached[1],
+         f"arrow_evals={[pl.count('ArrowEvalPython') for pl in sides]}"))
+    ranked.unpersist()
 
     # 4. seen anti-join structure
     plan = formatted(qs["q_seen_antijoin"](spark, SF_DIR))

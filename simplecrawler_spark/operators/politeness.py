@@ -47,23 +47,23 @@ def _budget_from_delay(delay: Column, cfg: CrawlConfig) -> Column:
                   F.least(budget, from_delay)).otherwise(budget)
 
 
-def schedule_budget(frontier: DataFrame, cfg: CrawlConfig,
-                    robots_df: DataFrame | None = None
-                    ) -> tuple[DataFrame, DataFrame]:
-    """Split a round's frontier into (scheduled, deferred) by per-host
-    budget. Returns both; deferred must be re-appended to the next
-    round's frontier.
+def rank_budget(frontier: DataFrame, cfg: CrawlConfig,
+                robots_df: DataFrame | None = None) -> DataFrame:
+    """The frontier plus a boolean ``_deferred`` column: the row ranks
+    past its host's budget and waits for the next round.
 
-    * no ``robots_df`` and an unconstrained per-host cap: every row is
-      scheduled — the per-host window (a shuffle on host) is skipped;
+    * no ``robots_df`` and an unconstrained per-host cap: ``_deferred``
+      is a constant False — no per-host window (a shuffle on host);
     * no ``robots_df``: every host gets the fixed cap;
     * ``robots_df`` (authority, …, crawl_delay): a row whose authority
       has a delay gets min(cap, max(1, floor(round_seconds/delay))),
-      any other row the cap. The join adds no rows and the frontier's
-      column shape is restored.
-    """
+      any other row the cap. The join adds no rows.
+
+    A caller that reads both sides persists this frame once and splits
+    it with split_budget, so whatever feeds it (the robots gate) runs
+    once."""
     if robots_df is None and cfg.max_per_host_per_round >= UNLIMITED_BUDGET:
-        return frontier, frontier.limit(0)
+        return frontier.withColumn("_deferred", F.lit(False))
     ranked = frontier
     budget = F.lit(int(cfg.max_per_host_per_round))
     if robots_df is not None:
@@ -73,11 +73,25 @@ def schedule_budget(frontier: DataFrame, cfg: CrawlConfig,
         budget = _budget_from_delay(F.col("crawl_delay"), cfg)
     w = Window.partitionBy("host").orderBy(
         F.col("priority").asc(), F.col("url_hash").asc())
-    ranked = ranked.withColumn("_rank", F.row_number().over(w)) \
-                   .withColumn("_budget", budget)
-    cols = frontier.columns
-    return (ranked.filter(F.col("_rank") <= F.col("_budget")).select(cols),
-            ranked.filter(F.col("_rank") > F.col("_budget")).select(cols))
+    return ranked.withColumn("_deferred", F.row_number().over(w) > budget)
+
+
+def split_budget(ranked: DataFrame, columns: list[str]
+                 ) -> tuple[DataFrame, DataFrame]:
+    """(scheduled, deferred) filters of a rank_budget frame, restored
+    to the frontier's ``columns``."""
+    return (ranked.filter(~F.col("_deferred")).select(columns),
+            ranked.filter(F.col("_deferred")).select(columns))
+
+
+def schedule_budget(frontier: DataFrame, cfg: CrawlConfig,
+                    robots_df: DataFrame | None = None
+                    ) -> tuple[DataFrame, DataFrame]:
+    """Split a round's frontier into (scheduled, deferred) by per-host
+    budget (rank_budget, then split_budget). Deferred must be
+    re-appended to the next round's frontier."""
+    return split_budget(rank_budget(frontier, cfg, robots_df),
+                        frontier.columns)
 
 
 def apply_global_budget(scheduled: DataFrame, deferred: DataFrame,

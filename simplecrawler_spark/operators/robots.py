@@ -18,7 +18,8 @@ The reference is single-site (one robots fetch per crawl); the engine
 generalises to one robots row per authority, built by fetching
 `scheme://authority/robots.txt` through the same fetcher used for
 pages. The persisted robots table is the only rule source; the driver
-keeps three counters over it (RobotsState).
+keeps three counters over it (RobotsState), read from the footers of
+the dirs each fetch appends.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from simplecrawler_spark.config import CrawlConfig
+from simplecrawler_spark.plans.tables import footer_counts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
 
 
@@ -54,13 +56,16 @@ def _fetch_robots_rows(fetcher, df: DataFrame) -> DataFrame:
 
 def _gate_robots_df(fetched: DataFrame) -> DataFrame:
     """(authority, robots_txt) — 2xx text/plain bodies kept, anything
-    else → empty rules (crawler.py:191-192 error→empty parity)."""
+    else → empty rules (crawler.py:191-192 error→empty parity). Empty
+    rules are stored as NULL, so the footers' null count tells the
+    driver whether any rule exists (can_fetch and crawl_delay_col read
+    NULL as empty)."""
     ok = (status_class_expr(F.col("status")) == 2) & mime_ok_expr(
         F.col("content_type"), ("text/plain",))
     return fetched.select(
         "authority",
-        F.when(ok, F.coalesce(F.col("body"), F.lit("")))
-         .otherwise(F.lit("")).alias("robots_txt"))
+        F.when(ok & (F.col("body") != ""), F.col("body"))
+         .alias("robots_txt"))
 
 
 def crawl_delay_col(robots_txt, user_agent: str):
@@ -104,21 +109,20 @@ def sitemap_urls_expr(robots_txt) -> "F.Column":
     return F.regexp_extract_all(robots_txt, F.lit(SITEMAP_LINE_RE), 1)
 
 
-def fetch_robots_table(spark, auth_scheme: dict[str, str], fetcher,
+def fetch_robots_table(missing: DataFrame, fetcher,
                        cfg: CrawlConfig) -> DataFrame:
-    """Fetch robots.txt for a driver-side {authority: scheme} dict of
-    PENDING authorities (bounded by one round's discovery, never the
-    cumulative crawl) and return a (authority, robots_txt, crawl_delay)
-    DataFrame ready to append to the robots table. The text and the
-    delay parse stay executor-side end to end."""
-    rows = [
-        (f"{scheme}://{auth}/robots.txt", f"{scheme}://{auth}/robots.txt",
-         auth, auth, 0, 0.0, -1)
-        for auth, scheme in sorted(auth_scheme.items()) if auth
-    ]
-    df = spark.createDataFrame(
-        rows, "url_norm string, url_raw string, host string, "
-              "authority string, depth int, priority double, round int")
+    """Fetch robots.txt for ``missing`` (authority, scheme) rows — the
+    lazy frame RobotsState.split_missing returns — and return a
+    (authority, robots_txt, crawl_delay) DataFrame ready to append to
+    the robots table. Authorities, rule text and the delay parse stay
+    executor-side end to end."""
+    url = F.concat(F.col("scheme"), F.lit("://"), F.col("authority"),
+                   F.lit("/robots.txt"))
+    df = missing.select(
+        url.alias("url_norm"), url.alias("url_raw"),
+        F.col("authority").alias("host"), "authority",
+        F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
+        F.lit(-1).alias("round"))
     gated = _gate_robots_df(_fetch_robots_rows(fetcher, df))
     return gated.select(
         "authority", "robots_txt",
@@ -172,7 +176,11 @@ class RobotsState:
     ``n_nonempty`` (rows with rule text — none means the gate can be
     skipped, since empty rules allow everything) and ``n_delays`` (rows
     with a Crawl-delay — any means the politeness window joins the
-    table). Rule text and delays never live on the driver."""
+    table). All three come from parquet footers: the row count and the
+    null counts of ``robots_txt`` and ``crawl_delay``. A rule chunk
+    without statistics (a robots.txt over 4 KB) counts as non-empty,
+    which only ever keeps the gate on. Rule text, delays and
+    authorities never live on the driver."""
 
     def __init__(self):
         self.n_authorities = 0
@@ -187,39 +195,37 @@ class RobotsState:
     def any_delays(self) -> bool:
         return self.n_delays > 0
 
-    def split_missing(self, pending: dict[str, str],
-                      robots_df: DataFrame) -> dict[str, str]:
-        """The subset of ``pending`` {authority: scheme} NOT yet in the
-        robots table: one column-pruned anti-join collect, skipped
-        while the table is empty."""
-        if not pending or not self.n_authorities:
-            return pending
-        # a pandas frame rides Arrow into the JVM: about half the
-        # cost of Python rows at a few hundred authorities
-        mdf = robots_df.sparkSession.createDataFrame(
-            pd.DataFrame({"authority": sorted(pending)}), "authority string")
-        return {row.authority: pending[row.authority]
-                for row in mdf.join(robots_df.select("authority"),
-                                    "authority", "left_anti").collect()}
+    def split_missing(self, frontier: DataFrame,
+                      robots_df: DataFrame) -> DataFrame:
+        """Lazy (authority, scheme) frame of the ``frontier``'s distinct
+        authorities NOT yet in the robots table (scheme: the least one
+        the authority's urls use). The anti-join is skipped while the
+        table is empty."""
+        auths = (frontier.where(F.col("authority") != "")
+                 .groupBy("authority")
+                 .agg(F.min(F.split(F.col("url_norm"), "://").getItem(0))
+                      .alias("scheme")))
+        if not self.n_authorities:
+            return auths
+        return auths.join(robots_df.select("authority"), "authority",
+                          "left_anti")
 
-    def register_fetched(self, appended_df: DataFrame) -> None:
-        """Fold robots rows (one round's append, or the whole table on
-        resume) into the counters with one aggregate."""
-        agg = appended_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.coalesce(F.col("robots_txt"), F.lit("")) != F.lit(""))
-                  .cast("long")).alias("ne"),
-            F.count("crawl_delay").alias("nd")).collect()[0]
-        self.n_authorities += int(agg.n or 0)
-        self.n_nonempty += int(agg.ne or 0)
-        self.n_delays += int(agg.nd or 0)
+    def register_fetched(self, paths: list[str]) -> int:
+        """Fold robots table dirs (one round's append, or the whole
+        table on resume) into the counters from their parquet footers;
+        returns the rows they hold."""
+        rows, nulls = footer_counts(paths, ("robots_txt", "crawl_delay"))
+        self.n_authorities += rows
+        self.n_nonempty += rows - nulls["robots_txt"]
+        self.n_delays += rows - nulls["crawl_delay"]
+        return rows
 
     @classmethod
-    def from_table(cls, robots_df: DataFrame) -> "RobotsState":
-        """Resume path: the counters from one aggregate over the
-        table."""
+    def from_table(cls, paths: list[str]) -> "RobotsState":
+        """Resume path: the counters from the footers of the table's
+        data dirs."""
         st = cls()
-        st.register_fetched(robots_df)
+        st.register_fetched(paths)
         return st
 
 

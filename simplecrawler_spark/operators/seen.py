@@ -153,8 +153,7 @@ class BloomSeen:
 
     def add_df(self, df: DataFrame, url_col: str = "url_norm",
                host_col: str = "host",
-               row_count: int | None = None,
-               collect_authorities: bool = False) -> dict[str, str] | None:
+               row_count: int | None = None) -> None:
         """OR the bits for every row of ``df`` into the bitsets.
         A precomputed ``host_bucket`` column is used when present
         (e.g. rebuilding straight from the seen table).
@@ -168,43 +167,27 @@ class BloomSeen:
 
         Small batches (``row_count`` hint below ~64k) skip the shuffle:
         positions come straight to the driver in one Arrow pass.
-
-        ``collect_authorities=True`` piggybacks the round's distinct
-        {authority: scheme} map (needed driver-side for robots
-        discovery) onto this same pass — the crawl loop saves one
-        whole distinct-collect job per round. Requires ``df`` to carry
-        ``authority`` and ``url_norm`` columns; returns the dict.
         """
         bucket = (F.col("host_bucket") if "host_bucket" in df.columns
                   else host_bucket_expr(F.col(host_col), self.n_buckets))
-        auths: dict[str, str] = {}
-        extra = ([F.col("authority").alias("a"),
-                  F.split(F.col(url_col), "://").getItem(0).alias("s")]
-                 if collect_authorities else [])
         h1e, h2e = self.hash_exprs(F.col(url_col))
         if row_count is not None and row_count < 65536:
             pdf = df.select(
                 bucket.alias("b"),
                 h1e.alias("h1"), h2e.alias("h2"),
-                *extra,
             ).toPandas()
             if pdf.empty:
-                return auths if collect_authorities else None
+                return
             for b, grp in pdf.groupby("b"):
                 pos = self._expand_positions(
                     grp["h1"].to_numpy(), grp["h2"].to_numpy()).ravel()
                 bits = self.bits[int(b)]
                 np.bitwise_or.at(bits, pos >> 3,
                                  np.left_shift(1, (pos & 7)).astype(np.uint8))
-            if collect_authorities:
-                for a, s in zip(pdf["a"], pdf["s"]):
-                    if a:
-                        auths.setdefault(a, s or "http")
             self.added += len(pdf)
             self._version += 1
-            return auths if collect_authorities else None
+            return
         m, k = self.m, self.k
-        want_auths = collect_authorities
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
             pos = _double_hash_positions(
@@ -212,25 +195,16 @@ class BloomSeen:
             bits = np.zeros(m // 8, dtype=np.uint8)
             np.bitwise_or.at(bits, pos >> 3,
                              np.left_shift(1, (pos & 7)).astype(np.uint8))
-            if want_auths:
-                pairs = {f"{s or 'http'} {a}"
-                         for a, s in zip(pdf["a"], pdf["s"]) if a}
-                bucket_auths = sorted(pairs)
-            else:
-                bucket_auths = []
             return pd.DataFrame({"b": [int(pdf["b"].iloc[0])],
                                  "bits": [bits.tobytes()],
-                                 "n": [len(pdf)],
-                                 "auths": [bucket_auths]})
+                                 "n": [len(pdf)]})
 
         rows = (
             df.select(
                 bucket.alias("b"),
-                h1e.alias("h1"), h2e.alias("h2"),
-                *extra)
+                h1e.alias("h1"), h2e.alias("h2"))
             .groupBy("b")
-            .applyInPandas(build,
-                           "b int, bits binary, n long, auths array<string>")
+            .applyInPandas(build, "b int, bits binary, n long")
             .collect()
         )
         for row in rows:
@@ -238,12 +212,8 @@ class BloomSeen:
                           np.frombuffer(row.bits, dtype=np.uint8),
                           out=self.bits[int(row.b)])
             self.added += row.n
-            for pair in row.auths or []:
-                s, _, a = pair.partition(" ")
-                auths.setdefault(a, s)
         if rows:
             self._version += 1
-        return auths if collect_authorities else None
 
     # -- membership ---------------------------------------------------------
 

@@ -7,18 +7,21 @@ north rule mandates (BASELINE.json:6,14):
 
     Round r:
       frontier_r  = read frontier WHERE round = r       (file-pruned scan)
-      eligible    = frontier_r ⟕ anti-join(results)     (R5 done-skip)
+      robots     += fetch robots.txt of frontier_r's authorities
+                    ⟕ anti-join(robots)                 (S4; one write job)
+      eligible    = frontier_r ⟕ anti-join(done_seeds)  (R5 done-skip)
       allowed     = robots can_fetch gate               (G4)
       scheduled,
-      deferred    = per-host window budget              (G5)
+      deferred    = per-host window budget over one
+                    cached gated, ranked frontier       (G5)
       fetched     = fetch(scheduled)                    (S2; gates G1/G2)
       results    += fetched 2xx (parsed := mime-ok)     (R6; wrong-MIME done-not-parsed)
       links       = parsed pages → extract → trim → resolve(base_raw)
                     → canonicalize → same-authority     (P1/P2, F12, F16, F8, R3)
       new         = dedupe(round) → bloom + anti-join(seen)   (R1/R4)
       seen       += new;  frontier_{r+1} = new ∪ deferred     (R9)
-      snapshot    = commit (frontier, seen, results, done_seeds, metrics,
-                    bloom sidecar)
+      snapshot    = commit (frontier, seen, results, done_seeds, robots,
+                    metrics, bloom sidecar)
     Terminate when frontier_{r+1} is empty (R7/R8 — equivalent to the
     reference's seen==done / queue-timeout exits, SURVEY.md §2.6.1).
 
@@ -29,8 +32,10 @@ Scale properties:
   * the seen anti-join is Bloom-prefiltered (operators/seen.py); the
     politeness window is the only per-host shuffle; the fetch input is
     salted/rebalanced on url_hash so hot hosts don't serialise a stage.
-  * per-round metrics come free from parquet footer lineage — no extra
-    count() jobs on the hot path.
+  * per-round metrics and the driver's counters (seeds, done seeds,
+    robots rules and delays) come free from parquet footers — no extra
+    count() jobs on the hot path, and no url or authority is collected
+    to the driver.
 
 Visited-set parity with the reference is asserted by
 tests/test_crawl.py (table graphs) and tests/test_reference_e2e.py
@@ -57,7 +62,7 @@ from simplecrawler_spark.operators.parse import (
 )
 from simplecrawler_spark.operators.partitioning import repartition_salted
 from simplecrawler_spark.operators.politeness import (
-    UNLIMITED_BUDGET, apply_global_budget, schedule_budget,
+    UNLIMITED_BUDGET, apply_global_budget, rank_budget, split_budget,
 )
 from simplecrawler_spark.operators.robots import (
     RobotsState, can_fetch, fetch_robots_table,
@@ -66,7 +71,7 @@ from simplecrawler_spark.operators.seen import (
     BloomSeen, anti_join_seen, host_bucket_expr,
 )
 from simplecrawler_spark.plans import schemas
-from simplecrawler_spark.plans.tables import SnapshotStore
+from simplecrawler_spark.plans.tables import SnapshotStore, footer_counts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
 
 
@@ -140,10 +145,15 @@ class FrontierCrawler:
         })
         self.bloom: BloomSeen | None = None
         self._bloom_path = os.path.join(self.root, "sidecar", "bloom.npz")
-        # S4 robots state — three counters over the persisted robots
-        # TABLE, the only rule source: the gate, the politeness window
-        # and split_missing all read the table itself.
+        # S4 robots state — three footer-derived counters over the
+        # persisted robots TABLE, the only rule source (the gate, the
+        # politeness window and split_missing read the table itself;
+        # no authority is tracked on the driver).
         self._rstate = RobotsState()
+        # a new authority can enter the frontier without a
+        # cross-authority link only in a run's first round and through
+        # a stream sweep: those set this, and the robots phase clears it
+        self._robots_due = False
         # R5 done-skip state. The ONLY urls that can be both done and
         # re-enter the frontier are seeds (a seed is never added to
         # seen — crawler.py:198-199, SURVEY.md §2.6.1 — so a page
@@ -156,12 +166,10 @@ class FrontierCrawler:
         # completion a semi-join appended to done_seeds.
         self._n_seeds = 0
         self._n_seeds_done = 0
-        # S4 robots state: authorities are tracked driver-side
-        # ({authority: scheme}), so robots discovery never scans the
-        # frontier. New authorities surface from the (persisted,
-        # already-small) `new` DF each round — and only when the
-        # same-authority filter is off (otherwise none can appear).
-        self._auth_pending: dict[str, str] = {}
+        # seeds the robots gate refused in round 0 (footers): never
+        # fetchable, since each authority has one immutable robots
+        # row, so they stop counting as pending
+        self._n_seeds_blocked = 0
         # G6 "pagerank" priority: the rank table handle, read once
         if self.cfg.priority_source == "pagerank" \
                 and not self.cfg.pagerank_path:
@@ -240,53 +248,21 @@ class FrontierCrawler:
         return (self.store.read("frontier", partition="r0")
                 .where(F.col("round") == 0).select("url_norm").distinct())
 
-    def _ensure_robots(self) -> None:
-        """Fetch robots.txt for pending authorities. The reference
-        fetches robots unconditionally, once per crawl
-        (crawler.py:201-203); multi-authority crawls extend that to
-        once per authority. Pending authorities are tracked
-        driver-side (bounded per round), membership against the
-        already-fetched set is one anti-join against the table
-        (RobotsState.split_missing), and the fetched text + its
-        crawl-delay parse stay executor-side: the rows append STRAIGHT
-        to the robots table; the driver folds in only counters."""
-        pending, self._auth_pending = self._auth_pending, {}
-        if not pending:
-            return
-        missing = self._rstate.split_missing(pending,
+    def _ensure_robots(self, frontier_r: DataFrame) -> int:
+        """Fetch robots.txt for the round frontier's authorities not
+        yet in the robots table — the reference fetches robots once per
+        crawl (crawler.py:201-203), multi-authority crawls once per
+        authority. One write job (RobotsState.split_missing → fetch →
+        append); the driver folds in only footer counters, and an
+        empty append is dropped. Returns the rows appended."""
+        missing = self._rstate.split_missing(frontier_r,
                                              self.store.read("robots"))
-        if not missing:
-            return
-        rows_df = fetch_robots_table(self.spark, missing, self.fetcher,
-                                     self.cfg)
-        path = self.store.append("robots", rows_df)
-        # fold the counters from the WRITTEN parquet — the fetch never
-        # re-runs, and rule text never crosses back to the driver
-        self._rstate.register_fetched(self.spark.read.parquet(path))
-
-    def _register_authorities(self, pairs: dict[str, str]) -> None:
-        """Queue authorities for the next round's robots discovery;
-        _ensure_robots's anti-join against the table drops the ones
-        already fetched. Pending is bounded by one round's distinct
-        discoveries."""
-        for auth, scheme in pairs.items():
-            if auth:
-                self._auth_pending.setdefault(auth, scheme or "http")
-
-    @staticmethod
-    def _authorities(df: DataFrame) -> dict[str, str]:
-        """{authority: scheme} of frontier rows — one distinct-collect
-        at AUTHORITY grain (robots are fetched once per authority, so
-        this is the floor; split_missing drops known ones). With a
-        bloom, callers piggyback this onto the filter-build pass
-        (add_df(collect_authorities=True)) instead."""
-        return {row.authority: row.scheme or "http"
-                for row in (df.select(
-                                "authority",
-                                F.split("url_norm", "://").getItem(0)
-                                .alias("scheme"))
-                            .where(F.col("authority") != "")
-                            .distinct().collect())}
+        path = self.store.append(
+            "robots", fetch_robots_table(missing, self.fetcher, self.cfg))
+        n_new = self._rstate.register_fetched([path])
+        if not n_new:
+            self.store.discard(path)
+        return n_new
 
     # ------------------------------------------------------------------ #
 
@@ -304,22 +280,21 @@ class FrontierCrawler:
         """Run the BFS fixpoint from a DataFrame of raw seed urls —
         the sitemap-scale entry (round-4 verdict item 4): seeds are
         canonicalised, deduped and staged entirely as DataFrames, and
-        the driver never sees a url — only the seed count (footers)
-        and the seeds' distinct authorities (for robots)."""
+        the driver never sees a url or an authority — only the seed
+        count (footers)."""
         if self.cfg.bloom_enabled:
             self.bloom = self._new_bloom()
         path = self.store.append(
             "frontier", self._seed_frontier_from_df(seeds_df, url_col),
             partition="r0")
         self._n_seeds = self.store.append_rows(path)
-        self._register_authorities(
-            self._authorities(self.spark.read.parquet(path)))
         return self._run_rounds(start_round=0)
 
     def _run_rounds(self, start_round: int) -> DataFrame:
         cfg = self.cfg
         r = start_round
         row_count = None  # frontier row count, known from the prior round
+        self._robots_due = True
         self._crawl_active = True
         try:
             while r < cfg.max_rounds:
@@ -401,6 +376,7 @@ class FrontierCrawler:
                  .select("url_norm", "s.url_raw", "s.authority",
                          "s.host"))
         n_new = self._admit(self._frontier_rows(batch, r), r)
+        self._robots_due = self._robots_due or n_new > 0
         self._stream_consumed.extend(dirs)
         return n_new
 
@@ -408,9 +384,8 @@ class FrontierCrawler:
         """Admit depth-0 frontier rows into round ``rnd`` the way a
         round admits its discovered links (crawler.py:160-163 —
         enqueue ⇒ enter seen): anti-join seen (bloom-prefiltered),
-        append to the frontier and seen tables, add to the bloom and
-        register the new authorities for robots. Returns the admitted
-        row count (parquet footers)."""
+        append to the frontier and seen tables and add to the bloom.
+        Returns the admitted row count (parquet footers)."""
         new = anti_join_seen(rows, self.store.read("seen"),
                              self.bloom).persist()
         n_new = self.store.append_rows(
@@ -418,12 +393,8 @@ class FrontierCrawler:
         self.store.append("seen", self._seen_rows(new, rnd),
                           partition=f"r{rnd}")
         if self.bloom is not None:
-            auths = self.bloom.add_df(new, row_count=n_new,
-                                      collect_authorities=True)
+            self.bloom.add_df(new, row_count=n_new)
             self._sync_bloom_membership()
-        else:
-            auths = self._authorities(new)
-        self._register_authorities(auths)
         new.unpersist()
         return n_new
 
@@ -477,13 +448,17 @@ class FrontierCrawler:
         if self._n_seeds_done:
             eligible = eligible.join(self.store.read("done_seeds"),
                                      "url_norm", "left_anti")
-        seeds_pending = self._n_seeds_done < self._n_seeds
+        seeds_pending = (self._n_seeds_done + self._n_seeds_blocked
+                         < self._n_seeds)
 
-        # S4/G4: robots — pending authorities were noted driver-side
-        # (seeds at crawl(); discoveries ride on the prior round's
-        # bloom-build pass via _register_authorities); rules are
-        # evaluated by a join against the persisted robots TABLE.
-        self._ensure_robots()
+        # S4/G4: robots — the round frontier's unknown authorities are
+        # fetched into the robots TABLE (one write job, no driver
+        # round trip) wherever one can appear; rules are evaluated by
+        # a join against the table.
+        n_robots = 0
+        if self._robots_due or not cfg.same_authority_only:
+            n_robots = self._ensure_robots(frontier_r)
+            self._robots_due = False
         _mark("robots_fetch")
         if not cfg.obey_robots or not self._rstate.any_rules:
             # no non-empty rules anywhere → RobotFileParser allows all
@@ -503,24 +478,22 @@ class FrontierCrawler:
                 F.col("url_norm").alias("url"),
                 F.lit(cfg.user_agent).alias("detail")))
 
-        # G5: per-host politeness budget. scheduled/deferred are each
-        # consumed ONCE on the unbudgeted fast path (fetch; next
-        # frontier), so caching them is pure overhead — persist only
-        # when a second consumer exists (budgeted window recomputation
-        # or the crawl_log CRAWLING selector). Once any authority
-        # carries a Crawl-delay the budget joins the robots table's
-        # crawl_delay column.
-        scheduled, deferred = schedule_budget(
+        # G5: per-host politeness budget (joining the robots table's
+        # crawl_delay once any authority has one). When the split has
+        # a second consumer (the deferred append or the CRAWLING log),
+        # the gated, ranked frontier is persisted ONCE and both sides
+        # filter it, so the robots gate runs once per round.
+        ranked = rank_budget(
             allowed, cfg,
             self.store.read("robots") if self._rstate.any_delays else None)
-        scheduled, deferred = apply_global_budget(scheduled, deferred, cfg)
         budgeted = self._rstate.any_delays or (
             cfg.max_per_host_per_round < UNLIMITED_BUDGET) or (
             cfg.max_urls_per_round < UNLIMITED_BUDGET)
         cache_sched = budgeted or cfg.crawl_log
         if cache_sched:
-            scheduled = scheduled.persist()
-            deferred = deferred.persist()
+            ranked = ranked.persist()
+        scheduled, deferred = apply_global_budget(
+            *split_budget(ranked, allowed.columns), cfg)
         if cfg.crawl_log:
             log_parts.append(scheduled.select(
                 F.lit("CRAWLING").alias("event"),
@@ -573,15 +546,18 @@ class FrontierCrawler:
         # appends, which go to fresh uuid dirs the manifest never
         # references); the resumed round REPLAYS round r and must be
         # able to clobber the orphan instead of dying on path-exists
-        attach_links_canonical(
+        staged = attach_links_canonical(
             self.fetcher(fetch_in).withColumn(
                 "_parse", F.coalesce(parse_cond, F.lit(False))),
             trim_query=cfg.trim_query, trim_fragment=cfg.trim_fragment,
             record_redirects=cfg.record_redirects,
             with_found=cfg.crawl_log,
             extractor=cfg.link_extractor,
-        ).write.mode("overwrite").parquet(stage_dir)
-        fetched = self.spark.read.parquet(stage_dir)
+        )
+        staged.write.mode("overwrite").parquet(stage_dir)
+        # the written schema, not inference (a one-task job)
+        fetched = self.spark.read.schema(staged.schema).parquet(stage_dir)
+        n_fetched = footer_counts([stage_dir])[0]
         _mark("fetch_stage")
 
         results_new = fetched.filter(done_cond).select(
@@ -617,8 +593,8 @@ class FrontierCrawler:
         # New done = this round's done fetches ∩ seed table ∖
         # already-done, appended to done_seeds so this round's snapshot
         # commits it with the results. At most |seeds| rows EVER cross
-        # this append, nearly all in round 0; once the counters agree
-        # the check is free.
+        # this append, nearly all in round 0; once every seed is done
+        # or robots-blocked the check is free.
         if seeds_pending:
             new_done = (fetched.filter(done_cond).select("url_norm")
                         .join(self._seed_table(), "url_norm", "left_semi"))
@@ -676,8 +652,6 @@ class FrontierCrawler:
         cand = cand.persist()
 
         # R4: global dedupe against seen (bloom prefilter + exact).
-        # New-authority discovery is NOT a separate job here — it rides
-        # on the bloom build below (or the no-bloom fallback).
         seen_df = self.store.read("seen")
         new = anti_join_seen(cand, seen_df, self.bloom)
         _mark("parse_canon_antijoin")
@@ -712,9 +686,9 @@ class FrontierCrawler:
 
         # THE round's single materialisation of the expensive tail
         # (fused parse → dedupe shuffle → bloom split → anti-join):
-        # straight into the next frontier's parquet. Seen rows, the
-        # bloom build, and authority discovery all re-derive from this
-        # columnar file via column-pruned scans. Relying on the
+        # straight into the next frontier's parquet. Seen rows and the
+        # bloom build re-derive from this columnar file via
+        # column-pruned scans. Relying on the
         # executor cache here instead (round-2 design: new.persist()
         # consumed by three jobs) was measured to nondeterministically
         # re-run the membership-UDF/anti-join tail or stall on cache
@@ -737,8 +711,8 @@ class FrontierCrawler:
                                      "url_norm", "left_anti")
         new_dir = self.store.append("frontier", next_new, f"r{r + 1}")
         new_count = self.store.append_rows(new_dir)
-        newf = (self.spark.read.parquet(new_dir) if new_count
-                else None)
+        newf = (self.spark.read.schema(next_new.schema).parquet(new_dir)
+                if new_count else None)
         _mark("frontier_write")
 
         # overlap #2: the seen append is a pruned scan of the staged
@@ -762,14 +736,16 @@ class FrontierCrawler:
                 deferred.withColumn("round", F.lit(r + 1)).select(
                     *next_new.columns),
                 partition=f"r{r + 1}"))
+        if r == 0:
+            # every round-0 frontier row is a seed, and both fetchers
+            # return one row per scheduled url: the seeds neither
+            # fetched nor deferred are the ones robots refused
+            self._n_seeds_blocked = max(
+                0, self._n_seeds - n_fetched - defer_count)
 
         if self.bloom is not None:
             if newf is not None:
-                auths = self.bloom.add_df(
-                    newf, row_count=new_count,
-                    collect_authorities=not cfg.same_authority_only)
-                if auths:
-                    self._register_authorities(auths)
+                self.bloom.add_df(newf, row_count=new_count)
             if self.bloom.saturated():
                 # amortised doubling: rebuild 4x bigger from the seen
                 # table (one distributed pass; O(1) per URL overall).
@@ -787,28 +763,29 @@ class FrontierCrawler:
             self.bloom.save(self._bloom_path)
             self._sync_bloom_membership()
             _mark("bloom_save")
-        elif newf is not None and not cfg.same_authority_only:
-            # no-bloom fallback (no new authority can appear when
-            # same_authority_only)
-            self._register_authorities(self._authorities(newf))
         if fut_seen is not None:
             fut_seen.result()
         fut_results.result()
         _mark("write_join")
 
-        # row counts from parquet footers (no extra jobs)
+        # row counts from parquet footers (no extra jobs), one per gate
         metrics = {
             "round": r,
             "done_new": self.store.rows("results", pending=True),
             "new_urls": self.store.rows("seen", pending=True),
             "frontier_next": new_count + defer_count,
+            "robots_new": n_robots,
+            "fetched": n_fetched,
+            "deferred": defer_count,
             "wall_secs": time.monotonic() - t0,
             "phases": phases,
         }
+        if r == 0:
+            metrics["seeds_blocked"] = self._n_seeds_blocked
         if cfg.checkpoint:
             self.store.commit_snapshot(r, metrics)
         if cache_sched:
-            scheduled.unpersist(); deferred.unpersist()
+            ranked.unpersist()
         cand.unpersist()
         shutil.rmtree(stage_dir, ignore_errors=True)
         return new_count + defer_count
@@ -1013,8 +990,10 @@ class FrontierCrawler:
             an already-seen url is never re-enqueued;
           * appended to BOTH the next frontier partition and the seen
             table, and added to the bloom sidecar;
-          * its authorities registered driver-side so the next round
-            fetches their robots.txt before any fetch of theirs.
+          * its authorities get their robots.txt fetched before any
+            fetch of theirs: the round that reads the batch (the first
+            of the next crawl run, or a sweeping round) runs the robots
+            phase.
         foreachBatch runs on the driver, so mutating crawler state here
         is safe. Returns the StreamingQuery.
 
@@ -1112,15 +1091,17 @@ class FrontierCrawler:
                 f"checkpoint at {self.root} has seeds but no done_seeds "
                 "table (written by an older build); restart the crawl")
         self._n_seeds_done = self.store.rows("done_seeds")
-        # rebuild the robots counters from the persisted table with
-        # one aggregate; a resume re-reads, never re-fetches. Then
-        # re-note the resume frontier's authorities so any NOT yet
-        # fetched get picked up by _ensure_robots.
-        self._rstate = RobotsState.from_table(self.store.read("robots"))
-        resume_frontier = (self.store.read("frontier",
-                                           partition=f"r{last + 1}")
-                           .where(F.col("round") == last + 1))
-        self._register_authorities(self._authorities(resume_frontier))
+        # round 0 recorded the robots-blocked seeds; a checkpoint
+        # without the key reads 0 (the seed check keeps running)
+        self._n_seeds_blocked = max(
+            (s["metrics"].get("seeds_blocked", 0)
+             for s in self.store.snapshots() if s["round"] == 0),
+            default=0)
+        # the robots counters from the committed dirs' footers; a
+        # resume re-reads, never re-fetches. The first resumed round
+        # runs the robots phase over its frontier, which fetches any
+        # authority not yet in the table.
+        self._rstate = RobotsState.from_table(self.store.paths("robots"))
         if cfg.bloom_enabled and self.bloom is None:
             # sidecar missing → rebuild the filter from the seen table
             self.bloom = self._new_bloom()

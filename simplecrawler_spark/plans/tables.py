@@ -26,6 +26,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import threading
 import uuid
 
@@ -42,6 +43,30 @@ def _parquet_lineage(path: str) -> list[dict]:
     for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
         entries.append({"file": f, "rows": pq.read_metadata(f).num_rows})
     return entries
+
+
+def footer_counts(paths: list[str], columns: tuple[str, ...] = ()
+                  ) -> tuple[int, dict[str, int]]:
+    """Row count and per-column null counts of the parquet dirs
+    ``paths``, summed from their footers (driver-side, no Spark job).
+    Spark drops every statistic of a string column chunk that holds a
+    value over 4 KB, the null count included; such a chunk counts as
+    holding no nulls, so "rows minus nulls" over-counts, never
+    under-counts, the rows with a value."""
+    import pyarrow.parquet as pq
+
+    rows, nulls = 0, dict.fromkeys(columns, 0)
+    for path in paths:
+        for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+            md = pq.read_metadata(f)
+            rows += md.num_rows
+            names = md.schema.names
+            for g in range(md.num_row_groups):
+                for c in columns:
+                    stats = md.row_group(g).column(names.index(c)).statistics
+                    if stats is not None and stats.has_null_count:
+                        nulls[c] += stats.null_count
+    return rows, nulls
 
 
 class SidecarIO:
@@ -143,6 +168,14 @@ class SnapshotStore:
              "lineage": _parquet_lineage(path)}]
         return path
 
+    def discard(self, path: str) -> None:
+        """Drop the pending append at ``path`` and delete its dir (an
+        append that turned out empty): no commit will list it."""
+        with self._pending_lock:
+            for appends in self._pending.values():
+                appends[:] = [a for a in appends if a["path"] != path]
+        shutil.rmtree(path, ignore_errors=True)
+
     def commit_snapshot(self, round_no: int, metrics: dict | None = None) -> str:
         with self._pending_lock:  # serialised with compact()'s swap
             snap_id = (self._last_snapshot["id"] + 1
@@ -183,7 +216,8 @@ class SnapshotStore:
 
     # -- read -------------------------------------------------------------
 
-    def _paths(self, table: str, partition: str | None = None) -> list[str]:
+    def paths(self, table: str, partition: str | None = None) -> list[str]:
+        """The data dirs read() scans: committed plus pending."""
         paths = (self._committed.get(table, [])
                  + [a["path"] for a in self._pending.get(table, [])])
         if partition is None:
@@ -197,7 +231,7 @@ class SnapshotStore:
         return [p for p in paths if tags.get(p, partition) == partition]
 
     def read(self, table: str, partition: str | None = None) -> DataFrame:
-        paths = self._paths(table, partition)
+        paths = self.paths(table, partition)
         schema = self.schemas.get(table)
         if not paths:
             if schema is None:
@@ -220,9 +254,6 @@ class SnapshotStore:
                   else self.spark.read)
         return reader.parquet(*paths)
 
-    def is_empty(self, table: str) -> bool:
-        return not self._paths(table) or self.read(table).isEmpty()
-
     # -- row counts (parquet footers — never a Spark job) -------------------
 
     def append_rows(self, path: str) -> int:
@@ -243,7 +274,7 @@ class SnapshotStore:
         with self._pending_lock:
             recorded = {a["path"]: a["lineage"]
                         for a in self._pending.get(table, [])}
-        paths = self._paths(table, partition)
+        paths = self.paths(table, partition)
         if pending:
             paths = [p for p in paths if p in recorded]
         return sum(f["rows"] for p in paths
@@ -389,8 +420,6 @@ class SnapshotStore:
         DIRS (a handful per table per round), never by rows; on an
         object store this becomes one batched list + delete per
         table prefix."""
-        import shutil
-
         live: set[str] = set()
         for snap in self.snapshots():
             for dirs in snap["tables"].values():

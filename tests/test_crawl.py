@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -938,6 +939,151 @@ def test_seed_state_kill_and_resume(spark, tmp_path):
 
     assert state(resumed) == state(full)
     assert _done_seed_urls(resumed) == seeds
+
+
+# -- seeds the robots gate refuses ------------------------------------------
+
+BLOCKED_SEED = "http://loop.test/blocked/s"
+
+
+def _blocked_seed_rows(n=4):
+    """``n`` fetchable seeds on one host plus BLOCKED_SEED, which the
+    host's robots.txt disallows; every seed links to every seed and to
+    /q, /q links to /r — so the crawl runs three rounds."""
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links,
+    )
+
+    seeds = [f"http://loop.test/p{i}" for i in range(n)]
+    links = seeds + [BLOCKED_SEED, "http://loop.test/q"]
+    rows = [_row(s, body=make_html_from_links(links)) for s in seeds]
+    rows += [_row(BLOCKED_SEED, body=""),
+             _row("http://loop.test/q",
+                  body=make_html_from_links(["/r"])),
+             _row("http://loop.test/r", body=""),
+             _row("http://loop.test/robots.txt", content_type="text/plain",
+                  body="User-agent: *\nDisallow: /blocked\n")]
+    return seeds, rows
+
+
+def _round_metrics(c) -> dict[int, dict]:
+    return {s["round"]: s["metrics"] for s in c.store.snapshots()}
+
+
+def _done_seed_rounds(c) -> list[int]:
+    """Rounds whose snapshot committed a done_seeds append."""
+    return sorted(s["round"] for s in c.store.snapshots()
+                  if s["new_lineage"].get("done_seeds"))
+
+
+def test_blocked_seed_stops_seed_check(spark, tmp_path):
+    """A seed robots refuses can never be fetched, so it stops counting
+    as pending: once round 0 has fetched every other seed, no later
+    round appends to done_seeds. The visited set and the per-gate
+    counts in each round's metrics are pinned; quiet rounds of this
+    cross-authority crawl leave no robots dir behind."""
+    seeds, rows = _blocked_seed_rows(2)
+    cfg = CrawlConfig(same_authority_only=False)
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=str(tmp_path / "crawl"))
+    c.crawl(seeds + [BLOCKED_SEED])
+    assert _per_round(c) == [
+        (0, seeds[0]), (0, seeds[1]), (1, "http://loop.test/q"),
+        (2, "http://loop.test/r")]
+    assert _done_seed_urls(c) == seeds
+    assert _done_seed_rounds(c) == [0]
+    m = _round_metrics(c)
+    assert m[0]["seeds_blocked"] == 1
+    assert all("seeds_blocked" not in m[r] for r in (1, 2))
+    assert [(m[r]["robots_new"], m[r]["fetched"], m[r]["deferred"])
+            for r in (0, 1, 2)] == [(1, 2, 0), (0, 1, 0), (0, 1, 0)]
+    assert len(c.store.paths("robots")) == 1
+
+
+def test_budget_deferred_seed_recorded_when_fetched(spark, tmp_path,
+                                                   monkeypatch):
+    """Next to a blocked seed, a seed the per-host budget defers in
+    round 0 stays pending: round 1 fetches it once, at depth 0, and
+    records it in done_seeds; round 2 (its rediscovered copy, skipped
+    as done) appends nothing. The fetch stage and the deferred append
+    both read the politeness split, which caches the gated, ranked
+    frontier once: the rows a counting filter stacked on can_fetch
+    sees equal the rows fetched plus the rows deferred."""
+    import simplecrawler_spark.plans.crawl as crawl_mod
+
+    log = str(tmp_path / "gate.log")
+    can_fetch = crawl_mod.can_fetch
+
+    def counting_can_fetch(frontier, robots_df, cfg):
+        @F.pandas_udf("boolean")
+        def mark(url: pd.Series) -> pd.Series:
+            with open(log, "a") as fh:
+                fh.write(f"{len(url)}\n")
+            return pd.Series([True] * len(url), dtype=bool)
+
+        # nondeterministic: the optimizer may not merge it into the
+        # gate's own filter, so it sees only the rows the gate admits
+        return can_fetch(frontier, robots_df, cfg).filter(
+            mark.asNondeterministic()(F.col("url_norm")))
+
+    monkeypatch.setattr(crawl_mod, "can_fetch", counting_can_fetch)
+    seeds, rows = _blocked_seed_rows(4)
+    cfg = CrawlConfig(max_per_host_per_round=3, priority_source="depth")
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=str(tmp_path / "crawl"))
+    c.crawl(seeds + [BLOCKED_SEED])
+    got = _per_round(c)
+    assert sorted(u for _, u in got) == sorted(
+        seeds + ["http://loop.test/q", "http://loop.test/r"])
+    late = [u for rnd, u in got if rnd == 1 and u in seeds]
+    assert len(late) == 1
+    assert sorted((r.url_norm, r.depth) for r in c.results().collect()
+                  if r.url_norm in seeds) == [(s, 0) for s in seeds]
+    assert _done_seed_urls(c) == seeds
+    assert _done_seed_rounds(c) == [0, 1]
+    m = _round_metrics(c)
+    assert (m[0]["seeds_blocked"], m[0]["fetched"], m[0]["deferred"]) \
+        == (1, 3, 1)
+    with open(log) as fh:
+        gated = sum(int(line) for line in fh)
+    assert gated == sum(x["fetched"] + x["deferred"] for x in m.values())
+
+
+def test_blocked_seed_count_survives_kill_and_resume(spark, tmp_path):
+    """Kill the crawl while round 1 commits (round 0 committed):
+    continue_crawl reads seeds_blocked back from round 0's metrics and
+    ends in the uninterrupted crawl's state, with no done_seeds append
+    after the deferred seed's round."""
+    seeds, rows = _blocked_seed_rows(4)
+    cfg = CrawlConfig(max_per_host_per_round=3, priority_source="depth")
+    root = str(tmp_path / "killed" / "crawl")
+    killed = FrontierCrawler(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg, root=root)
+    commit = killed.store.commit_snapshot
+
+    def crash_at_round_1(round_no, metrics=None):
+        if round_no == 1:
+            raise RuntimeError("killed")
+        return commit(round_no, metrics)
+
+    killed.store.commit_snapshot = crash_at_round_1
+    with pytest.raises(RuntimeError, match="killed"):
+        killed.crawl(seeds + [BLOCKED_SEED])
+    resumed = FrontierCrawler.resume(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
+    resumed.continue_crawl()
+    full = FrontierCrawler(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg,
+        root=str(tmp_path / "full" / "crawl"))
+    full.crawl(seeds + [BLOCKED_SEED])
+
+    def state(c):
+        return (_per_round(c), _done_seed_urls(c),
+                sorted(r.url_norm for r in c.store.read("seen").collect()))
+
+    assert state(resumed) == state(full)
+    assert resumed._n_seeds_blocked == full._n_seeds_blocked == 1
+    assert _done_seed_rounds(resumed) == _done_seed_rounds(full) == [0, 1]
 
 
 def test_seed_state_mode_single_valued():

@@ -97,11 +97,12 @@ def test_ingest_stream_registers_state(spark, tmp_path):
     seen = {r.url_norm
             for r in crawler.store.read("seen").select("url_norm").collect()}
     assert f"{b}/ok" in seen and f"{b}/blocked" in seen
-    # the streamed authority was registered for a robots fetch
-    assert "b.test" in crawler._auth_pending
-
     crawler.store.commit_snapshot(crawler.store.latest_round() or 0, {})
     crawler.continue_crawl()
+    # the resumed round fetched the streamed authority's robots.txt,
+    # once
+    assert [r.authority for r in crawler.store.read("robots")
+            .where(F.col("authority") == "b.test").collect()] == ["b.test"]
     final = crawler.result_urls()
     assert f"{b}/ok" in final
     assert f"{b}/blocked" not in final          # streamed robots obeyed
