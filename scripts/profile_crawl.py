@@ -68,7 +68,9 @@ def main() -> None:
             totals[k] = totals.get(k, 0.0) + v
         print(json.dumps({"round": m["round"],
                           "wall": round(m["wall_secs"], 2),
-                          "done": m["done_new"], "phases": ph}))
+                          "done": m["done_new"],
+                          "seen_bytes": m.get("seen_bytes"),
+                          "bloom": m.get("bloom"), "phases": ph}))
     acc = sum(totals.values())
     print("\n== phase totals ==")
     for k, v in sorted(totals.items(), key=lambda kv: -kv[1]):

@@ -91,12 +91,17 @@ class CrawlConfig:
     #     pending — those units go unused this round and its surplus
     #     rolls forward as deferred work).
     round_budget_mode: str = "cheapest"
-    # bloom seen-filter sidecar
+    # bloom seen-filter sidecar: a prefilter that keeps definitely-new
+    # candidates out of the seen anti-join's shuffle. The crawl builds
+    # it (from the seen table) only once seen's parquet bytes exceed
+    # spark.sql.autoBroadcastJoinThreshold — below that the planner
+    # broadcasts seen and there is no shuffle to save — and keeps it
+    # from then on. False: exact anti-join only, in every round.
     bloom_enabled: bool = True
     bloom_fpp: float = 0.001
-    bloom_min_items: int = 4096        # below this, exact anti-join only
-    # initial filter sizing; past ~4x this the crawler rebuilds the
-    # filter 4x bigger from the seen table (amortised doubling)
+    # filter sizing floor: the filter is sized for max(this, 4 x seen
+    # rows) when built; past ~4x its size the crawler rebuilds it the
+    # same way from the seen table (amortised doubling)
     bloom_initial_capacity: int = 1 << 20
     # membership evaluation: "broadcast" ships all bitsets to every
     # executor (zero extra shuffle — right while the filter is small);

@@ -18,10 +18,11 @@ north rule mandates (BASELINE.json:6,14):
       results    += fetched 2xx (parsed := mime-ok)     (R6; wrong-MIME done-not-parsed)
       links       = parsed pages → extract → trim → resolve(base_raw)
                     → canonicalize → same-authority     (P1/P2, F12, F16, F8, R3)
-      new         = dedupe(round) → bloom + anti-join(seen)   (R1/R4)
+      new         = dedupe(round) → anti-join(seen)     (R1/R4; bloom-
+                    prefiltered once seen outgrows a broadcast join)
       seen       += new;  frontier_{r+1} = new ∪ deferred     (R9)
       snapshot    = commit (frontier, seen, results, done_seeds, robots,
-                    metrics, bloom sidecar)
+                    metrics, bloom sidecar once the bloom is on)
     Terminate when frontier_{r+1} is empty (R7/R8 — equivalent to the
     reference's seen==done / queue-timeout exits, SURVEY.md §2.6.1).
 
@@ -29,8 +30,13 @@ Scale properties:
   * every round's state round-trips through Parquet — lineage stays
     flat across rounds (no unbounded plan growth), and a killed job
     resumes from the last committed snapshot exactly.
-  * the seen anti-join is Bloom-prefiltered (operators/seen.py); the
-    politeness window is the only per-host shuffle; the fetch input is
+  * the seen anti-join is exact, and the planner broadcasts `seen`
+    while it is small. Once the seen table's parquet bytes pass the
+    session's spark.sql.autoBroadcastJoinThreshold, the join shuffles,
+    and from the next round on a Bloom prefilter (operators/seen.py)
+    keeps definitely-new candidates out of that shuffle; before that
+    the filter would save nothing, so none is built. The politeness
+    window is the only per-host shuffle; the fetch input is
     salted/rebalanced on url_hash so hot hosts don't serialise a stage.
   * per-round metrics and the driver's counters (seeds, done seeds,
     robots rules and delays) come free from parquet footers — no extra
@@ -44,6 +50,7 @@ tests/test_crawl.py (table graphs) and tests/test_reference_e2e.py
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -73,6 +80,13 @@ from simplecrawler_spark.operators.seen import (
 from simplecrawler_spark.plans import schemas
 from simplecrawler_spark.plans.tables import SnapshotStore, footer_counts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
+
+
+def _parquet_bytes(paths: list[str]) -> int:
+    """Summed size of the parquet files in the data dirs ``paths`` (a
+    driver listdir; no footer read, no Spark job)."""
+    return sum(os.path.getsize(f) for p in paths
+               for f in glob.glob(os.path.join(p, "*.parquet")))
 
 
 _LOG_EVENT_ORDER = {"ROBOTS_BLOCKED": 0, "CRAWLING": 1, "VISITED": 2,
@@ -236,12 +250,25 @@ class FrontierCrawler:
             host_bucket_expr(F.col("host")).alias("host_bucket"),
             F.lit(rnd).alias("round_added"))
 
-    def _new_bloom(self) -> BloomSeen:
-        cfg = self.cfg
-        return BloomSeen(
-            expected_items=max(cfg.bloom_min_items,
-                               cfg.bloom_initial_capacity),
-            fpp=cfg.bloom_fpp)
+    def _outgrows_broadcast(self, seen_bytes: int) -> bool:
+        """True once ``seen_bytes`` of seen-table parquet exceed the
+        session's broadcast limit (spark.sql.autoBroadcastJoinThreshold,
+        units parsed by SQLConf; -1 never broadcasts, so it always
+        holds): the seen anti-join then shuffles, and only then does the
+        Bloom prefilter have a shuffle to save."""
+        return seen_bytes > (self.spark._jsparkSession.sessionState()
+                             .conf().autoBroadcastJoinThreshold())
+
+    def _bloom_from_seen(self) -> BloomSeen:
+        """A filter holding every row of the seen table, sized from its
+        footer row count (4x, never below bloom_initial_capacity), so
+        it starts far from saturation."""
+        n = self.store.rows("seen")
+        bloom = BloomSeen(
+            expected_items=max(self.cfg.bloom_initial_capacity, 4 * n),
+            fpp=self.cfg.bloom_fpp)
+        bloom.add_df(self.store.read("seen"), row_count=n)
+        return bloom
 
     def _seed_table(self) -> DataFrame:
         """The seed set AS A TABLE: round-0 frontier url_norms."""
@@ -282,8 +309,6 @@ class FrontierCrawler:
         canonicalised, deduped and staged entirely as DataFrames, and
         the driver never sees a url or an authority — only the seed
         count (footers)."""
-        if self.cfg.bloom_enabled:
-            self.bloom = self._new_bloom()
         path = self.store.append(
             "frontier", self._seed_frontier_from_df(seeds_df, url_col),
             partition="r0")
@@ -383,8 +408,9 @@ class FrontierCrawler:
     def _admit(self, rows: DataFrame, rnd: int) -> int:
         """Admit depth-0 frontier rows into round ``rnd`` the way a
         round admits its discovered links (crawler.py:160-163 —
-        enqueue ⇒ enter seen): anti-join seen (bloom-prefiltered),
-        append to the frontier and seen tables and add to the bloom.
+        enqueue ⇒ enter seen): anti-join seen (bloom-prefiltered once
+        the bloom is on), append to the frontier and seen tables and
+        add to the bloom.
         Returns the admitted row count (parquet footers)."""
         new = anti_join_seen(rows, self.store.read("seen"),
                              self.bloom).persist()
@@ -646,14 +672,22 @@ class FrontierCrawler:
             .select("url_norm", "url_hash", "s.url_raw", "s.authority",
                     "s.host", "s.depth", "s.discovered_from", "n_disc")
         )
-        # cand is consumed twice by the bloom-split anti-join (the
-        # definitely-new branch and the maybe-seen semi/anti pair) —
-        # cache it so the Python parse chain runs exactly once
-        cand = cand.persist()
-
-        # R4: global dedupe against seen (bloom prefilter + exact).
-        seen_df = self.store.read("seen")
-        new = anti_join_seen(cand, seen_df, self.bloom)
+        # R4: global dedupe against seen — the exact anti-join, Bloom-
+        # prefiltered once the filter is on. Until then, test (before
+        # this round writes to seen, so the figure is deterministic)
+        # whether seen has outgrown a broadcast join; the filter is
+        # built after this round's seen append if it has.
+        bloom_on = self.bloom is not None and self.bloom.added > 0
+        seen_bytes, rebuild = None, False
+        if cfg.bloom_enabled and self.bloom is None:
+            seen_bytes = _parquet_bytes(self.store.paths("seen"))
+            rebuild = self._outgrows_broadcast(seen_bytes)
+        if bloom_on:
+            # the bloom split consumes cand twice (the definitely-new
+            # branch and the maybe-seen semi/anti pair): cache it so
+            # the Python parse chain runs exactly once
+            cand = cand.persist()
+        new = anti_join_seen(cand, self.store.read("seen"), self.bloom)
         _mark("parse_canon_antijoin")
 
         # G6: priority signal for next round's scheduling ORDER BY
@@ -685,7 +719,7 @@ class FrontierCrawler:
             priority = F.lit(0.0)
 
         # THE round's single materialisation of the expensive tail
-        # (fused parse → dedupe shuffle → bloom split → anti-join):
+        # (fused parse → dedupe shuffle → [bloom split →] anti-join):
         # straight into the next frontier's parquet. Seen rows and the
         # bloom build re-derive from this columnar file via
         # column-pruned scans. Relying on the
@@ -711,13 +745,17 @@ class FrontierCrawler:
                                      "url_norm", "left_anti")
         new_dir = self.store.append("frontier", next_new, f"r{r + 1}")
         new_count = self.store.append_rows(new_dir)
-        newf = (self.spark.read.schema(next_new.schema).parquet(new_dir)
-                if new_count else None)
+        newf = None
+        if new_count:
+            newf = self.spark.read.schema(next_new.schema).parquet(new_dir)
+        else:
+            self.store.discard(new_dir)  # an empty append leaves no dir
         _mark("frontier_write")
 
         # overlap #2: the seen append is a pruned scan of the staged
-        # file — run it in a driver thread while the bloom (same
-        # input) updates in the main thread
+        # file — run it in a driver thread while the deferred append
+        # and (once the bloom is on) the bloom update run in the main
+        # thread
         if newf is not None:
             fut_seen = pool.submit(
                 self.store.append, "seen", self._seen_rows(newf, r),
@@ -731,11 +769,14 @@ class FrontierCrawler:
         # construction — skip the job entirely
         defer_count = 0
         if budgeted:
-            defer_count = self.store.append_rows(self.store.append(
+            defer_dir = self.store.append(
                 "frontier",
                 deferred.withColumn("round", F.lit(r + 1)).select(
                     *next_new.columns),
-                partition=f"r{r + 1}"))
+                partition=f"r{r + 1}")
+            defer_count = self.store.append_rows(defer_dir)
+            if not defer_count:
+                self.store.discard(defer_dir)
         if r == 0:
             # every round-0 frontier row is a seed, and both fetchers
             # return one row per scheduled url: the seeds neither
@@ -743,22 +784,20 @@ class FrontierCrawler:
             self._n_seeds_blocked = max(
                 0, self._n_seeds - n_fetched - defer_count)
 
+        # The filter is (re)built from the seen TABLE — once when seen
+        # first outgrows a broadcast join, then on saturation (amortised
+        # doubling; O(1) per URL overall). This round's background seen
+        # append must land first, or the filter misses round-r URLs and
+        # a Bloom false negative becomes a duplicate crawl.
         if self.bloom is not None:
             if newf is not None:
                 self.bloom.add_df(newf, row_count=new_count)
-            if self.bloom.saturated():
-                # amortised doubling: rebuild 4x bigger from the seen
-                # table (one distributed pass; O(1) per URL overall).
-                # The rebuild reads the seen TABLE, so this round's
-                # background seen append must land first — otherwise
-                # the new filter misses round-r URLs and a Bloom false
-                # negative becomes a duplicate crawl.
-                if fut_seen is not None:
-                    fut_seen.result()
-                self.bloom = BloomSeen(
-                    expected_items=self.bloom.added * 4,
-                    fpp=cfg.bloom_fpp)
-                self.bloom.add_df(self.store.read("seen"))
+            rebuild = self.bloom.saturated()
+        if rebuild:
+            if fut_seen is not None:
+                fut_seen.result()
+            self.bloom = self._bloom_from_seen()
+        if self.bloom is not None:
             _mark("bloom_add")
             self.bloom.save(self._bloom_path)
             self._sync_bloom_membership()
@@ -777,6 +816,11 @@ class FrontierCrawler:
             "robots_new": n_robots,
             "fetched": n_fetched,
             "deferred": defer_count,
+            # the seen bytes the bloom test read (None once the bloom
+            # is on, or with bloom_enabled off) and whether this
+            # round's anti-join consulted the filter
+            "seen_bytes": seen_bytes,
+            "bloom": bloom_on,
             "wall_secs": time.monotonic() - t0,
             "phases": phases,
         }
@@ -786,7 +830,8 @@ class FrontierCrawler:
             self.store.commit_snapshot(r, metrics)
         if cache_sched:
             ranked.unpersist()
-        cand.unpersist()
+        if bloom_on:
+            cand.unpersist()
         shutil.rmtree(stage_dir, ignore_errors=True)
         return new_count + defer_count
 
@@ -946,8 +991,7 @@ class FrontierCrawler:
         if getattr(self, "cuckoo", None) is not None:
             self.cuckoo.delete_df(expired)
         if self.bloom is not None:
-            self.bloom = self._new_bloom()
-            self.bloom.add_df(self.store.read("seen"))
+            self.bloom = self._bloom_from_seen()
             self.bloom.save(self._bloom_path)
             self._sync_bloom_membership()
         return expired
@@ -986,10 +1030,11 @@ class FrontierCrawler:
         Each micro-batch of canonicalised, stream-deduped urls is
         treated exactly like a round's discovered links
         (crawler.py:160-163 — enqueue ⇒ enter seen):
-          * anti-joined against the seen table (bloom-prefiltered), so
-            an already-seen url is never re-enqueued;
+          * anti-joined against the seen table (bloom-prefiltered once
+            the bloom is on), so an already-seen url is never
+            re-enqueued;
           * appended to BOTH the next frontier partition and the seen
-            table, and added to the bloom sidecar;
+            table, and added to the bloom (when on);
           * its authorities get their robots.txt fetched before any
             fetch of theirs: the round that reads the batch (the first
             of the next crawl run, or a sweeping round) runs the robots
@@ -1035,6 +1080,11 @@ class FrontierCrawler:
                 return
             rnd = (self.store.latest_round() or 0) + 1
             n_new = self._admit(self._frontier_rows(batch_df, rnd), rnd)
+            if self.bloom is not None:
+                # the commit below makes the batch durable; the filter
+                # that now holds it must be too, or a reopened crawler
+                # loads one that misses it (a false negative refetches)
+                self.bloom.save(self._bloom_path)
             # durable per-batch commit: the snapshot round stays at the
             # last crawl round (rnd - 1), so later batches land in the
             # same next-round partition and continue_crawl resumes at it
@@ -1102,9 +1152,12 @@ class FrontierCrawler:
         # runs the robots phase over its frontier, which fetches any
         # authority not yet in the table.
         self._rstate = RobotsState.from_table(self.store.paths("robots"))
-        if cfg.bloom_enabled and self.bloom is None:
-            # sidecar missing → rebuild the filter from the seen table
-            self.bloom = self._new_bloom()
-            self.bloom.add_df(self.store.read("seen"))
+        if cfg.bloom_enabled and self.bloom is None and \
+                self._outgrows_broadcast(
+                    _parquet_bytes(self.store.paths("seen"))):
+            # no loadable sidecar, and seen has outgrown a broadcast
+            # join → rebuild the filter from the seen table (below the
+            # limit the rounds keep testing and build it when due)
+            self.bloom = self._bloom_from_seen()
         self._sync_bloom_membership()
         return self._run_rounds(start_round=last + 1)

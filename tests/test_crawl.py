@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from simplecrawler_spark.config import CrawlConfig
 from simplecrawler_spark.plans.crawl import FrontierCrawler
+from simplecrawler_spark.plans.tables import footer_counts
 from simplecrawler_spark.sources.fetch import TableFetcher
 from simplecrawler_spark.sources.fixtures import (
     ROBOTS_FIXTURE_TXT, cli_rows, crawler_server_rows, site_graph_df,
@@ -370,7 +371,8 @@ def test_resume_identical_final_state(spark, tmp_path):
     assert partial.issubset(resumed.result_urls())
 
 
-def test_resume_with_incompatible_bloom_scheme(spark, tmp_path):
+def test_resume_with_incompatible_bloom_scheme(spark, tmp_path,
+                                              no_broadcast):
     """A checkpoint whose bloom.npz was written under a different
     position scheme must not abort the resume: the load raises
     ValueError (cross-scheme bitsets false-negative → duplicate
@@ -1047,6 +1049,8 @@ def test_budget_deferred_seed_recorded_when_fetched(spark, tmp_path,
     with open(log) as fh:
         gated = sum(int(line) for line in fh)
     assert gated == sum(x["fetched"] + x["deferred"] for x in m.values())
+    # rounds that deferred or discovered nothing leave no empty dir
+    assert all(footer_counts([p])[0] for p in c.store.paths("frontier"))
 
 
 def test_blocked_seed_count_survives_kill_and_resume(spark, tmp_path):
@@ -1247,3 +1251,110 @@ def test_compact_every_round_parity(spark, tmp_path):
         spark, fetcher, str(tmp_path / "compacted" / "crawl"), cfg2)
     resumed.continue_crawl()
     assert resumed.result_urls() == a.result_urls()
+
+
+# -- the seen-set Bloom switches on once seen outgrows a broadcast join -----
+
+def _bloom_crawl(spark, root, graph, seed):
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
+    c = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg, root=str(root))
+    c.crawl(seed)
+    return c
+
+
+@pytest.fixture(scope="module")
+def bloom_graph(spark, tmp_path_factory):
+    """A graph a cross-host crawl covers in six rounds, its seed, and
+    that crawl run at the session's default broadcast limit."""
+    from simplecrawler_spark.sources.fixtures import synthetic_graph
+
+    graph = synthetic_graph(spark, n_pages=300, n_hosts=4, out_degree=5)
+    seed = graph.agg(F.min("url")).first()[0]
+    return graph, seed, _bloom_crawl(
+        spark, tmp_path_factory.mktemp("plain"), graph, seed)
+
+
+def _seen_state(c):
+    return (_per_round(c),
+            sorted(r.url_norm for r in c.store.read("seen").collect()))
+
+
+def _switch_on_limit(plain) -> int:
+    """A broadcast limit a few bytes above the seen bytes round 0
+    writes: round 1 still tests below it and round 2 above it, so
+    round 2 builds the filter and round 3 is the first to consult it."""
+    return _round_metrics(plain)[1]["seen_bytes"] + 64
+
+
+def test_small_crawl_builds_no_bloom(spark, tmp_path, bloom_graph,
+                                     broadcast_limit):
+    """While seen fits a broadcast join the filter saves no shuffle:
+    a default crawl of a small graph builds none, writes no bloom
+    sidecar and tests the seen bytes every round. With broadcasts off
+    the filter is on from round 1, and every round fetches the same
+    pages."""
+    graph, seed, plain = bloom_graph
+    assert plain.bloom is None
+    assert not os.path.exists(plain._bloom_path)
+    m = _round_metrics(plain)
+    assert len(m) == 6
+    assert not any(x["bloom"] for x in m.values())
+    assert m[0]["seen_bytes"] == 0
+    assert all(m[r]["seen_bytes"] > m[r - 1]["seen_bytes"]
+               for r in range(1, 6))
+
+    broadcast_limit(-1)
+    filtered = _bloom_crawl(spark, tmp_path, graph, seed)
+    assert filtered.bloom is not None
+    assert os.path.exists(filtered._bloom_path)
+    mf = _round_metrics(filtered)
+    assert [mf[r]["bloom"] for r in range(6)] == [False] + [True] * 5
+    assert [mf[r]["seen_bytes"] for r in range(6)] == [0] + [None] * 5
+    assert _per_round(filtered) == _per_round(plain)
+
+
+def test_bloom_switches_on_mid_crawl(spark, tmp_path, bloom_graph,
+                                     broadcast_limit):
+    graph, seed, plain = bloom_graph
+    limit = _switch_on_limit(plain)
+    broadcast_limit(limit)
+    c = _bloom_crawl(spark, tmp_path, graph, seed)
+    m = _round_metrics(c)
+    assert [m[r]["bloom"] for r in range(6)] == [False] * 3 + [True] * 3
+    assert m[1]["seen_bytes"] <= limit < m[2]["seen_bytes"]
+    assert all(m[r]["seen_bytes"] is None for r in (3, 4, 5))
+    # every seen row reached the filter: built from the table, then
+    # each later round's admissions added
+    assert c.bloom.added == c.store.read("seen").count()
+    assert _seen_state(c) == _seen_state(plain)
+
+
+def test_bloom_switch_on_survives_kill_and_resume(spark, tmp_path,
+                                                  bloom_graph,
+                                                  broadcast_limit):
+    """Kill the crawl while round 2 builds the filter (round 1
+    committed, no sidecar written): the committed seen table is past
+    the limit, so continue_crawl rebuilds the filter from it before
+    replaying round 2, and the crawl ends in the uninterrupted state."""
+    graph, seed, plain = bloom_graph
+    broadcast_limit(_switch_on_limit(plain))
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
+    root = str(tmp_path / "killed")
+    killed = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg, root=root)
+
+    def crash():
+        raise RuntimeError("killed")
+
+    killed._bloom_from_seen = crash
+    with pytest.raises(RuntimeError, match="killed"):
+        killed.crawl(seed)
+    assert killed.store.latest_round() == 1
+
+    resumed = FrontierCrawler.resume(
+        spark, TableFetcher(graph, cfg), root, cfg)
+    assert resumed.bloom is None  # nothing to load
+    resumed.continue_crawl()
+    m = _round_metrics(resumed)
+    assert [m[r]["bloom"] for r in range(6)] == [False] * 2 + [True] * 4
+    assert resumed.bloom.added == resumed.store.read("seen").count()
+    assert _seen_state(resumed) == _seen_state(plain)

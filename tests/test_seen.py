@@ -95,7 +95,8 @@ def test_bloom_sidecar_matches_broadcast(spark, tmp_path):
     assert all(via_sidecar[u] for u in cand_urls if u in set(seen_urls))
 
 
-def test_crawl_bloom_sidecar_mode_same_visited_set(spark, tmp_path):
+def test_crawl_bloom_sidecar_mode_same_visited_set(spark, tmp_path,
+                                                   no_broadcast):
     """Forced sidecar membership end-to-end: identical visited set to
     the (default) broadcast mode."""
     from simplecrawler_spark.config import CrawlConfig
@@ -108,10 +109,12 @@ def test_crawl_bloom_sidecar_mode_same_visited_set(spark, tmp_path):
     results = {}
     for mode in ("broadcast", "sidecar"):
         cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                          bloom_min_items=1, bloom_membership=mode)
+                          bloom_membership=mode)
         crawler = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
                                   root=str(tmp_path / mode))
         crawler.crawl(seed)
+        assert crawler.bloom is not None
+        assert (crawler.bloom.sidecar_dir is not None) == (mode == "sidecar")
         results[mode] = crawler.result_urls()
     assert results["sidecar"] == results["broadcast"]
     assert len(results["sidecar"]) > 100
@@ -243,7 +246,7 @@ def test_cuckoo_sidecar_reexport_to_new_dir(spark, tmp_path):
         str(tmp_path / "a"))
 
 
-def test_attach_cuckoo_expire_recrawl(spark, tmp_path):
+def test_attach_cuckoo_expire_recrawl(spark, tmp_path, no_broadcast):
     """attach_cuckoo arms the sidecar path on the crawler's snapshot
     root; expire_seen then takes per-key cuckoo deletes with no
     broadcast, and resume() reopens the filter from its manifest."""
@@ -254,12 +257,12 @@ def test_attach_cuckoo_expire_recrawl(spark, tmp_path):
 
     graph = synthetic_graph(spark, n_pages=400, n_hosts=3, out_degree=5)
     seed = graph.agg(F.min("url")).first()[0]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=10,
-                      bloom_min_items=1)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=10)
     fetcher = TableFetcher(graph, cfg)
     crawler = FrontierCrawler(spark, fetcher, cfg,
                               root=str(tmp_path / "c"))
     crawler.crawl(seed)
+    assert crawler.bloom is not None  # expire_seen rebuilds it below
     cf = crawler.attach_cuckoo(capacity=1 << 14)
     assert cf.sidecar_dir is not None
     some = [r.url_norm for r in
@@ -276,7 +279,7 @@ def test_attach_cuckoo_expire_recrawl(spark, tmp_path):
     assert all(u not in reopened.cuckoo for u in gone)
 
 
-def test_bloom_grows_when_saturated(spark, tmp_path):
+def test_bloom_grows_when_saturated(spark, tmp_path, no_broadcast):
     """Amortised-doubling rebuild: crawl a graph far bigger than the
     initial bloom capacity; the filter must end up resized with no
     change to the visited set."""
@@ -289,8 +292,7 @@ def test_bloom_grows_when_saturated(spark, tmp_path):
     graph = synthetic_graph(spark, n_pages=3000, n_hosts=4, out_degree=6)
     seed = graph.agg(F.min("url")).first()[0]
     cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                      bloom_enabled=True, bloom_min_items=1,
-                      bloom_initial_capacity=64)
+                      bloom_enabled=True, bloom_initial_capacity=64)
     crawler = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
                               root=str(tmp_path / "b"))
     # shrink the initial filter way below the graph size

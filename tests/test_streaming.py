@@ -113,6 +113,44 @@ def test_ingest_stream_registers_state(spark, tmp_path):
     assert first <= final
 
 
+def test_ingest_stream_reaches_saved_bloom(spark, tmp_path, no_broadcast):
+    """With the seen-set Bloom on, a micro-batch the sink admits
+    between crawls reaches the SAVED filter too: a crawler reopened
+    from the root loads a filter holding every seen row, so the
+    streamed page's self-link is not taken for a new url and the page
+    is fetched once."""
+    from pyspark.sql import functions as F
+
+    from simplecrawler_spark.config import CrawlConfig
+    from simplecrawler_spark.plans.crawl import FrontierCrawler
+    from simplecrawler_spark.sources.fetch import TableFetcher
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links, site_graph_df,
+    )
+
+    a, b = "http://a.test", "http://b.test"
+    rows = [_row(a + "/", body=make_html_from_links(["/p1"])),
+            _row(a + "/p1", body=""),
+            _row(b + "/ok", body=make_html_from_links(["/ok"]))]
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
+    root = str(tmp_path / "c")
+    crawler = FrontierCrawler(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg, root=root)
+    crawler.crawl(a)
+    assert crawler.bloom is not None
+    src = tmp_path / "drop"
+    src.mkdir()
+    (src / "seeds.txt").write_text(f"{b}/ok\n")
+    crawler.ingest_stream(str(src), str(tmp_path / "ckpt")).awaitTermination(120)
+
+    reopened = FrontierCrawler.resume(
+        spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
+    assert reopened.bloom.added == reopened.store.read("seen").count()
+    reopened.continue_crawl()
+    assert (reopened.results().where(F.col("url_norm") == f"{b}/ok")
+            .count()) == 1
+
+
 def test_stream_rollup_matches_batch(spark, tmp_path):
     """Batch/stream parity for the windowed event rollup: the same
     transformation drained as a streaming query (complete mode,
