@@ -93,11 +93,13 @@ class CrawlConfig:
     round_budget_mode: str = "cheapest"
     # bloom seen-filter sidecar: a prefilter that keeps definitely-new
     # candidates out of the seen anti-join's shuffle. The crawl builds
-    # it (from the seen table) only once seen's parquet bytes exceed
-    # spark.sql.autoBroadcastJoinThreshold — below that the planner
-    # broadcasts seen and there is no shuffle to save — and keeps it
-    # from then on. False: exact anti-join only, in every round.
-    bloom_enabled: bool = True
+    # it (from the seen table) only once seen's parquet file bytes
+    # exceed spark.sql.autoBroadcastJoinThreshold — roughly where the
+    # planner stops broadcasting seen; below it there is no shuffle to
+    # save — and keeps it from then on. Off by default: at 400k pages
+    # the plain exact anti-join beat it on both sides of that limit
+    # (README, "Scale design").
+    bloom_enabled: bool = False
     bloom_fpp: float = 0.001
     # filter sizing floor: the filter is sized for max(this, 4 x seen
     # rows) when built; past ~4x its size the crawler rebuilds it the

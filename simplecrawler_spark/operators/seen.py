@@ -13,8 +13,9 @@ out of that shuffle:
 While the seen table is small enough for the planner to broadcast,
 the anti-join has no shuffle to save, so the crawl (plans/crawl.py)
 runs the plain anti-join and builds no filter. It builds one from the
-seen table once seen's parquet bytes exceed
-spark.sql.autoBroadcastJoinThreshold, and keeps it from then on.
+seen table once seen's parquet file bytes exceed
+spark.sql.autoBroadcastJoinThreshold (an approximation of the
+planner's choice), and keeps it from then on.
 
 Bloom bit positions are computed JVM-side (`xxhash64(url_norm, seed_i)
 mod m` — whole-stage codegen); Python only does vectorised numpy bit

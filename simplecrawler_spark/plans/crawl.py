@@ -31,13 +31,15 @@ Scale properties:
     flat across rounds (no unbounded plan growth), and a killed job
     resumes from the last committed snapshot exactly.
   * the seen anti-join is exact, and the planner broadcasts `seen`
-    while it is small. Once the seen table's parquet bytes pass the
-    session's spark.sql.autoBroadcastJoinThreshold, the join shuffles,
-    and from the next round on a Bloom prefilter (operators/seen.py)
-    keeps definitely-new candidates out of that shuffle; before that
-    the filter would save nothing, so none is built. The politeness
-    window is the only per-host shuffle; the fetch input is
-    salted/rebalanced on url_hash so hot hosts don't serialise a stage.
+    while it is small, when a Bloom prefilter would save nothing. So
+    with bloom_enabled the crawl builds the filter (operators/seen.py),
+    which keeps definitely-new candidates out of the join's shuffle,
+    only once the seen table's parquet file bytes pass the session's
+    spark.sql.autoBroadcastJoinThreshold — a file-bytes rule that
+    approximates the planner's choice, erring towards turning the
+    filter on early. The politeness window is the only per-host
+    shuffle; the fetch input is salted/rebalanced on url_hash so hot
+    hosts don't serialise a stage.
   * per-round metrics and the driver's counters (seeds, done seeds,
     robots rules and delays) come free from parquet footers — no extra
     count() jobs on the hot path, and no url or authority is collected
@@ -50,8 +52,8 @@ tests/test_crawl.py (table graphs) and tests/test_reference_e2e.py
 
 from __future__ import annotations
 
-import glob
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -82,11 +84,15 @@ from simplecrawler_spark.plans.tables import SnapshotStore, footer_counts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
 
 
-def _parquet_bytes(paths: list[str]) -> int:
-    """Summed size of the parquet files in the data dirs ``paths`` (a
-    driver listdir; no footer read, no Spark job)."""
-    return sum(os.path.getsize(f) for p in paths
-               for f in glob.glob(os.path.join(p, "*.parquet")))
+def _broadcast_limit(spark: SparkSession) -> int:
+    """spark.sql.autoBroadcastJoinThreshold in bytes, parsed as Spark
+    parses a byte size (``10485760b``, ``10m``, ``-1``)."""
+    value = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", value.strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m[1]) << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40,
+                         "p": 50}[m[2]]
 
 
 _LOG_EVENT_ORDER = {"ROBOTS_BLOCKED": 0, "CRAWLING": 1, "VISITED": 2,
@@ -251,13 +257,14 @@ class FrontierCrawler:
             F.lit(rnd).alias("round_added"))
 
     def _outgrows_broadcast(self, seen_bytes: int) -> bool:
-        """True once ``seen_bytes`` of seen-table parquet exceed the
-        session's broadcast limit (spark.sql.autoBroadcastJoinThreshold,
-        units parsed by SQLConf; -1 never broadcasts, so it always
-        holds): the seen anti-join then shuffles, and only then does the
-        Bloom prefilter have a shuffle to save."""
-        return seen_bytes > (self.spark._jsparkSession.sessionState()
-                             .conf().autoBroadcastJoinThreshold())
+        """True once ``seen_bytes`` of seen-table parquet files exceed
+        spark.sql.autoBroadcastJoinThreshold (-1: always). A file-bytes
+        rule that only approximates the planner's join choice: the
+        planner sizes the projected (url_hash, url_norm) side, which is
+        smaller than the files, and under AQE it follows runtime
+        shuffle stats. So the rule may turn the Bloom prefilter on
+        while seen is still broadcast."""
+        return seen_bytes > _broadcast_limit(self.spark)
 
     def _bloom_from_seen(self) -> BloomSeen:
         """A filter holding every row of the seen table, sized from its
@@ -680,7 +687,7 @@ class FrontierCrawler:
         bloom_on = self.bloom is not None and self.bloom.added > 0
         seen_bytes, rebuild = None, False
         if cfg.bloom_enabled and self.bloom is None:
-            seen_bytes = _parquet_bytes(self.store.paths("seen"))
+            seen_bytes = self.store.bytes("seen")
             rebuild = self._outgrows_broadcast(seen_bytes)
         if bloom_on:
             # the bloom split consumes cand twice (the definitely-new
@@ -1153,8 +1160,7 @@ class FrontierCrawler:
         # authority not yet in the table.
         self._rstate = RobotsState.from_table(self.store.paths("robots"))
         if cfg.bloom_enabled and self.bloom is None and \
-                self._outgrows_broadcast(
-                    _parquet_bytes(self.store.paths("seen"))):
+                self._outgrows_broadcast(self.store.bytes("seen")):
             # no loadable sidecar, and seen has outgrown a broadcast
             # join → rebuild the filter from the seen table (below the
             # limit the rounds keep testing and build it when due)

@@ -34,15 +34,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+def _data_files(paths: list[str]) -> list[str]:
+    """The parquet data files of the table dirs ``paths`` (a driver
+    listdir)."""
+    return [f for path in paths
+            for f in sorted(glob.glob(os.path.join(path, "*.parquet")))]
+
+
 def _parquet_lineage(path: str) -> list[dict]:
     """Exact per-file row counts from parquet footers (driver-side,
     no Spark job)."""
     import pyarrow.parquet as pq
 
-    entries = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        entries.append({"file": f, "rows": pq.read_metadata(f).num_rows})
-    return entries
+    return [{"file": f, "rows": pq.read_metadata(f).num_rows}
+            for f in _data_files([path])]
 
 
 def footer_counts(paths: list[str], columns: tuple[str, ...] = ()
@@ -56,16 +61,15 @@ def footer_counts(paths: list[str], columns: tuple[str, ...] = ()
     import pyarrow.parquet as pq
 
     rows, nulls = 0, dict.fromkeys(columns, 0)
-    for path in paths:
-        for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-            md = pq.read_metadata(f)
-            rows += md.num_rows
-            names = md.schema.names
-            for g in range(md.num_row_groups):
-                for c in columns:
-                    stats = md.row_group(g).column(names.index(c)).statistics
-                    if stats is not None and stats.has_null_count:
-                        nulls[c] += stats.null_count
+    for f in _data_files(paths):
+        md = pq.read_metadata(f)
+        rows += md.num_rows
+        names = md.schema.names
+        for g in range(md.num_row_groups):
+            for c in columns:
+                stats = md.row_group(g).column(names.index(c)).statistics
+                if stats is not None and stats.has_null_count:
+                    nulls[c] += stats.null_count
     return rows, nulls
 
 
@@ -280,6 +284,12 @@ class SnapshotStore:
         return sum(f["rows"] for p in paths
                    for f in recorded.get(p) or _parquet_lineage(p))
 
+    def bytes(self, table: str) -> int:
+        """Summed parquet file bytes of ``table`` as read() would see
+        it (a driver listdir; no footer read, no Spark job)."""
+        return sum(os.path.getsize(f)
+                   for f in _data_files(self.paths(table)))
+
     # -- maintenance (Iceberg expireSnapshots / removeOrphanFiles /
     #    rewriteDataFiles) ---------------------------------------------------
 
@@ -335,21 +345,15 @@ class SnapshotStore:
             groups.setdefault(None if merge_partitions else tag,
                               []).append(p)
 
-        def _files(dirs):
-            out = []
-            for d in dirs:
-                out.extend(glob.glob(os.path.join(d, "*.parquet")))
-            return out
-
         schema = self.schemas.get(table)
         reader = (self.spark.read.schema(schema) if schema is not None
                   else self.spark.read)
         rewritten: dict[str | None, dict] = {}
-        files_before = len(_files(committed))
+        files_before = len(_data_files(committed))
         for tag, dirs in groups.items():
             if len(dirs) < min_dirs:
                 continue
-            total = sum(os.path.getsize(f) for f in _files(dirs))
+            total = sum(os.path.getsize(f) for f in _data_files(dirs))
             n_out = max(1, int(total // target_bytes) + 1)
             newdir = os.path.join(self.root, "data", table,
                                   "c" + uuid.uuid4().hex[:11])
@@ -382,7 +386,7 @@ class SnapshotStore:
                 "dirs_before": len(committed),
                 "dirs_after": len(final),
                 "files_before": files_before,
-                "files_after": len(_files(final))}
+                "files_after": len(_data_files(final))}
 
     # -- maintenance (Iceberg expireSnapshots / removeOrphanFiles) ---------
 

@@ -380,7 +380,8 @@ def test_resume_with_incompatible_bloom_scheme(spark, tmp_path,
     from the seen table — same path as a missing sidecar."""
     import numpy as np
 
-    cfg = CrawlConfig(max_per_host_per_round=2, max_rounds=2)
+    cfg = CrawlConfig(max_per_host_per_round=2, max_rounds=2,
+                      bloom_enabled=True)
     rows = crawler_server_rows(BASE)
     crawler = crawl(spark, tmp_path / "killed", rows, BASE, cfg)
 
@@ -390,7 +391,8 @@ def test_resume_with_incompatible_bloom_scheme(spark, tmp_path,
     z["scheme"] = "per-k-seed"
     np.savez(crawler._bloom_path[:-4], **z)
 
-    cfg2 = CrawlConfig(max_per_host_per_round=2, max_rounds=50)
+    cfg2 = CrawlConfig(max_per_host_per_round=2, max_rounds=50,
+                       bloom_enabled=True)
     fetcher = TableFetcher(site_graph_df(spark, rows), cfg2)
     resumed = FrontierCrawler.resume(
         spark, fetcher, str(tmp_path / "killed" / "crawl"), cfg2)
@@ -1255,9 +1257,13 @@ def test_compact_every_round_parity(spark, tmp_path):
 
 # -- the seen-set Bloom switches on once seen outgrows a broadcast join -----
 
+_BLOOM_CFG = CrawlConfig(same_authority_only=False, max_rounds=20,
+                         bloom_enabled=True)
+
+
 def _bloom_crawl(spark, root, graph, seed):
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
-    c = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg, root=str(root))
+    c = FrontierCrawler(spark, TableFetcher(graph, _BLOOM_CFG), _BLOOM_CFG,
+                        root=str(root))
     c.crawl(seed)
     return c
 
@@ -1265,7 +1271,8 @@ def _bloom_crawl(spark, root, graph, seed):
 @pytest.fixture(scope="module")
 def bloom_graph(spark, tmp_path_factory):
     """A graph a cross-host crawl covers in six rounds, its seed, and
-    that crawl run at the session's default broadcast limit."""
+    that crawl, with the filter asked for, run at the session's
+    default broadcast limit."""
     from simplecrawler_spark.sources.fixtures import synthetic_graph
 
     graph = synthetic_graph(spark, n_pages=300, n_hosts=4, out_degree=5)
@@ -1289,10 +1296,11 @@ def _switch_on_limit(plain) -> int:
 def test_small_crawl_builds_no_bloom(spark, tmp_path, bloom_graph,
                                      broadcast_limit):
     """While seen fits a broadcast join the filter saves no shuffle:
-    a default crawl of a small graph builds none, writes no bloom
-    sidecar and tests the seen bytes every round. With broadcasts off
-    the filter is on from round 1, and every round fetches the same
-    pages."""
+    a crawl of a small graph that asks for it at the default limit
+    builds none, writes no bloom sidecar and tests the seen bytes
+    every round. With broadcasts off the filter is on from round 1,
+    and every round fetches the same pages. Without bloom_enabled no
+    round tests anything."""
     graph, seed, plain = bloom_graph
     assert plain.bloom is None
     assert not os.path.exists(plain._bloom_path)
@@ -1311,6 +1319,15 @@ def test_small_crawl_builds_no_bloom(spark, tmp_path, bloom_graph,
     assert [mf[r]["bloom"] for r in range(6)] == [False] + [True] * 5
     assert [mf[r]["seen_bytes"] for r in range(6)] == [0] + [None] * 5
     assert _per_round(filtered) == _per_round(plain)
+
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
+    off = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
+                          root=str(tmp_path / "off"))
+    off.crawl(seed)
+    assert off.bloom is None
+    assert all(x["seen_bytes"] is None and not x["bloom"]
+               for x in _round_metrics(off).values())
+    assert _per_round(off) == _per_round(plain)
 
 
 def test_bloom_switches_on_mid_crawl(spark, tmp_path, bloom_graph,
@@ -1338,7 +1355,7 @@ def test_bloom_switch_on_survives_kill_and_resume(spark, tmp_path,
     replaying round 2, and the crawl ends in the uninterrupted state."""
     graph, seed, plain = bloom_graph
     broadcast_limit(_switch_on_limit(plain))
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
+    cfg = _BLOOM_CFG
     root = str(tmp_path / "killed")
     killed = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg, root=root)
 
@@ -1358,3 +1375,18 @@ def test_bloom_switch_on_survives_kill_and_resume(spark, tmp_path,
     assert [m[r]["bloom"] for r in range(6)] == [False] * 2 + [True] * 4
     assert resumed.bloom.added == resumed.store.read("seen").count()
     assert _seen_state(resumed) == _seen_state(plain)
+
+
+@pytest.mark.parametrize("value, limit", [
+    (None, 10 << 20), ("10m", 10 << 20), ("256KB", 256 << 10),
+    ("4096", 4096), ("-1", -1)])
+def test_broadcast_limit_reads_byte_sizes(spark, broadcast_limit,
+                                          value, limit):
+    """The switch-on test reads the broadcast limit through the public
+    session conf and parses its byte-size units as Spark does (None:
+    the default, which the conf prints as 10485760b)."""
+    from simplecrawler_spark.plans.crawl import _broadcast_limit
+
+    if value is not None:
+        broadcast_limit(value)
+    assert _broadcast_limit(spark) == limit

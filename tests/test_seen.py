@@ -109,7 +109,7 @@ def test_crawl_bloom_sidecar_mode_same_visited_set(spark, tmp_path,
     results = {}
     for mode in ("broadcast", "sidecar"):
         cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                          bloom_membership=mode)
+                          bloom_enabled=True, bloom_membership=mode)
         crawler = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
                                   root=str(tmp_path / mode))
         crawler.crawl(seed)
@@ -257,7 +257,8 @@ def test_attach_cuckoo_expire_recrawl(spark, tmp_path, no_broadcast):
 
     graph = synthetic_graph(spark, n_pages=400, n_hosts=3, out_degree=5)
     seed = graph.agg(F.min("url")).first()[0]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=10)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=10,
+                      bloom_enabled=True)
     fetcher = TableFetcher(graph, cfg)
     crawler = FrontierCrawler(spark, fetcher, cfg,
                               root=str(tmp_path / "c"))
