@@ -99,7 +99,6 @@ def crawl_bench(spark, n_pages: int, n_hosts: int = 64):
              graph.select("url").orderBy("url").limit(n_seeds).collect()]
 
     cfg = CrawlConfig(same_authority_only=False, max_rounds=6,
-                      bloom_enabled=True,
                       priority_source=os.environ.get(
                           "SPARK_GRAFT_PRIORITY", "indegree"),
                       link_extractor=os.environ.get(

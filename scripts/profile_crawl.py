@@ -38,8 +38,7 @@ def main() -> None:
     n_seeds = max(1, n_pages // 100)
     seeds = [r.url for r in
              graph.select("url").orderBy("url").limit(n_seeds).collect()]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=6,
-                      bloom_enabled=True)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=6)
     root_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
     # warm-up (same as bench)
@@ -68,9 +67,7 @@ def main() -> None:
             totals[k] = totals.get(k, 0.0) + v
         print(json.dumps({"round": m["round"],
                           "wall": round(m["wall_secs"], 2),
-                          "done": m["done_new"],
-                          "seen_bytes": m.get("seen_bytes"),
-                          "bloom": m.get("bloom"), "phases": ph}))
+                          "done": m["done_new"], "phases": ph}))
     acc = sum(totals.values())
     print("\n== phase totals ==")
     for k, v in sorted(totals.items(), key=lambda kv: -kv[1]):

@@ -66,9 +66,6 @@ def parse_args(argv):
     p.add_argument("--record-redirects", action="store_true")
     p.add_argument("--any-authority", action="store_true",
                    help="drop the same-authority filter (multi-site crawl)")
-    p.add_argument("--bloom", action="store_true",
-                   help="prefilter the seen anti-join with the Bloom "
-                        "sidecar once seen outgrows a broadcast join")
     p.add_argument("--salt-buckets", type=int, default=0)
     p.add_argument("--transcript", action="store_true",
                    help="record the per-URL crawl_log table and echo "
@@ -87,7 +84,6 @@ def build_config(a):
         trim_fragment=not a.with_fragment,
         record_redirects=a.record_redirects,
         same_authority_only=not a.any_authority,
-        bloom_enabled=a.bloom,
         salt_buckets=a.salt_buckets,
         max_rounds=a.max_rounds,
         crawl_log=a.transcript,

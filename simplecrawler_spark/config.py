@@ -4,8 +4,8 @@ Mirrors the reference Crawler config surface
 (/root/reference/simple_crawler/crawler.py:59-101: user_agent,
 max_workers, timeout, obey_robots, check_head, trim_query,
 trim_fragment) and adds the scale knobs the north rule mandates
-(BASELINE.json:14): politeness budgeting, salted partitioning, bloom
-seen-filter sizing, checkpointing.
+(BASELINE.json:14): politeness budgeting, salted partitioning,
+checkpointing.
 """
 
 from __future__ import annotations
@@ -91,28 +91,13 @@ class CrawlConfig:
     #     pending — those units go unused this round and its surplus
     #     rolls forward as deferred work).
     round_budget_mode: str = "cheapest"
-    # bloom seen-filter sidecar: a prefilter that keeps definitely-new
-    # candidates out of the seen anti-join's shuffle. The crawl builds
-    # it (from the seen table) only once seen's parquet file bytes
-    # exceed spark.sql.autoBroadcastJoinThreshold — roughly where the
-    # planner stops broadcasting seen; below it there is no shuffle to
-    # save — and keeps it from then on. Off by default: at 400k pages
-    # the plain exact anti-join beat it on both sides of that limit
-    # (README, "Scale design").
+    # retired seen-set Bloom switch: the seen set is the exact
+    # anti-join alone (the crawl's Bloom prefilter was measured slower
+    # on both sides of the broadcast limit — README, "Scale design"),
+    # so no code reads this. It stays only because
+    # perfbench/workloads.py passes it; the next benchmark change
+    # drops that argument, then the field.
     bloom_enabled: bool = False
-    bloom_fpp: float = 0.001
-    # filter sizing floor: the filter is sized for max(this, 4 x seen
-    # rows) when built; past ~4x its size the crawler rebuilds it the
-    # same way from the seen table (amortised doubling)
-    bloom_initial_capacity: int = 1 << 20
-    # membership evaluation: "broadcast" ships all bitsets to every
-    # executor (zero extra shuffle — right while the filter is small);
-    # "sidecar" co-partitions candidates on host_bucket and each task
-    # reads only its bucket's bitset file (the 10^10-URL path);
-    # "auto" switches to sidecar once the bitsets exceed the byte
-    # threshold below
-    bloom_membership: str = "auto"
-    bloom_sidecar_min_bytes: int = 256 << 20
     # retired robots knobs: the robots table is the only rule source for
     # the can_fetch gate and the politeness window (operators/robots.py,
     # operators/politeness.py), so no code reads these. They stay only

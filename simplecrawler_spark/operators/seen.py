@@ -1,32 +1,30 @@
-"""R4/R5 seen-set membership — exact anti-join + partitioned Bloom
-pre-filter, with a cuckoo-filter variant for deletion support
+"""R4/R5 seen-set membership — exact anti-join, plus a partitioned
+Bloom prefilter and a cuckoo filter as standalone operators
 (BASELINE.json:6,14; SURVEY.md §2.3 R4, §2.8).
 
 The reference keeps an exact in-memory Python set (crawler.py:81-83,
-160-163). At 10^10 URLs an exact set is a table, membership is an
-anti-join, and the Bloom sidecar exists to keep MOST candidate rows
-out of that shuffle:
+160-163). At 10^10 URLs an exact set is a table and membership is an
+anti-join on (url_hash, url_norm) — the norm equality guards hash
+collisions. That anti-join is the crawl's whole seen set
+(plans/crawl.py): a Bloom prefilter was measured slower there on both
+sides of the broadcast limit (README, "Scale design").
+
+``anti_join_seen(…, bloom)`` keeps the Bloom split for callers that
+hold a filter (streaming/dedup_stream.py):
 
   candidates ──bloom──┬── definitely-new (bit miss) ──────────┐
                       └── maybe-seen ── exact anti-join seen ─┴─ new
 
-While the seen table is small enough for the planner to broadcast,
-the anti-join has no shuffle to save, so the crawl (plans/crawl.py)
-runs the plain anti-join and builds no filter. It builds one from the
-seen table once seen's parquet file bytes exceed
-spark.sql.autoBroadcastJoinThreshold (an approximation of the
-planner's choice), and keeps it from then on.
+Bloom bit positions are computed JVM-side (xxhash64 double hashing —
+whole-stage codegen); Python only does vectorised numpy bit lookups
+per Arrow batch, with the bitsets (one per host_bucket,
+pmod(xxhash64(host), B)) in one Spark broadcast. False positives cost
+only a redundant exact check; false negatives are impossible, so
+correctness never depends on the filter.
 
-Bloom bit positions are computed JVM-side (`xxhash64(url_norm, seed_i)
-mod m` — whole-stage codegen); Python only does vectorised numpy bit
-lookups per Arrow batch. False positives cost only a redundant exact
-check; false negatives are impossible, so correctness never depends on
-the filter (the exact anti-join on (url_hash, url_norm) is the
-backstop, and the norm equality guards hash collisions at 10^10 rows).
-
-Partitioning: bitsets are per host_bucket (pmod(xxhash64(host), B)) so
-at cluster scale each executor loads only its slice from the sidecar;
-in-sandbox they live in one broadcast dict.
+``CuckooSeen`` supports deletes (BASELINE.json:14 "cuckoo-filter
+fallback for deletions"); nothing in the crawl consults it — expiry
+deletes seen-table rows (FrontierCrawler.expire_seen).
 """
 
 from __future__ import annotations
@@ -60,8 +58,8 @@ def _np_from_bytes(data: bytes) -> np.ndarray:
 
 def _as_sidecar(dir_or_io) -> SidecarIO:
     """Accept a plain directory path (wrapped in the local-FS
-    SidecarIO) or a ready SidecarIO (e.g. SnapshotStore.sidecar(),
-    or a shared-storage subclass)."""
+    SidecarIO) or a ready SidecarIO (e.g. a shared-storage
+    subclass)."""
     return dir_or_io if isinstance(dir_or_io, SidecarIO) \
         else SidecarIO(dir_or_io)
 
@@ -103,7 +101,6 @@ class BloomSeen:
         self.k = max(1, round(-math.log2(fpp)))
         self.n_buckets = n_buckets
         self.seed = seed
-        self.capacity = expected_items
         self.fpp = fpp
         self.bits = {b: np.zeros(self.m // 8, dtype=np.uint8)
                      for b in range(n_buckets)}
@@ -111,30 +108,6 @@ class BloomSeen:
         self._bc = None          # cached Spark broadcast of the bitsets
         self._bc_version = -1
         self._version = 0        # bumped on every mutation
-        # when set (save_buckets), membership runs co-partitioned: each
-        # task loads ONLY its bucket's bitset object instead of
-        # receiving every bucket via broadcast (the 10^10-scale path).
-        # All byte I/O goes through SidecarIO, so shared storage is a
-        # config change.
-        self.sidecar: SidecarIO | None = None
-
-    @property
-    def sidecar_dir(self) -> str | None:
-        """Compatibility surface: the sidecar root (or None). Assigning
-        a path arms the sidecar through the local-FS SidecarIO."""
-        return self.sidecar.root if self.sidecar is not None else None
-
-    @sidecar_dir.setter
-    def sidecar_dir(self, value) -> None:
-        self.sidecar = None if value is None else _as_sidecar(value)
-
-    def saturated(self) -> bool:
-        """True once the filter holds ~4x its design capacity — the
-        false-positive rate has degraded to the point where most
-        candidates fall through to the exact anti-join anyway, so the
-        owner should rebuild bigger from the seen table (amortised
-        doubling keeps total rebuild cost O(1) per URL)."""
-        return self.added > 4 * self.capacity
 
     # -- position expressions (JVM-side) -----------------------------------
 
@@ -152,15 +125,10 @@ class BloomSeen:
                     F.lit(self.m)).bitwiseOR(F.lit(1))
         return h1, h2
 
-    def _expand_positions(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """(n, k) int64 position matrix from the two hash columns."""
-        return _double_hash_positions(h1, h2, self.k, self.m)
-
     # -- updates ------------------------------------------------------------
 
     def add_df(self, df: DataFrame, url_col: str = "url_norm",
-               host_col: str = "host",
-               row_count: int | None = None) -> None:
+               host_col: str = "host") -> None:
         """OR the bits for every row of ``df`` into the bitsets.
         A precomputed ``host_bucket`` column is used when present
         (e.g. rebuilding straight from the seen table).
@@ -171,29 +139,10 @@ class BloomSeen:
         partial bitsets — n_buckets × m/8 bytes, NOT one row per URL —
         come back to the driver. Per-URL driver work would serialise
         the whole crawl at 10^10 scale.
-
-        Small batches (``row_count`` hint below ~64k) skip the shuffle:
-        positions come straight to the driver in one Arrow pass.
         """
         bucket = (F.col("host_bucket") if "host_bucket" in df.columns
                   else host_bucket_expr(F.col(host_col), self.n_buckets))
         h1e, h2e = self.hash_exprs(F.col(url_col))
-        if row_count is not None and row_count < 65536:
-            pdf = df.select(
-                bucket.alias("b"),
-                h1e.alias("h1"), h2e.alias("h2"),
-            ).toPandas()
-            if pdf.empty:
-                return
-            for b, grp in pdf.groupby("b"):
-                pos = self._expand_positions(
-                    grp["h1"].to_numpy(), grp["h2"].to_numpy()).ravel()
-                bits = self.bits[int(b)]
-                np.bitwise_or.at(bits, pos >> 3,
-                                 np.left_shift(1, (pos & 7)).astype(np.uint8))
-            self.added += len(pdf)
-            self._version += 1
-            return
         m, k = self.m, self.k
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -270,81 +219,15 @@ class BloomSeen:
         return _maybe(
             host_bucket_expr(F.col(host_col), self.n_buckets), h1e, h2e)
 
-    def flag_maybe_seen(self, df: DataFrame, url_col: str = "url_norm",
-                        host_col: str = "host") -> DataFrame:
-        """``df`` plus a ``_maybe`` boolean column, evaluated
-        CO-PARTITIONED against the per-bucket bitset sidecar
-        (requires a prior save_buckets()).
-
-        This is the membership path that survives 10^10 URLs: the
-        broadcast variant ships EVERY bucket's bitset to EVERY executor
-        (~1.4 GB per 10^9 URLs, re-shipped as the filter grows), while
-        here the candidates are hash-partitioned on host_bucket and
-        each task reads only its own bucket slice from shared storage
-        (object store at cluster scale). The price is one extra shuffle
-        of the candidate rows — cheap against GB-scale bitset traffic,
-        and the rows were headed into the exact anti-join shuffle
-        anyway."""
-        if self.sidecar is None:
-            raise RuntimeError("flag_maybe_seen needs save_buckets() first")
-        io_obj = self.sidecar  # picklable (root string only)
-        out_schema = T.StructType(
-            df.schema.fields + [T.StructField("_maybe", T.BooleanType())])
-        pass_cols = df.columns
-        h1e, h2e = self.hash_exprs(F.col(url_col))
-        pre = df.withColumn(
-            "_b", host_bucket_expr(F.col(host_col), self.n_buckets)
-        ).withColumn("_h1", h1e).withColumn("_h2", h2e)
-        part = pre.repartition(self.n_buckets, F.col("_b"))
-        m, k = self.m, self.k
-
-        def gen(batches):
-            cache: dict[int, np.ndarray] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                bkt = pdf["_b"].to_numpy()
-                pos = _double_hash_positions(
-                    pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), k, m)
-                out = np.ones(len(bkt), dtype=bool)
-                for b in np.unique(bkt):
-                    bits = cache.get(int(b))
-                    if bits is None:
-                        bits = _np_from_bytes(
-                            io_obj.read_bytes(f"bucket-{int(b)}.npy"))
-                        cache[int(b)] = bits
-                    rows = bkt == b
-                    p = pos[rows]
-                    hit = (bits[p >> 3]
-                           & (1 << (p & 7)).astype(np.uint8)) != 0
-                    out[rows] = hit.all(axis=1)
-                res = pdf[pass_cols].copy()
-                res["_maybe"] = out
-                yield res
-
-        return part.mapInPandas(gen, out_schema)
-
-    # -- persistence (checkpoint sidecar) ------------------------------------
-
-    def save_buckets(self, dir_or_io) -> None:
-        """Write one bitset object per host_bucket (the co-partitioned
-        membership sidecar) and arm flag_maybe_seen. Takes a directory
-        path (local SidecarIO) or any SidecarIO — at cluster scale
-        these are one object per bucket in shared storage; a task
-        fetches only its slice."""
-        io_obj = _as_sidecar(dir_or_io)
-        for b, a in self.bits.items():
-            io_obj.write_bytes(f"bucket-{b}.npy", _np_bytes(a))
-        self.sidecar = io_obj
+    # -- persistence ----------------------------------------------------------
 
     def save(self, path: str) -> None:
-        # uncompressed on purpose: this runs once per round on the
-        # driver, and compressing near-random bitset bytes costs ~1s+
-        # of serial time per round for little size gain
+        # uncompressed on purpose: compressing near-random bitset bytes
+        # costs serial driver time for little size gain
         os.makedirs(os.path.dirname(path), exist_ok=True)
         np.savez(
             path, m=self.m, k=self.k, seed=self.seed, added=self.added,
-            capacity=self.capacity, fpp=self.fpp,
+            fpp=self.fpp,
             scheme=POSITION_SCHEME,
             **{f"b{b}": a for b, a in self.bits.items()})
 
@@ -355,8 +238,7 @@ class BloomSeen:
         if scheme != POSITION_SCHEME:
             # A bitset built under a different position scheme would
             # silently FALSE-NEGATIVE (→ duplicate crawls). Refuse —
-            # the owner rebuilds from the seen table, exactly the
-            # saturation path.
+            # the owner rebuilds from its seen table.
             raise ValueError(
                 f"bloom file {path} uses position scheme {scheme!r}; "
                 f"this build uses {POSITION_SCHEME!r} — rebuild from "
@@ -364,12 +246,10 @@ class BloomSeen:
         obj = cls.__new__(cls)
         obj.m = int(z["m"]); obj.k = int(z["k"]); obj.seed = int(z["seed"])
         obj.added = int(z["added"])
-        obj.capacity = int(z["capacity"]) if "capacity" in z else obj.added + 1
         obj.fpp = float(z["fpp"]) if "fpp" in z else 1e-3
         obj._bc = None
         obj._bc_version = -1
         obj._version = 0
-        obj.sidecar_dir = None
         obj.bits = {}
         b = 0
         while f"b{b}" in z:
@@ -697,7 +577,7 @@ class CuckooSeen:
 
     def delete_df(self, df: DataFrame, url_col: str = "url_norm") -> int:
         """Delete every url of ``df``; returns the number removed.
-        This is the operation the Bloom sidecar cannot do — after an
+        This is the operation a Bloom filter cannot do — after an
         expiry pass the cuckoo stays exact-as-filter without a full
         rebuild (BASELINE.json:14)."""
         return self._apply_df(df, url_col, "delete")
@@ -716,13 +596,8 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     if bloom is None or bloom.added == 0:
         return candidates.join(seen_keys, ["url_hash", "url_norm"],
                                "left_anti")
-    if bloom.sidecar_dir is not None:
-        # co-partitioned sidecar membership (scale path) — each task
-        # loads only its bucket's bitset from shared storage
-        flagged = bloom.flag_maybe_seen(candidates)
-    else:
-        flagged = candidates.withColumn("_maybe",
-                                        bloom.maybe_seen_col(candidates))
+    flagged = candidates.withColumn("_maybe",
+                                    bloom.maybe_seen_col(candidates))
     definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
     maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
     # The exact check shuffles both sides on the join key; the bloom

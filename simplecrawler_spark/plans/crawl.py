@@ -18,11 +18,10 @@ north rule mandates (BASELINE.json:6,14):
       results    += fetched 2xx (parsed := mime-ok)     (R6; wrong-MIME done-not-parsed)
       links       = parsed pages → extract → trim → resolve(base_raw)
                     → canonicalize → same-authority     (P1/P2, F12, F16, F8, R3)
-      new         = dedupe(round) → anti-join(seen)     (R1/R4; bloom-
-                    prefiltered once seen outgrows a broadcast join)
+      new         = dedupe(round) → anti-join(seen)     (R1/R4; exact)
       seen       += new;  frontier_{r+1} = new ∪ deferred     (R9)
       snapshot    = commit (frontier, seen, results, done_seeds, robots,
-                    metrics, bloom sidecar once the bloom is on)
+                    metrics)
     Terminate when frontier_{r+1} is empty (R7/R8 — equivalent to the
     reference's seen==done / queue-timeout exits, SURVEY.md §2.6.1).
 
@@ -30,16 +29,12 @@ Scale properties:
   * every round's state round-trips through Parquet — lineage stays
     flat across rounds (no unbounded plan growth), and a killed job
     resumes from the last committed snapshot exactly.
-  * the seen anti-join is exact, and the planner broadcasts `seen`
-    while it is small, when a Bloom prefilter would save nothing. So
-    with bloom_enabled the crawl builds the filter (operators/seen.py),
-    which keeps definitely-new candidates out of the join's shuffle,
-    only once the seen table's parquet file bytes pass the session's
-    spark.sql.autoBroadcastJoinThreshold — a file-bytes rule that
-    approximates the planner's choice, erring towards turning the
-    filter on early. The politeness window is the only per-host
-    shuffle; the fetch input is salted/rebalanced on url_hash so hot
-    hosts don't serialise a stage.
+  * the seen set is the seen table and one exact (url_hash, url_norm)
+    anti-join, which the planner broadcasts while seen is small. A
+    Bloom prefilter was measured slower on both sides of the broadcast
+    limit (README, "Scale design"), so the crawl keeps none. The
+    politeness window is the only per-host shuffle; the fetch input is
+    salted/rebalanced on url_hash so hot hosts don't serialise a stage.
   * per-round metrics and the driver's counters (seeds, done seeds,
     robots rules and delays) come free from parquet footers — no extra
     count() jobs on the hot path, and no url or authority is collected
@@ -53,7 +48,6 @@ tests/test_crawl.py (table graphs) and tests/test_reference_e2e.py
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import tempfile
 import time
@@ -77,22 +71,11 @@ from simplecrawler_spark.operators.robots import (
     RobotsState, can_fetch, fetch_robots_table,
 )
 from simplecrawler_spark.operators.seen import (
-    BloomSeen, anti_join_seen, host_bucket_expr,
+    anti_join_seen, host_bucket_expr,
 )
 from simplecrawler_spark.plans import schemas
 from simplecrawler_spark.plans.tables import SnapshotStore, footer_counts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
-
-
-def _broadcast_limit(spark: SparkSession) -> int:
-    """spark.sql.autoBroadcastJoinThreshold in bytes, parsed as Spark
-    parses a byte size (``10485760b``, ``10m``, ``-1``)."""
-    value = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", value.strip().lower())
-    if m is None:
-        raise ValueError(f"not a byte size: {value!r}")
-    return int(m[1]) << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40,
-                         "p": 50}[m[2]]
 
 
 _LOG_EVENT_ORDER = {"ROBOTS_BLOCKED": 0, "CRAWLING": 1, "VISITED": 2,
@@ -163,8 +146,6 @@ class FrontierCrawler:
             "crawl_log": schemas.CRAWL_LOG, "robots": schemas.ROBOTS,
             "done_seeds": schemas.DONE_SEEDS,
         })
-        self.bloom: BloomSeen | None = None
-        self._bloom_path = os.path.join(self.root, "sidecar", "bloom.npz")
         # S4 robots state — three footer-derived counters over the
         # persisted robots TABLE, the only rule source (the gate, the
         # politeness window and split_missing read the table itself;
@@ -255,27 +236,6 @@ class FrontierCrawler:
             "url_hash", "url_norm",
             host_bucket_expr(F.col("host")).alias("host_bucket"),
             F.lit(rnd).alias("round_added"))
-
-    def _outgrows_broadcast(self, seen_bytes: int) -> bool:
-        """True once ``seen_bytes`` of seen-table parquet files exceed
-        spark.sql.autoBroadcastJoinThreshold (-1: always). A file-bytes
-        rule that only approximates the planner's join choice: the
-        planner sizes the projected (url_hash, url_norm) side, which is
-        smaller than the files, and under AQE it follows runtime
-        shuffle stats. So the rule may turn the Bloom prefilter on
-        while seen is still broadcast."""
-        return seen_bytes > _broadcast_limit(self.spark)
-
-    def _bloom_from_seen(self) -> BloomSeen:
-        """A filter holding every row of the seen table, sized from its
-        footer row count (4x, never below bloom_initial_capacity), so
-        it starts far from saturation."""
-        n = self.store.rows("seen")
-        bloom = BloomSeen(
-            expected_items=max(self.cfg.bloom_initial_capacity, 4 * n),
-            fpp=self.cfg.bloom_fpp)
-        bloom.add_df(self.store.read("seen"), row_count=n)
-        return bloom
 
     def _seed_table(self) -> DataFrame:
         """The seed set AS A TABLE: round-0 frontier url_norms."""
@@ -415,19 +375,14 @@ class FrontierCrawler:
     def _admit(self, rows: DataFrame, rnd: int) -> int:
         """Admit depth-0 frontier rows into round ``rnd`` the way a
         round admits its discovered links (crawler.py:160-163 —
-        enqueue ⇒ enter seen): anti-join seen (bloom-prefiltered once
-        the bloom is on), append to the frontier and seen tables and
-        add to the bloom.
+        enqueue ⇒ enter seen): anti-join seen, then append to the
+        frontier and seen tables.
         Returns the admitted row count (parquet footers)."""
-        new = anti_join_seen(rows, self.store.read("seen"),
-                             self.bloom).persist()
+        new = anti_join_seen(rows, self.store.read("seen")).persist()
         n_new = self.store.append_rows(
             self.store.append("frontier", new, partition=f"r{rnd}"))
         self.store.append("seen", self._seen_rows(new, rnd),
                           partition=f"r{rnd}")
-        if self.bloom is not None:
-            self.bloom.add_df(new, row_count=n_new)
-            self._sync_bloom_membership()
         new.unpersist()
         return n_new
 
@@ -679,22 +634,8 @@ class FrontierCrawler:
             .select("url_norm", "url_hash", "s.url_raw", "s.authority",
                     "s.host", "s.depth", "s.discovered_from", "n_disc")
         )
-        # R4: global dedupe against seen — the exact anti-join, Bloom-
-        # prefiltered once the filter is on. Until then, test (before
-        # this round writes to seen, so the figure is deterministic)
-        # whether seen has outgrown a broadcast join; the filter is
-        # built after this round's seen append if it has.
-        bloom_on = self.bloom is not None and self.bloom.added > 0
-        seen_bytes, rebuild = None, False
-        if cfg.bloom_enabled and self.bloom is None:
-            seen_bytes = self.store.bytes("seen")
-            rebuild = self._outgrows_broadcast(seen_bytes)
-        if bloom_on:
-            # the bloom split consumes cand twice (the definitely-new
-            # branch and the maybe-seen semi/anti pair): cache it so
-            # the Python parse chain runs exactly once
-            cand = cand.persist()
-        new = anti_join_seen(cand, self.store.read("seen"), self.bloom)
+        # R4: global dedupe against seen — the exact anti-join
+        new = anti_join_seen(cand, self.store.read("seen"))
         _mark("parse_canon_antijoin")
 
         # G6: priority signal for next round's scheduling ORDER BY
@@ -726,10 +667,9 @@ class FrontierCrawler:
             priority = F.lit(0.0)
 
         # THE round's single materialisation of the expensive tail
-        # (fused parse → dedupe shuffle → [bloom split →] anti-join):
-        # straight into the next frontier's parquet. Seen rows and the
-        # bloom build re-derive from this columnar file via
-        # column-pruned scans. Relying on the
+        # (fused parse → dedupe shuffle → anti-join): straight into
+        # the next frontier's parquet. Seen rows re-derive from this
+        # columnar file via a column-pruned scan. Relying on the
         # executor cache here instead (round-2 design: new.persist()
         # consumed by three jobs) was measured to nondeterministically
         # re-run the membership-UDF/anti-join tail or stall on cache
@@ -752,24 +692,20 @@ class FrontierCrawler:
                                      "url_norm", "left_anti")
         new_dir = self.store.append("frontier", next_new, f"r{r + 1}")
         new_count = self.store.append_rows(new_dir)
-        newf = None
-        if new_count:
-            newf = self.spark.read.schema(next_new.schema).parquet(new_dir)
-        else:
+        if not new_count:
             self.store.discard(new_dir)  # an empty append leaves no dir
         _mark("frontier_write")
 
         # overlap #2: the seen append is a pruned scan of the staged
         # file — run it in a driver thread while the deferred append
-        # and (once the bloom is on) the bloom update run in the main
-        # thread
-        if newf is not None:
+        # runs in the main thread
+        fut_seen = None
+        if new_count:
+            newf = self.spark.read.schema(next_new.schema).parquet(new_dir)
             fut_seen = pool.submit(
                 self.store.append, "seen", self._seen_rows(newf, r),
                 f"r{r}")
             futures.append(fut_seen)
-        else:
-            fut_seen = None
 
         # deferred rows re-enter the frontier as their own (small)
         # append; on the unbudgeted fast path deferred is empty by
@@ -791,24 +727,6 @@ class FrontierCrawler:
             self._n_seeds_blocked = max(
                 0, self._n_seeds - n_fetched - defer_count)
 
-        # The filter is (re)built from the seen TABLE — once when seen
-        # first outgrows a broadcast join, then on saturation (amortised
-        # doubling; O(1) per URL overall). This round's background seen
-        # append must land first, or the filter misses round-r URLs and
-        # a Bloom false negative becomes a duplicate crawl.
-        if self.bloom is not None:
-            if newf is not None:
-                self.bloom.add_df(newf, row_count=new_count)
-            rebuild = self.bloom.saturated()
-        if rebuild:
-            if fut_seen is not None:
-                fut_seen.result()
-            self.bloom = self._bloom_from_seen()
-        if self.bloom is not None:
-            _mark("bloom_add")
-            self.bloom.save(self._bloom_path)
-            self._sync_bloom_membership()
-            _mark("bloom_save")
         if fut_seen is not None:
             fut_seen.result()
         fut_results.result()
@@ -823,11 +741,6 @@ class FrontierCrawler:
             "robots_new": n_robots,
             "fetched": n_fetched,
             "deferred": defer_count,
-            # the seen bytes the bloom test read (None once the bloom
-            # is on, or with bloom_enabled off) and whether this
-            # round's anti-join consulted the filter
-            "seen_bytes": seen_bytes,
-            "bloom": bloom_on,
             "wall_secs": time.monotonic() - t0,
             "phases": phases,
         }
@@ -837,8 +750,6 @@ class FrontierCrawler:
             self.store.commit_snapshot(r, metrics)
         if cache_sched:
             ranked.unpersist()
-        if bloom_on:
-            cand.unpersist()
         shutil.rmtree(stage_dir, ignore_errors=True)
         return new_count + defer_count
 
@@ -873,23 +784,6 @@ class FrontierCrawler:
             if df is None:
                 return []
         return render_crawl_log(df, limit=limit)
-
-    def _sync_bloom_membership(self) -> None:
-        """Pick the membership path for the CURRENT filter size
-        (cfg.bloom_membership): write/refresh the per-bucket bitset
-        sidecar and arm co-partitioned evaluation, or stay on the
-        cached broadcast while the filter is small."""
-        if self.bloom is None:
-            return
-        total = self.bloom.n_buckets * (self.bloom.m // 8)
-        cfg = self.cfg
-        use_sidecar = cfg.bloom_membership == "sidecar" or (
-            cfg.bloom_membership == "auto"
-            and total >= cfg.bloom_sidecar_min_bytes)
-        if use_sidecar:
-            self.bloom.save_buckets(self.store.sidecar("bloom_buckets"))
-        else:
-            self.bloom.sidecar_dir = None
 
     # ------------------------------------------------------------------ #
 
@@ -958,56 +852,33 @@ class FrontierCrawler:
                 for row in self.results().select("url_norm").distinct().collect()}
 
     # ------------------------------------------------------------------ #
-    # Expiry / recrawl (engine-new: BASELINE.json:14 "cuckoo-filter
-    # fallback for deletions"; the reference resets ALL state per crawl,
-    # crawler.py:244-251 — per-URL TTL has no reference analogue)
+    # Expiry / recrawl (engine-new; the reference resets ALL state per
+    # crawl, crawler.py:244-251 — per-URL TTL has no reference analogue)
     # ------------------------------------------------------------------ #
-
-    def attach_cuckoo(self, capacity: int = 1 << 20) -> "object":
-        """Attach a sidecar-backed cuckoo filter mirroring the current
-        seen table (deletion support for expire_seen). Shard tables
-        live as one file per shard under the snapshot sidecar
-        (operators/seen.py CuckooSeen.save_shards), so bulk add/delete
-        stream shard files executor-side — no broadcast, no table
-        bytes through the driver (round-2 verdict item 1)."""
-        from simplecrawler_spark.operators.seen import CuckooSeen
-
-        cf = CuckooSeen(capacity=capacity)
-        cf.save_shards(self.store.sidecar("cuckoo_shards"))
-        seen = self.store.read("seen")
-        if not seen.isEmpty():
-            cf.add_df(seen)
-        self.cuckoo = cf
-        return cf
 
     def expire_seen(self, before_round: int) -> DataFrame:
         """Drop seen entries added before ``before_round`` so those
         urls become crawlable again (TTL/recrawl).
 
         The seen table is overwritten with the kept rows (snapshot
-        history keeps the old state). The Bloom sidecar cannot delete,
-        so it is rebuilt from the kept rows (distributed add); a
-        CuckooSeen sidecar — when attached as ``self.cuckoo`` — takes
-        the cheap path instead: per-key deletes, no rebuild. Returns
-        the expired rows.
+        history keeps the old state). Returns the expired rows,
+        persisted.
         """
         seen = self.store.read("seen")
         expired = seen.where(F.col("round_added") < before_round).persist()
         kept = seen.where(F.col("round_added") >= before_round)
         self.store.overwrite("seen", kept)
-        if getattr(self, "cuckoo", None) is not None:
-            self.cuckoo.delete_df(expired)
-        if self.bloom is not None:
-            self.bloom = self._bloom_from_seen()
-            self.bloom.save(self._bloom_path)
-            self._sync_bloom_membership()
         return expired
 
     def requeue(self, urls: DataFrame) -> int:
-        """Re-enqueue previously-expired urls for the next round (their
-        next fetch re-adds them to seen/results). Rows need url_norm
+        """Re-enqueue previously-expired urls for the next round.
+        They are admitted like a round's discovered links (_admit):
+        a url still in seen is NOT requeued, and the rest enter the
+        frontier and seen together, so a page linking to one does not
+        enqueue it a second time. A requeued seed also leaves
+        done_seeds, or the done-skip would drop it. Rows need url_norm
         (authority/host are re-derived when absent); depth and
-        provenance restart at 0/None."""
+        provenance restart at 0/None. Returns the requeued row count."""
         next_round = (self.store.latest_round() or 0) + 1
         if "authority" in urls.columns:
             authority = F.col("authority")
@@ -1023,8 +894,14 @@ class FrontierCrawler:
         rows = self._frontier_rows(urls.select(
             "url_norm", F.lit(None).cast("string").alias("url_raw"),
             authority.alias("authority"), host.alias("host")), next_round)
-        return self.store.append_rows(self.store.append(
-            "frontier", rows, partition=f"r{next_round}"))
+        if self.store.rows("done_seeds"):
+            # the urls _admit takes below (the same anti-join)
+            back = anti_join_seen(rows, self.store.read("seen"))
+            self.store.overwrite("done_seeds", self.store.read("done_seeds")
+                                 .join(back.select("url_norm"), "url_norm",
+                                       "left_anti"))
+            self._n_seeds_done = self.store.rows("done_seeds")
+        return self._admit(rows, next_round)
 
     def ingest_stream(self, source_dir: str, checkpoint_dir: str,
                       available_now: bool = True):
@@ -1037,11 +914,10 @@ class FrontierCrawler:
         Each micro-batch of canonicalised, stream-deduped urls is
         treated exactly like a round's discovered links
         (crawler.py:160-163 — enqueue ⇒ enter seen):
-          * anti-joined against the seen table (bloom-prefiltered once
-            the bloom is on), so an already-seen url is never
-            re-enqueued;
+          * anti-joined against the seen table, so an already-seen
+            url is never re-enqueued;
           * appended to BOTH the next frontier partition and the seen
-            table, and added to the bloom (when on);
+            table;
           * its authorities get their robots.txt fetched before any
             fetch of theirs: the round that reads the batch (the first
             of the next crawl run, or a sweeping round) runs the robots
@@ -1087,11 +963,6 @@ class FrontierCrawler:
                 return
             rnd = (self.store.latest_round() or 0) + 1
             n_new = self._admit(self._frontier_rows(batch_df, rnd), rnd)
-            if self.bloom is not None:
-                # the commit below makes the batch durable; the filter
-                # that now holds it must be too, or a reopened crawler
-                # loads one that misses it (a false negative refetches)
-                self.bloom.save(self._bloom_path)
             # durable per-batch commit: the snapshot round stays at the
             # last crawl round (rnd - 1), so later batches land in the
             # same next-round partition and continue_crawl resumes at it
@@ -1111,22 +982,9 @@ class FrontierCrawler:
     def resume(cls, spark: SparkSession, fetcher, root: str,
                cfg: CrawlConfig | None = None) -> "FrontierCrawler":
         """Reopen a killed crawl at its last committed snapshot; calling
-        continue_crawl() finishes the remaining rounds exactly."""
-        obj = cls(spark, fetcher, cfg, root=root)
-        if os.path.exists(obj._bloom_path):
-            try:
-                obj.bloom = BloomSeen.load(obj._bloom_path)
-            except ValueError:
-                # sidecar written under an incompatible position scheme
-                # (a cross-scheme load would false-negative ⇒ duplicate
-                # crawls) — drop it; continue_crawl rebuilds from the
-                # seen table exactly as for a missing sidecar
-                obj.bloom = None
-        cuckoo_io = obj.store.sidecar("cuckoo_shards")
-        if cuckoo_io.exists("manifest.json"):
-            from simplecrawler_spark.operators.seen import CuckooSeen
-            obj.cuckoo = CuckooSeen.load_shards(cuckoo_io)
-        return obj
+        continue_crawl() finishes the remaining rounds exactly. Filter
+        files an older build left under <root>/sidecar are ignored."""
+        return cls(spark, fetcher, cfg, root=root)
 
     def continue_crawl(self) -> DataFrame:
         """Finish the remaining rounds of a resumed crawl — identical
@@ -1135,7 +993,6 @@ class FrontierCrawler:
         last = self.store.latest_round()
         if last is None:
             raise RuntimeError("nothing to resume — no committed snapshot")
-        cfg = self.cfg
         # the R5 seed state is committed table data: both counters
         # come from parquet footers (seeds: the r0 frontier partition)
         self._n_seeds = self.store.rows("frontier", partition="r0")
@@ -1159,11 +1016,4 @@ class FrontierCrawler:
         # runs the robots phase over its frontier, which fetches any
         # authority not yet in the table.
         self._rstate = RobotsState.from_table(self.store.paths("robots"))
-        if cfg.bloom_enabled and self.bloom is None and \
-                self._outgrows_broadcast(self.store.bytes("seen")):
-            # no loadable sidecar, and seen has outgrown a broadcast
-            # join → rebuild the filter from the seen table (below the
-            # limit the rounds keep testing and build it when due)
-            self.bloom = self._bloom_from_seen()
-        self._sync_bloom_membership()
         return self._run_rounds(start_round=last + 1)

@@ -1,5 +1,5 @@
 """Streaming exact dedup — first-occurrence document filtering across
-micro-batches, backed by the crawl's own seen-filter machinery.
+micro-batches, backed by a durable seen table and a Bloom prefilter.
 
 A continuously-ingested training corpus (crawl output, submission
 queues, recrawl diffs) needs the SAME dedup guarantee the batch
@@ -7,9 +7,10 @@ pipeline gets from operators/dedup.exact_dedup: exactly one survivor
 per normalised-text fingerprint, ever. A watermarked
 ``dropDuplicates`` can't give it (state expires); an
 ``applyInPandasWithState`` set would hold every fingerprint in the
-state store forever. The scale-correct shape is the one the crawl
-already uses for URLs (plans/crawl.py R4): durable seen TABLE +
-Bloom prefilter sidecar, applied per micro-batch in ``foreachBatch``:
+state store forever. The scale-correct shape is a durable seen
+TABLE and the exact (url_hash, url_norm) anti-join the crawl uses for
+URLs (plans/crawl.py R4), here with operators/seen.py's BloomSeen in
+front of it, applied per micro-batch in ``foreachBatch``:
 
     batch → fingerprint → in-batch min-id collapse
           → bloom-split anti-join vs the seen-fingerprint table
@@ -17,9 +18,11 @@ Bloom prefilter sidecar, applied per micro-batch in ``foreachBatch``:
             snapshot commit per batch
 
 Dedup state therefore survives QUERY RESTARTS — it lives in the
-SnapshotStore, not the streaming state store — and the filter cost
-per batch is the crawl's measured anti-join path: definitely-new rows
-(bloom miss) never shuffle against the seen table.
+SnapshotStore, not the streaming state store — and definitely-new
+rows (bloom miss) never shuffle against the seen table. No benchmark
+workload runs this sink, so the prefilter's worth here is unmeasured
+(the crawl dropped its own copy once measured: README, "Scale
+design").
 
 Batch twin / oracle: ``dedup_survivors`` (min id per fingerprint) —
 processing the whole corpus as ONE batch, or as ANY partition of it
@@ -58,11 +61,11 @@ def dedup_survivors(docs: DataFrame, text_col: str = "text",
 
 
 class StreamDedup:
-    """Owns the durable dedup state (SnapshotStore + bloom sidecar)
+    """Owns the durable dedup state (SnapshotStore + in-memory bloom)
     and exposes the foreachBatch sink. Re-instantiating over the same
     ``root`` resumes: the seen table reloads from the latest snapshot
-    manifest and the bloom rebuilds from it (exactly the crawl's
-    resume contract — no false negatives after restart)."""
+    manifest and the bloom rebuilds from it (no false negatives after
+    restart)."""
 
     SEEN_SCHEMA = "fingerprint string, url_hash long, doc_id long"
     DOCS_SCHEMA = "doc_id long, fingerprint string"
@@ -93,10 +96,10 @@ class StreamDedup:
 
     @staticmethod
     def _seen_keys(seen: DataFrame) -> DataFrame:
-        # the seen-filter machinery keys on (url_hash, url_norm) and
-        # buckets its bloom on a host column — a content fingerprint
-        # plays all three roles (uniform by construction, so the
-        # bucketing it buys the crawl's skewed hosts is free here)
+        # anti_join_seen keys on (url_hash, url_norm) and BloomSeen
+        # buckets on a host column — a content fingerprint plays all
+        # three roles (uniform by construction, so host bucketing
+        # costs nothing here)
         return seen.select(
             F.col("fingerprint").alias("url_norm"),
             F.col("fingerprint").alias("host"),

@@ -26,7 +26,7 @@ bypasses crawler state (no robots registration, no seen insertion).
 To feed a FrontierCrawler, use ``FrontierCrawler.ingest_stream``
 (plans/crawl.py), which runs this same canonical_seed_stream but
 treats each micro-batch like a round's discovered links: seen
-anti-join + seen/bloom insertion + driver-side authority registration
+anti-join + seen insertion + driver-side authority registration
 (round-2 ADVICE fix).
 """
 

@@ -36,25 +36,6 @@ def spark():
     spark.stop()
 
 
-@pytest.fixture
-def broadcast_limit(spark):
-    """A setter for spark.sql.autoBroadcastJoinThreshold; the old value
-    comes back when the test ends."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    yield lambda limit: spark.conf.set(key, str(limit))
-    spark.conf.set(key, old)
-
-
-@pytest.fixture
-def no_broadcast(broadcast_limit):
-    """Broadcast joins off (-1) for one test. The crawl builds its
-    seen-set Bloom only once seen outgrows a broadcast join; with
-    broadcasts off that holds from the end of round 0, so tests that
-    exercise the filter in a crawl use this fixture."""
-    broadcast_limit(-1)
-
-
 @pytest.fixture(scope="session")
 def sf001_dir():
     return os.path.join(TESTDATA, "sf0.001")

@@ -371,40 +371,6 @@ def test_resume_identical_final_state(spark, tmp_path):
     assert partial.issubset(resumed.result_urls())
 
 
-def test_resume_with_incompatible_bloom_scheme(spark, tmp_path,
-                                              no_broadcast):
-    """A checkpoint whose bloom.npz was written under a different
-    position scheme must not abort the resume: the load raises
-    ValueError (cross-scheme bitsets false-negative → duplicate
-    crawls), resume drops the filter, and continue_crawl rebuilds it
-    from the seen table — same path as a missing sidecar."""
-    import numpy as np
-
-    cfg = CrawlConfig(max_per_host_per_round=2, max_rounds=2,
-                      bloom_enabled=True)
-    rows = crawler_server_rows(BASE)
-    crawler = crawl(spark, tmp_path / "killed", rows, BASE, cfg)
-
-    # rewrite the sidecar as if an older build (per-k-seed scheme) had
-    # checkpointed it
-    z = dict(np.load(crawler._bloom_path))
-    z["scheme"] = "per-k-seed"
-    np.savez(crawler._bloom_path[:-4], **z)
-
-    cfg2 = CrawlConfig(max_per_host_per_round=2, max_rounds=50,
-                       bloom_enabled=True)
-    fetcher = TableFetcher(site_graph_df(spark, rows), cfg2)
-    resumed = FrontierCrawler.resume(
-        spark, fetcher, str(tmp_path / "killed" / "crawl"), cfg2)
-    assert resumed.bloom is None  # stale filter dropped, not loaded
-    resumed.continue_crawl()
-    assert resumed.bloom is not None  # rebuilt from the seen table
-
-    full = crawl(spark, tmp_path / "full", rows, BASE,
-                 CrawlConfig(max_per_host_per_round=2, max_rounds=50))
-    assert resumed.result_urls() == full.result_urls()
-
-
 def test_resume_over_orphan_stage_dir(spark, tmp_path):
     """A crash BETWEEN the round's staging write and its snapshot
     commit leaves stage/fetched-r{r} behind (fixed name, unlike table
@@ -436,36 +402,34 @@ def test_resume_over_orphan_stage_dir(spark, tmp_path):
 
 
 def test_expire_and_recrawl(spark, tmp_path):
-    """Engine-new TTL/recrawl (BASELINE.json:14): expire old seen
-    entries, cuckoo-delete them from the sidecar, requeue, and verify
-    the urls are fetched again with identical final visited set."""
-    from simplecrawler_spark.operators.seen import CuckooSeen
+    """Engine-new TTL/recrawl (BASELINE.json:14): expire every seen
+    entry, requeue the expired urls and finish the crawl. A requeued
+    url enters seen with the frontier, and a requeued seed leaves
+    done_seeds, so the recrawl fetches every url of the first crawl
+    exactly once, the seed included, and seen holds every expired url
+    again."""
+    from collections import Counter
 
     crawler = crawl(spark, tmp_path, crawler_server_rows(), BASE + "/")
     first = crawler.result_urls()
-    assert first  # sanity
-    rounds_before = len(crawler.store.snapshots())
-
-    # attach a cuckoo sidecar mirroring the seen set, then expire all
-    crawler.cuckoo = CuckooSeen(capacity=1 << 12)
-    crawler.cuckoo.add_df(crawler.store.read("seen"))
-    some_url = next(iter(first))
-    assert some_url in crawler.cuckoo or True  # seed may not be in seen
+    last = crawler.store.latest_round()
 
     expired = crawler.expire_seen(before_round=10_000)  # everything
-    n_expired = expired.count()
-    assert n_expired > 0
+    gone = sorted(r.url_norm for r in expired.collect())
+    assert BASE + "/" in gone  # the seed, rediscovered via /
     assert crawler.store.read("seen").count() == 0
-    # cuckoo deletions happened (no rebuild): expired urls are gone
-    gone = [r.url_norm for r in expired.limit(5).collect()]
-    assert all(u not in crawler.cuckoo for u in gone)
 
-    # requeue and finish: everything is refetched, same visited set
-    assert crawler.requeue(expired) == n_expired
-    crawler.store.commit_snapshot(crawler.store.latest_round() or 0, {})
-    second = crawler.continue_crawl()
-    assert crawler.result_urls() == first
-    assert len(crawler.store.snapshots()) > rounds_before
+    # requeue and finish: everything is refetched, once
+    assert crawler.requeue(expired) == len(gone)
+    crawler.store.commit_snapshot(last, {})
+    crawler.continue_crawl()
+    refetched = Counter(
+        r.url_norm for r in crawler.results().where(F.col("round") > last)
+        .select("url_norm").collect())
+    assert set(refetched) == first
+    assert set(refetched.values()) == {1}
+    assert sorted(r.url_norm for r in
+                  crawler.store.read("seen").collect()) == gone
     expired.unpersist()
 
 
@@ -1255,138 +1219,19 @@ def test_compact_every_round_parity(spark, tmp_path):
     assert resumed.result_urls() == a.result_urls()
 
 
-# -- the seen-set Bloom switches on once seen outgrows a broadcast join -----
-
-_BLOOM_CFG = CrawlConfig(same_authority_only=False, max_rounds=20,
-                         bloom_enabled=True)
-
-
-def _bloom_crawl(spark, root, graph, seed):
-    c = FrontierCrawler(spark, TableFetcher(graph, _BLOOM_CFG), _BLOOM_CFG,
-                        root=str(root))
-    c.crawl(seed)
-    return c
-
-
-@pytest.fixture(scope="module")
-def bloom_graph(spark, tmp_path_factory):
-    """A graph a cross-host crawl covers in six rounds, its seed, and
-    that crawl, with the filter asked for, run at the session's
-    default broadcast limit."""
-    from simplecrawler_spark.sources.fixtures import synthetic_graph
-
-    graph = synthetic_graph(spark, n_pages=300, n_hosts=4, out_degree=5)
-    seed = graph.agg(F.min("url")).first()[0]
-    return graph, seed, _bloom_crawl(
-        spark, tmp_path_factory.mktemp("plain"), graph, seed)
-
-
-def _seen_state(c):
-    return (_per_round(c),
-            sorted(r.url_norm for r in c.store.read("seen").collect()))
-
-
-def _switch_on_limit(plain) -> int:
-    """A broadcast limit a few bytes above the seen bytes round 0
-    writes: round 1 still tests below it and round 2 above it, so
-    round 2 builds the filter and round 3 is the first to consult it."""
-    return _round_metrics(plain)[1]["seen_bytes"] + 64
-
-
-def test_small_crawl_builds_no_bloom(spark, tmp_path, bloom_graph,
-                                     broadcast_limit):
-    """While seen fits a broadcast join the filter saves no shuffle:
-    a crawl of a small graph that asks for it at the default limit
-    builds none, writes no bloom sidecar and tests the seen bytes
-    every round. With broadcasts off the filter is on from round 1,
-    and every round fetches the same pages. Without bloom_enabled no
-    round tests anything."""
-    graph, seed, plain = bloom_graph
-    assert plain.bloom is None
-    assert not os.path.exists(plain._bloom_path)
-    m = _round_metrics(plain)
-    assert len(m) == 6
-    assert not any(x["bloom"] for x in m.values())
-    assert m[0]["seen_bytes"] == 0
-    assert all(m[r]["seen_bytes"] > m[r - 1]["seen_bytes"]
-               for r in range(1, 6))
-
-    broadcast_limit(-1)
-    filtered = _bloom_crawl(spark, tmp_path, graph, seed)
-    assert filtered.bloom is not None
-    assert os.path.exists(filtered._bloom_path)
-    mf = _round_metrics(filtered)
-    assert [mf[r]["bloom"] for r in range(6)] == [False] + [True] * 5
-    assert [mf[r]["seen_bytes"] for r in range(6)] == [0] + [None] * 5
-    assert _per_round(filtered) == _per_round(plain)
-
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
-    off = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
-                          root=str(tmp_path / "off"))
-    off.crawl(seed)
-    assert off.bloom is None
-    assert all(x["seen_bytes"] is None and not x["bloom"]
-               for x in _round_metrics(off).values())
-    assert _per_round(off) == _per_round(plain)
-
-
-def test_bloom_switches_on_mid_crawl(spark, tmp_path, bloom_graph,
-                                     broadcast_limit):
-    graph, seed, plain = bloom_graph
-    limit = _switch_on_limit(plain)
-    broadcast_limit(limit)
-    c = _bloom_crawl(spark, tmp_path, graph, seed)
-    m = _round_metrics(c)
-    assert [m[r]["bloom"] for r in range(6)] == [False] * 3 + [True] * 3
-    assert m[1]["seen_bytes"] <= limit < m[2]["seen_bytes"]
-    assert all(m[r]["seen_bytes"] is None for r in (3, 4, 5))
-    # every seen row reached the filter: built from the table, then
-    # each later round's admissions added
-    assert c.bloom.added == c.store.read("seen").count()
-    assert _seen_state(c) == _seen_state(plain)
-
-
-def test_bloom_switch_on_survives_kill_and_resume(spark, tmp_path,
-                                                  bloom_graph,
-                                                  broadcast_limit):
-    """Kill the crawl while round 2 builds the filter (round 1
-    committed, no sidecar written): the committed seen table is past
-    the limit, so continue_crawl rebuilds the filter from it before
-    replaying round 2, and the crawl ends in the uninterrupted state."""
-    graph, seed, plain = bloom_graph
-    broadcast_limit(_switch_on_limit(plain))
-    cfg = _BLOOM_CFG
-    root = str(tmp_path / "killed")
-    killed = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg, root=root)
-
-    def crash():
-        raise RuntimeError("killed")
-
-    killed._bloom_from_seen = crash
-    with pytest.raises(RuntimeError, match="killed"):
-        killed.crawl(seed)
-    assert killed.store.latest_round() == 1
-
-    resumed = FrontierCrawler.resume(
-        spark, TableFetcher(graph, cfg), root, cfg)
-    assert resumed.bloom is None  # nothing to load
-    resumed.continue_crawl()
-    m = _round_metrics(resumed)
-    assert [m[r]["bloom"] for r in range(6)] == [False] * 2 + [True] * 4
-    assert resumed.bloom.added == resumed.store.read("seen").count()
-    assert _seen_state(resumed) == _seen_state(plain)
-
-
-@pytest.mark.parametrize("value, limit", [
-    (None, 10 << 20), ("10m", 10 << 20), ("256KB", 256 << 10),
-    ("4096", 4096), ("-1", -1)])
-def test_broadcast_limit_reads_byte_sizes(spark, broadcast_limit,
-                                          value, limit):
-    """The switch-on test reads the broadcast limit through the public
-    session conf and parses its byte-size units as Spark does (None:
-    the default, which the conf prints as 10485760b)."""
-    from simplecrawler_spark.plans.crawl import _broadcast_limit
-
-    if value is not None:
-        broadcast_limit(value)
-    assert _broadcast_limit(spark) == limit
+def test_round_metrics_schema(spark, tmp_path):
+    """Every committed round records exactly these metrics keys and
+    phases (round 0 adds seeds_blocked); bench.py, the perfbench
+    workloads and scripts/profile_crawl.py read them."""
+    crawler = crawl(spark, tmp_path, crawler_server_rows(), BASE + "/")
+    snaps = crawler.store.snapshots()
+    assert [s["round"] for s in snaps] == list(range(len(snaps)))
+    for s in snaps:
+        m = s["metrics"]
+        assert set(m) == {
+            "round", "done_new", "new_urls", "frontier_next",
+            "robots_new", "fetched", "deferred", "wall_secs", "phases",
+            *(["seeds_blocked"] if s["round"] == 0 else [])}
+        assert set(m["phases"]) == {
+            "robots_fetch", "fetch_stage", "results_submit", "seed_check",
+            "parse_canon_antijoin", "frontier_write", "write_join"}

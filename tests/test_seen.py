@@ -75,51 +75,6 @@ def test_cuckoo_add_contains_delete():
     assert present_after_delete < 25  # only fingerprint collisions remain
 
 
-def test_bloom_sidecar_matches_broadcast(spark, tmp_path):
-    """Round-2 verdict item 1a: the co-partitioned per-bucket sidecar
-    membership must flag exactly the same rows as the broadcast path
-    (and still have zero false negatives)."""
-    seen_urls = [f"http://h{i % 11}.test/p/{i}" for i in range(3000)]
-    cand_urls = [f"http://h{i % 11}.test/p/{i}" for i in range(2000, 5000)]
-    bloom = BloomSeen(expected_items=8192, fpp=0.01)
-    bloom.add_df(_urls_df(spark, seen_urls))
-
-    cand = _urls_df(spark, cand_urls)
-    via_bc = {r.url_norm: r.maybe for r in cand.withColumn(
-        "maybe", bloom.maybe_seen_col(cand)).collect()}
-
-    bloom.save_buckets(str(tmp_path / "buckets"))
-    via_sidecar = {r.url_norm: r._maybe
-                   for r in bloom.flag_maybe_seen(cand).collect()}
-    assert via_sidecar == via_bc
-    assert all(via_sidecar[u] for u in cand_urls if u in set(seen_urls))
-
-
-def test_crawl_bloom_sidecar_mode_same_visited_set(spark, tmp_path,
-                                                   no_broadcast):
-    """Forced sidecar membership end-to-end: identical visited set to
-    the (default) broadcast mode."""
-    from simplecrawler_spark.config import CrawlConfig
-    from simplecrawler_spark.plans.crawl import FrontierCrawler
-    from simplecrawler_spark.sources.fetch import TableFetcher
-    from simplecrawler_spark.sources.fixtures import synthetic_graph
-
-    graph = synthetic_graph(spark, n_pages=800, n_hosts=5, out_degree=5)
-    seed = graph.agg(F.min("url")).first()[0]
-    results = {}
-    for mode in ("broadcast", "sidecar"):
-        cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                          bloom_enabled=True, bloom_membership=mode)
-        crawler = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
-                                  root=str(tmp_path / mode))
-        crawler.crawl(seed)
-        assert crawler.bloom is not None
-        assert (crawler.bloom.sidecar_dir is not None) == (mode == "sidecar")
-        results[mode] = crawler.result_urls()
-    assert results["sidecar"] == results["broadcast"]
-    assert len(results["sidecar"]) > 100
-
-
 def test_cuckoo_bulk_add_delete_distributed(spark):
     """Round-2 verdict item: bulk cuckoo add/delete must run as a
     distributed per-shard job (applyInPandas over shard groups), never
@@ -244,63 +199,3 @@ def test_cuckoo_sidecar_reexport_to_new_dir(spark, tmp_path):
     # and the ORIGINAL sidecar is untouched by the re-export
     assert "http://h.test/p/1999" in CuckooSeen.load_shards(
         str(tmp_path / "a"))
-
-
-def test_attach_cuckoo_expire_recrawl(spark, tmp_path, no_broadcast):
-    """attach_cuckoo arms the sidecar path on the crawler's snapshot
-    root; expire_seen then takes per-key cuckoo deletes with no
-    broadcast, and resume() reopens the filter from its manifest."""
-    from simplecrawler_spark.config import CrawlConfig
-    from simplecrawler_spark.plans.crawl import FrontierCrawler
-    from simplecrawler_spark.sources.fetch import TableFetcher
-    from simplecrawler_spark.sources.fixtures import synthetic_graph
-
-    graph = synthetic_graph(spark, n_pages=400, n_hosts=3, out_degree=5)
-    seed = graph.agg(F.min("url")).first()[0]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=10,
-                      bloom_enabled=True)
-    fetcher = TableFetcher(graph, cfg)
-    crawler = FrontierCrawler(spark, fetcher, cfg,
-                              root=str(tmp_path / "c"))
-    crawler.crawl(seed)
-    assert crawler.bloom is not None  # expire_seen rebuilds it below
-    cf = crawler.attach_cuckoo(capacity=1 << 14)
-    assert cf.sidecar_dir is not None
-    some = [r.url_norm for r in
-            crawler.store.read("seen").limit(5).collect()]
-    assert all(u in cf for u in some)
-
-    expired = crawler.expire_seen(before_round=1)
-    gone = [r.url_norm for r in expired.limit(5).collect()]
-    assert all(u not in cf for u in gone)
-
-    reopened = FrontierCrawler.resume(spark, fetcher,
-                                      str(tmp_path / "c"), cfg)
-    assert reopened.cuckoo is not None
-    assert all(u not in reopened.cuckoo for u in gone)
-
-
-def test_bloom_grows_when_saturated(spark, tmp_path, no_broadcast):
-    """Amortised-doubling rebuild: crawl a graph far bigger than the
-    initial bloom capacity; the filter must end up resized with no
-    change to the visited set."""
-    from simplecrawler_spark.config import CrawlConfig
-    from simplecrawler_spark.plans.crawl import FrontierCrawler
-    from simplecrawler_spark.sources.fetch import TableFetcher
-    from simplecrawler_spark.sources.fixtures import synthetic_graph
-    from pyspark.sql import functions as F
-
-    graph = synthetic_graph(spark, n_pages=3000, n_hosts=4, out_degree=6)
-    seed = graph.agg(F.min("url")).first()[0]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                      bloom_enabled=True, bloom_initial_capacity=64)
-    crawler = FrontierCrawler(spark, TableFetcher(graph, cfg), cfg,
-                              root=str(tmp_path / "b"))
-    # shrink the initial filter way below the graph size
-    crawler.crawl(seed)
-    assert crawler.bloom.added > 1000
-    assert crawler.bloom.capacity >= crawler.bloom.added / 8
-    assert not crawler.bloom.saturated()
-    # sanity: dedupe stayed exact (seen rows unique)
-    seen = crawler.store.read("seen")
-    assert seen.count() == seen.select("url_norm").distinct().count()

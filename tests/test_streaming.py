@@ -113,12 +113,11 @@ def test_ingest_stream_registers_state(spark, tmp_path):
     assert first <= final
 
 
-def test_ingest_stream_reaches_saved_bloom(spark, tmp_path, no_broadcast):
-    """With the seen-set Bloom on, a micro-batch the sink admits
-    between crawls reaches the SAVED filter too: a crawler reopened
-    from the root loads a filter holding every seen row, so the
-    streamed page's self-link is not taken for a new url and the page
-    is fetched once."""
+def test_ingest_stream_reaches_saved_bloom(spark, tmp_path):
+    """A micro-batch the sink admits between crawls enters seen with
+    the frontier: a crawler reopened from the root does not take the
+    streamed page's self-link for a new url, so the page is fetched
+    once."""
     from pyspark.sql import functions as F
 
     from simplecrawler_spark.config import CrawlConfig
@@ -132,13 +131,11 @@ def test_ingest_stream_reaches_saved_bloom(spark, tmp_path, no_broadcast):
     rows = [_row(a + "/", body=make_html_from_links(["/p1"])),
             _row(a + "/p1", body=""),
             _row(b + "/ok", body=make_html_from_links(["/ok"]))]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                      bloom_enabled=True)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
     root = str(tmp_path / "c")
     crawler = FrontierCrawler(
         spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg, root=root)
     crawler.crawl(a)
-    assert crawler.bloom is not None
     src = tmp_path / "drop"
     src.mkdir()
     (src / "seeds.txt").write_text(f"{b}/ok\n")
@@ -146,7 +143,6 @@ def test_ingest_stream_reaches_saved_bloom(spark, tmp_path, no_broadcast):
 
     reopened = FrontierCrawler.resume(
         spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
-    assert reopened.bloom.added == reopened.store.read("seen").count()
     reopened.continue_crawl()
     assert (reopened.results().where(F.col("url_norm") == f"{b}/ok")
             .count()) == 1
@@ -290,12 +286,12 @@ def test_stream_sessionize_withholds_open_sessions(spark, tmp_path):
     assert len(got) < len(batch)
 
 
-def _crawl_with_mid_round_stream_batch(spark, tmp_path,
-                                       bloom_enabled=False):
-    """Crawl a.test while a micro-batch carrying b.test/streamed lands
-    during round 1, and check that the batch was staged, swept in at
-    the next round boundary and crawled exactly once. Returns the
-    crawler."""
+def test_ingest_stream_concurrent_with_executing_round(spark, tmp_path):
+    """Round-3 verdict item 4: a micro-batch landing WHILE a round
+    executes stages to <root>/stream_pending (never touching the
+    store's pending appends), the next round boundary sweeps it in,
+    and the streamed url is crawled exactly once — no refusal, no
+    lost urls, staged dirs deleted once their round commits."""
     import os
 
     from pyspark.sql import functions as F
@@ -314,8 +310,7 @@ def _crawl_with_mid_round_stream_batch(spark, tmp_path,
         _row(a + "/p2", body=""),
         _row(b + "/streamed", body=""),
     ]
-    cfg = CrawlConfig(same_authority_only=False, max_rounds=20,
-                      bloom_enabled=bloom_enabled)
+    cfg = CrawlConfig(same_authority_only=False, max_rounds=20)
     crawler = FrontierCrawler(
         spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg,
         root=str(tmp_path / "c"))
@@ -354,27 +349,6 @@ def _crawl_with_mid_round_stream_batch(spark, tmp_path,
     # staged dirs were deleted after their round's commit
     assert (not os.path.isdir(crawler._stream_pending_dir)
             or os.listdir(crawler._stream_pending_dir) == [])
-    return crawler
-
-
-def test_ingest_stream_concurrent_with_executing_round(spark, tmp_path):
-    """Round-3 verdict item 4: a micro-batch landing WHILE a round
-    executes stages to <root>/stream_pending (never touching the
-    store's pending appends), the next round boundary sweeps it in,
-    and the streamed url is crawled exactly once — no refusal, no
-    lost urls, staged dirs deleted once their round commits."""
-    _crawl_with_mid_round_stream_batch(spark, tmp_path)
-
-
-def test_ingest_stream_concurrent_with_bloom_on(spark, tmp_path,
-                                                no_broadcast):
-    """The same mid-round batch with the seen-set Bloom on from round
-    1: the sweep admits the batch through the filter, the streamed url
-    is crawled once, and the filter holds every seen row."""
-    crawler = _crawl_with_mid_round_stream_batch(spark, tmp_path,
-                                                 bloom_enabled=True)
-    assert crawler.bloom is not None
-    assert crawler.bloom.added == crawler.store.read("seen").count()
 
 
 def test_ingest_stream_staged_dirs_resweep_idempotent(spark, tmp_path):
