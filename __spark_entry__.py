@@ -1870,57 +1870,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rec = wat_record_expr(url, status, mime, links)
         return ev.select("event_id", F.md5(rec).alias("wat_md5"))
 
+    # Order matters: a driver that gates only the first 50 entries sees
+    # the operators added last, then q_crawl_bfs and one canary per
+    # older family (canonicalise, MinHash, embeddings, images, rank).
     return {
-        "q_canonicalize": q_canonicalize,
-        "q_url_dedupe": q_url_dedupe,
-        "q_seen_antijoin": q_seen_antijoin,
-        "q_politeness_window": q_politeness_window,
-        "q_crawl_bfs": q_crawl_bfs,
-        "q_mime_gate": q_mime_gate,
-        "q_status_class": q_status_class,
-        "q_extract_hrefs": q_extract_hrefs,
-        "q_trim_resolve": q_trim_resolve,
-        "q_filter_by": q_filter_by,
-        "q_dedup_exact": q_dedup_exact,
-        "q_corpus_clean": q_corpus_clean,
-        "q_minhash": q_minhash,
-        "q_lsh_pairs": q_lsh_pairs,
-        "q_dedup_components": q_dedup_components,
-        "q_neardup_batch": q_neardup_batch,
-        "q_ngram_jaccard": q_ngram_jaccard,
-        "q_containment": q_containment,
-        "q_substring_dedup": q_substring_dedup,
-        "q_decontaminate": q_decontaminate,
-        "q_simhash": q_simhash,
-        "q_phash_neardup": q_phash_neardup,
-        "q_lang_quality": q_lang_quality,
-        "q_token_stats": q_token_stats,
-        "q_repetition": q_repetition,
-        "q_span_dedup": q_span_dedup,
-        "q_hash_split": q_hash_split,
-        "q_pack_shards": q_pack_shards,
-        "q_mix_rebalance": q_mix_rebalance,
-        "q_cosine_topk": q_cosine_topk,
-        "q_embedding_norms": q_embedding_norms,
-        "q_ann_lsh": q_ann_lsh,
-        "q_cosine_pairs": q_cosine_pairs,
-        "q_ivf_assign": q_ivf_assign,
-        "q_ann_ivf_batch": q_ann_ivf_batch,
-        "q_semantic_dedup": q_semantic_dedup,
-        "q_robots_gate": q_robots_gate,
-        "q_image_features": q_image_features,
-        "q_aspect_buckets": q_aspect_buckets,
-        "q_caption_gate": q_caption_gate,
-        "q_image_dedup_cluster": q_image_dedup_cluster,
-        "q_unigram_logprob": q_unigram_logprob,
-        "q_bigram_logprob": q_bigram_logprob,
-        "q_pagerank": q_pagerank,
-        "q_hits": q_hits,
-        "q_url_traps": q_url_traps,
-        "q_recrawl": q_recrawl,
-        "q_chunk_docs": q_chunk_docs,
-        "q_sitemap": q_sitemap,
-        "q_robots_sitemaps": q_robots_sitemaps,
         "q_anchor_text": q_anchor_text,
         "q_host_backoff": q_host_backoff,
         "q_sniff_format": q_sniff_format,
@@ -1965,6 +1918,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_lang_multi": q_lang_multi,
         "q_main_text": q_main_text,
         "q_wat_records": q_wat_records,
+        "q_crawl_bfs": q_crawl_bfs,
+        "q_canonicalize": q_canonicalize,
+        "q_minhash": q_minhash,
+        "q_cosine_topk": q_cosine_topk,
+        "q_image_features": q_image_features,
+        "q_pagerank": q_pagerank,
+        "q_url_dedupe": q_url_dedupe,
+        "q_seen_antijoin": q_seen_antijoin,
+        "q_politeness_window": q_politeness_window,
+        "q_mime_gate": q_mime_gate,
+        "q_status_class": q_status_class,
+        "q_extract_hrefs": q_extract_hrefs,
+        "q_trim_resolve": q_trim_resolve,
+        "q_filter_by": q_filter_by,
+        "q_dedup_exact": q_dedup_exact,
+        "q_corpus_clean": q_corpus_clean,
+        "q_lsh_pairs": q_lsh_pairs,
+        "q_dedup_components": q_dedup_components,
+        "q_neardup_batch": q_neardup_batch,
+        "q_ngram_jaccard": q_ngram_jaccard,
+        "q_containment": q_containment,
+        "q_substring_dedup": q_substring_dedup,
+        "q_decontaminate": q_decontaminate,
+        "q_simhash": q_simhash,
+        "q_phash_neardup": q_phash_neardup,
+        "q_lang_quality": q_lang_quality,
+        "q_token_stats": q_token_stats,
+        "q_repetition": q_repetition,
+        "q_span_dedup": q_span_dedup,
+        "q_hash_split": q_hash_split,
+        "q_pack_shards": q_pack_shards,
+        "q_mix_rebalance": q_mix_rebalance,
+        "q_embedding_norms": q_embedding_norms,
+        "q_ann_lsh": q_ann_lsh,
+        "q_cosine_pairs": q_cosine_pairs,
+        "q_ivf_assign": q_ivf_assign,
+        "q_ann_ivf_batch": q_ann_ivf_batch,
+        "q_semantic_dedup": q_semantic_dedup,
+        "q_robots_gate": q_robots_gate,
+        "q_aspect_buckets": q_aspect_buckets,
+        "q_caption_gate": q_caption_gate,
+        "q_image_dedup_cluster": q_image_dedup_cluster,
+        "q_unigram_logprob": q_unigram_logprob,
+        "q_bigram_logprob": q_bigram_logprob,
+        "q_hits": q_hits,
+        "q_url_traps": q_url_traps,
+        "q_recrawl": q_recrawl,
+        "q_chunk_docs": q_chunk_docs,
+        "q_sitemap": q_sitemap,
+        "q_robots_sitemaps": q_robots_sitemaps,
     }
 
 

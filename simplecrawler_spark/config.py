@@ -121,12 +121,13 @@ class CrawlConfig:
     # the field stays for existing callers and will be removed.
     seed_state_mode: str = "table"
     # table maintenance cadence: every N rounds (after that round's
-    # snapshot commits) compact the seen/results tables' committed
-    # append dirs (SnapshotStore.compact — Iceberg rewriteDataFiles
+    # snapshot commits) merge the results table's committed append
+    # dirs (SnapshotStore.compact — Iceberg rewriteDataFiles
     # analogue). 0 = off (the default; run compact/expire/vacuum
-    # between crawls instead). A 10^4-round crawl at one append dir
-    # per table per round otherwise scales every seen-table scan's
-    # task count with ROUND count, not data size.
+    # between crawls instead). The frontier is not merged: rounds
+    # read it by partition tag and r0's footers count the seeds. So
+    # the seen scan (a view of the frontier) still touches about one
+    # frontier dir per past round; the old seen table merged into one.
     compact_every: int = 0
     # S5 per-URL log sink: append a crawl_log table row per
     # CRAWLING/VISITED/FOUND/ERROR/robots-blocked event (the

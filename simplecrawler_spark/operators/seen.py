@@ -5,7 +5,8 @@ Bloom prefilter and a cuckoo filter as standalone operators
 The reference keeps an exact in-memory Python set (crawler.py:81-83,
 160-163). At 10^10 URLs an exact set is a table and membership is an
 anti-join on (url_hash, url_norm) — the norm equality guards hash
-collisions. That anti-join is the crawl's whole seen set
+collisions. That anti-join against a view of the frontier table is
+the crawl's whole seen set
 (plans/crawl.py): a Bloom prefilter was measured slower there on both
 sides of the broadcast limit (README, "Scale design").
 
@@ -24,7 +25,7 @@ correctness never depends on the filter.
 
 ``CuckooSeen`` supports deletes (BASELINE.json:14 "cuckoo-filter
 fallback for deletions"); nothing in the crawl consults it — expiry
-deletes seen-table rows (FrontierCrawler.expire_seen).
+raises the floor of the crawl's seen view (FrontierCrawler.expire_seen).
 """
 
 from __future__ import annotations

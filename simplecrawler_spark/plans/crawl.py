@@ -19,9 +19,11 @@ north rule mandates (BASELINE.json:6,14):
       links       = parsed pages → extract → trim → resolve(base_raw)
                     → canonicalize → same-authority     (P1/P2, F12, F16, F8, R3)
       new         = dedupe(round) → anti-join(seen)     (R1/R4; exact)
-      seen       += new;  frontier_{r+1} = new ∪ deferred     (R9)
-      snapshot    = commit (frontier, seen, results, done_seeds, robots,
+      frontier_{r+1} = new (round_added = r) ∪ deferred (NULL)   (R9)
+      snapshot    = commit (frontier, results, done_seeds, robots,
                     metrics)
+    seen is no table but a view (FrontierCrawler.seen) of the frontier's
+    admissions (round_added), so each admitted url is written once.
     Terminate when frontier_{r+1} is empty (R7/R8 — equivalent to the
     reference's seen==done / queue-timeout exits, SURVEY.md §2.6.1).
 
@@ -29,11 +31,12 @@ Scale properties:
   * every round's state round-trips through Parquet — lineage stays
     flat across rounds (no unbounded plan growth), and a killed job
     resumes from the last committed snapshot exactly.
-  * the seen set is the seen table and one exact (url_hash, url_norm)
-    anti-join, which the planner broadcasts while seen is small. A
-    Bloom prefilter was measured slower on both sides of the broadcast
-    limit (README, "Scale design"), so the crawl keeps none. The
-    politeness window is the only per-host shuffle; the fetch input is
+  * the seen set is a column-pruned, predicate-pushed scan of the
+    frontier table and one exact (url_hash, url_norm) anti-join, which
+    the planner broadcasts while seen is small. A Bloom prefilter was
+    measured slower on both sides of the broadcast limit (README,
+    "Scale design"), so the crawl keeps none. The politeness window
+    is the only per-host shuffle; the fetch input is
     salted/rebalanced on url_hash so hot hosts don't serialise a stage.
   * per-round metrics and the driver's counters (seeds, done seeds,
     robots rules and delays) come free from parquet footers — no extra
@@ -70,9 +73,7 @@ from simplecrawler_spark.operators.politeness import (
 from simplecrawler_spark.operators.robots import (
     RobotsState, can_fetch, fetch_robots_table,
 )
-from simplecrawler_spark.operators.seen import (
-    anti_join_seen, host_bucket_expr,
-)
+from simplecrawler_spark.operators.seen import anti_join_seen
 from simplecrawler_spark.plans import schemas
 from simplecrawler_spark.plans.tables import SnapshotStore, footer_counts
 from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
@@ -141,11 +142,11 @@ class FrontierCrawler:
         self.cfg = cfg or CrawlConfig()
         self.root = root or tempfile.mkdtemp(prefix="crawl-")
         self.store = SnapshotStore(spark, self.root, schemas={
-            "frontier": schemas.FRONTIER, "seen": schemas.SEEN,
+            "frontier": schemas.FRONTIER,
             "results": schemas.RESULTS, "metrics": schemas.METRICS,
             "crawl_log": schemas.CRAWL_LOG, "robots": schemas.ROBOTS,
             "done_seeds": schemas.DONE_SEEDS,
-        })
+        }, views={"seen": self.seen})
         # S4 robots state — three footer-derived counters over the
         # persisted robots TABLE, the only rule source (the gate, the
         # politeness window and split_missing read the table itself;
@@ -156,15 +157,15 @@ class FrontierCrawler:
         # a stream sweep: those set this, and the robots phase clears it
         self._robots_due = False
         # R5 done-skip state. The ONLY urls that can be both done and
-        # re-enter the frontier are seeds (a seed is never added to
-        # seen — crawler.py:198-199, SURVEY.md §2.6.1 — so a page
-        # linking back to it re-enqueues it once). Seeds live only in
-        # the r0 frontier partition and completed seeds in the
-        # done_seeds table, which each round's snapshot commits with
-        # its results; the driver holds two footer-derived COUNTERS,
-        # so a 10^7+-seed ingest never builds an O(|seeds|) Python
-        # set. Done-skip is an anti-join (AQE broadcasts while small),
-        # completion a semi-join appended to done_seeds.
+        # re-enter the frontier are seeds (a seed's r0 row records no
+        # admission, so it is not in seen — crawler.py:198-199, SURVEY.md
+        # §2.6.1 — and a page linking back to it re-enqueues it once).
+        # Seeds live only in the r0 frontier partition and completed
+        # seeds in the done_seeds table, which each round's snapshot
+        # commits with its results; the driver holds two footer-derived
+        # COUNTERS, so a 10^7+-seed ingest never builds an O(|seeds|)
+        # Python set. Done-skip is an anti-join (AQE broadcasts while
+        # small), completion a semi-join appended to done_seeds.
         self._n_seeds = 0
         self._n_seeds_done = 0
         # seeds the robots gate refused in round 0 (footers): never
@@ -220,22 +221,25 @@ class FrontierCrawler:
     @staticmethod
     def _frontier_rows(df: DataFrame, rnd: int) -> DataFrame:
         """Depth-0 frontier rows for round ``rnd`` from (url_norm,
-        url_raw, authority, host) — seeds, streamed and requeued urls."""
+        url_raw, authority, host) — seeds, streamed and requeued urls.
+        They record no admission until _admit stamps round_added."""
         return df.select(
             "url_norm", "url_raw",
             url_hash(F.col("url_norm")).alias("url_hash"),
             "authority", "host",
             F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
             F.lit(None).cast("string").alias("discovered_from"),
-            F.lit(rnd).alias("round"))
+            F.lit(rnd).alias("round"),
+            F.lit(None).cast("int").alias("round_added"))
 
-    @staticmethod
-    def _seen_rows(df: DataFrame, rnd: int) -> DataFrame:
-        """Seen-table rows for frontier rows admitted in round ``rnd``."""
-        return df.select(
-            "url_hash", "url_norm",
-            host_bucket_expr(F.col("host")).alias("host_bucket"),
-            F.lit(rnd).alias("round_added"))
+    def seen(self) -> DataFrame:
+        """The seen set (R4): a column-pruned scan of the frontier rows
+        whose round_added is at or above the expiry floor. Seeds and
+        deferred copies carry NULL, so they are not in it."""
+        floor = self.store.props.get("seen_floor", 0)
+        return (self.store.read("frontier")
+                .where(F.col("round_added") >= floor)
+                .select("url_hash", "url_norm", "round_added"))
 
     def _seed_table(self) -> DataFrame:
         """The seed set AS A TABLE: round-0 frontier url_norms."""
@@ -321,19 +325,13 @@ class FrontierCrawler:
                 # commit_snapshot(r) has run — the swept batches are
                 # durable in the manifest; drop their staged files
                 self._drop_consumed_stream_dirs()
-                # opt-in table maintenance on a round cadence: compact
-                # the ever-growing membership tables AFTER the round's
-                # commit (pending is empty, so this only rewrites
-                # durable dirs; the swap itself becomes durable with
-                # the NEXT round's commit — a crash in between replays
-                # from the uncompacted manifest, losing nothing)
+                # opt-in table maintenance AFTER the round's commit
+                # (only durable dirs are rewritten; a crash before the
+                # next commit replays the uncompacted manifest). Results
+                # dirs are never read by round tag, so they merge across
+                # rounds; frontier dirs are, and r0's count the seeds.
                 if cfg.compact_every and (r + 1) % cfg.compact_every == 0:
-                    # merge_partitions: seen/results tag dirs by the
-                    # round that WROTE them, but are never pruned-read
-                    # by tag (the round lives in a column), so the
-                    # cross-round merge is what shrinks the scan
-                    for t in ("seen", "results"):
-                        self.store.compact(t, merge_partitions=True)
+                    self.store.compact("results", merge_partitions=True)
                 row_count = next_count
                 r += 1
         finally:
@@ -360,7 +358,7 @@ class FrontierCrawler:
             return 0
         batch = self.spark.read.parquet(*dirs)
         # cross-batch dedupe: the direct path gets this from per-batch
-        # seen insertion; swept batches land together, so dedupe here
+        # admission; swept batches land together, so dedupe here
         # (deterministic min-struct pick, same discipline as R1)
         batch = (batch.groupBy("url_norm")
                  .agg(F.min(F.struct("url_raw", "authority", "host"))
@@ -376,15 +374,12 @@ class FrontierCrawler:
         """Admit depth-0 frontier rows into round ``rnd`` the way a
         round admits its discovered links (crawler.py:160-163 —
         enqueue ⇒ enter seen): anti-join seen, then append to the
-        frontier and seen tables.
+        frontier with round_added = ``rnd``, which puts them in seen.
         Returns the admitted row count (parquet footers)."""
-        new = anti_join_seen(rows, self.store.read("seen")).persist()
-        n_new = self.store.append_rows(
+        new = anti_join_seen(rows.withColumn("round_added", F.lit(rnd)),
+                             self.seen())
+        return self.store.append_rows(
             self.store.append("frontier", new, partition=f"r{rnd}"))
-        self.store.append("seen", self._seen_rows(new, rnd),
-                          partition=f"r{rnd}")
-        new.unpersist()
-        return n_new
 
     def _drop_consumed_stream_dirs(self) -> None:
         """Delete staged stream batches the just-committed round
@@ -402,7 +397,7 @@ class FrontierCrawler:
         the body still awaits the submitted background writes (so no
         append keeps running past the round) and observes their
         exceptions before the pool is torn down."""
-        pool = ThreadPoolExecutor(max_workers=2)
+        pool = ThreadPoolExecutor(max_workers=1)
         futures: list = []
         self._in_round = True
         try:
@@ -554,7 +549,7 @@ class FrontierCrawler:
             F.lit(r).alias("round"), "image_id",
             F.lit(None).cast("string").alias("caption"),
         )
-        # overlap #1: the results write is a body-pruned scan of the
+        # overlap: the results write is a body-pruned scan of the
         # staged fetch file — submit it as a concurrent driver-thread
         # job instead of a barrier (file reads, unlike cold-cache
         # fills, are safe to overlap)
@@ -635,7 +630,7 @@ class FrontierCrawler:
                     "s.host", "s.depth", "s.discovered_from", "n_disc")
         )
         # R4: global dedupe against seen — the exact anti-join
-        new = anti_join_seen(cand, self.store.read("seen"))
+        new = anti_join_seen(cand, self.seen())
         _mark("parse_canon_antijoin")
 
         # G6: priority signal for next round's scheduling ORDER BY
@@ -668,8 +663,8 @@ class FrontierCrawler:
 
         # THE round's single materialisation of the expensive tail
         # (fused parse → dedupe shuffle → anti-join): straight into
-        # the next frontier's parquet. Seen rows re-derive from this
-        # columnar file via a column-pruned scan. Relying on the
+        # the next frontier's parquet, which is also the round's seen
+        # addition (round_added = r). Relying on the
         # executor cache here instead (round-2 design: new.persist()
         # consumed by three jobs) was measured to nondeterministically
         # re-run the membership-UDF/anti-join tail or stall on cache
@@ -680,7 +675,7 @@ class FrontierCrawler:
         next_new = new.select(
             "url_norm", "url_raw", "url_hash", "authority", "host",
             "depth", priority.alias("priority"), "discovered_from",
-            F.lit(r + 1).alias("round"),
+            F.lit(r + 1).alias("round"), F.lit(r).alias("round_added"),
         )
         if budgeted and seeds_pending:
             # a pending seed is not in seen, so one the budget deferred
@@ -696,26 +691,17 @@ class FrontierCrawler:
             self.store.discard(new_dir)  # an empty append leaves no dir
         _mark("frontier_write")
 
-        # overlap #2: the seen append is a pruned scan of the staged
-        # file — run it in a driver thread while the deferred append
-        # runs in the main thread
-        fut_seen = None
-        if new_count:
-            newf = self.spark.read.schema(next_new.schema).parquet(new_dir)
-            fut_seen = pool.submit(
-                self.store.append, "seen", self._seen_rows(newf, r),
-                f"r{r}")
-            futures.append(fut_seen)
-
         # deferred rows re-enter the frontier as their own (small)
-        # append; on the unbudgeted fast path deferred is empty by
-        # construction — skip the job entirely
+        # append, as copies that record no admission; on the
+        # unbudgeted fast path deferred is empty by construction —
+        # skip the job entirely
         defer_count = 0
         if budgeted:
             defer_dir = self.store.append(
                 "frontier",
-                deferred.withColumn("round", F.lit(r + 1)).select(
-                    *next_new.columns),
+                deferred.withColumn("round", F.lit(r + 1))
+                .withColumn("round_added", F.lit(None).cast("int"))
+                .select(*next_new.columns),
                 partition=f"r{r + 1}")
             defer_count = self.store.append_rows(defer_dir)
             if not defer_count:
@@ -727,16 +713,17 @@ class FrontierCrawler:
             self._n_seeds_blocked = max(
                 0, self._n_seeds - n_fetched - defer_count)
 
-        if fut_seen is not None:
-            fut_seen.result()
         fut_results.result()
         _mark("write_join")
 
-        # row counts from parquet footers (no extra jobs), one per gate
+        # row counts from parquet footers (no extra jobs), one per gate;
+        # new urls: the round's frontier appends that are admissions
+        n_appended, nulls = footer_counts(
+            self.store.paths("frontier", pending=True), ("round_added",))
         metrics = {
             "round": r,
             "done_new": self.store.rows("results", pending=True),
-            "new_urls": self.store.rows("seen", pending=True),
+            "new_urls": n_appended - nulls["round_added"],
             "frontier_next": new_count + defer_count,
             "robots_new": n_robots,
             "fetched": n_fetched,
@@ -860,22 +847,24 @@ class FrontierCrawler:
         """Drop seen entries added before ``before_round`` so those
         urls become crawlable again (TTL/recrawl).
 
-        The seen table is overwritten with the kept rows (snapshot
-        history keeps the old state). Returns the expired rows,
-        persisted.
+        Rewrites no data: it raises the seen floor (a store property,
+        durable at the next commit) to ``before_round``, but never past
+        the pending round, whose admissions stay seen. Returns the
+        expired rows, persisted.
         """
-        seen = self.store.read("seen")
-        expired = seen.where(F.col("round_added") < before_round).persist()
-        kept = seen.where(F.col("round_added") >= before_round)
-        self.store.overwrite("seen", kept)
+        floor = max(self.store.props.get("seen_floor", 0),
+                    min(before_round, (self.store.latest_round() or 0) + 1))
+        expired = self.seen().where(F.col("round_added") < floor).persist()
+        self.store.props["seen_floor"] = floor
         return expired
 
     def requeue(self, urls: DataFrame) -> int:
         """Re-enqueue previously-expired urls for the next round.
         They are admitted like a round's discovered links (_admit):
         a url still in seen is NOT requeued, and the rest enter the
-        frontier and seen together, so a page linking to one does not
-        enqueue it a second time. A requeued seed also leaves
+        frontier at or above the seen floor, so they are seen again
+        and a page linking to one does not enqueue it a second time.
+        A requeued seed also leaves
         done_seeds, or the done-skip would drop it. Rows need url_norm
         (authority/host are re-derived when absent); depth and
         provenance restart at 0/None. Returns the requeued row count."""
@@ -896,7 +885,7 @@ class FrontierCrawler:
             authority.alias("authority"), host.alias("host")), next_round)
         if self.store.rows("done_seeds"):
             # the urls _admit takes below (the same anti-join)
-            back = anti_join_seen(rows, self.store.read("seen"))
+            back = anti_join_seen(rows, self.seen())
             self.store.overwrite("done_seeds", self.store.read("done_seeds")
                                  .join(back.select("url_norm"), "url_norm",
                                        "left_anti"))
@@ -914,10 +903,10 @@ class FrontierCrawler:
         Each micro-batch of canonicalised, stream-deduped urls is
         treated exactly like a round's discovered links
         (crawler.py:160-163 — enqueue ⇒ enter seen):
-          * anti-joined against the seen table, so an already-seen
-            url is never re-enqueued;
-          * appended to BOTH the next frontier partition and the seen
-            table;
+          * anti-joined against seen, so an already-seen url is never
+            re-enqueued;
+          * appended to the next frontier partition as an admission
+            (round_added set), which puts it in seen;
           * its authorities get their robots.txt fetched before any
             fetch of theirs: the round that reads the batch (the first
             of the next crawl run, or a sweeping round) runs the robots
@@ -995,9 +984,15 @@ class FrontierCrawler:
             raise RuntimeError("nothing to resume — no committed snapshot")
         # the R5 seed state is committed table data: both counters
         # come from parquet footers (seeds: the r0 frontier partition)
+        tables = self.store.last_snapshot["tables"]
+        if "seen" in tables:
+            # its frontier rows carry no round_added: the seen view
+            # would read empty and every url would be admitted again
+            raise RuntimeError(
+                f"checkpoint at {self.root} has a seen table (written by "
+                "an older build); restart the crawl")
         self._n_seeds = self.store.rows("frontier", partition="r0")
-        if self._n_seeds and "done_seeds" not in \
-                self.store.last_snapshot["tables"]:
+        if self._n_seeds and "done_seeds" not in tables:
             # round 0 always commits a done_seeds append, so seeds
             # without one mean a checkpoint from a build that kept
             # completed seeds elsewhere: resuming would refetch them

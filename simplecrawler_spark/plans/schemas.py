@@ -18,12 +18,8 @@ FRONTIER = T.StructType([
     T.StructField("priority", T.DoubleType(), True),
     T.StructField("discovered_from", T.StringType(), True),
     T.StructField("round", T.IntegerType(), True),
-])
-
-SEEN = T.StructType([
-    T.StructField("url_hash", T.LongType(), True),
-    T.StructField("url_norm", T.StringType(), True),
-    T.StructField("host_bucket", T.IntegerType(), True),
+    # the round the url entered the seen set (FrontierCrawler.seen);
+    # NULL on rows that record no admission: seeds, deferred copies
     T.StructField("round_added", T.IntegerType(), True),
 ])
 

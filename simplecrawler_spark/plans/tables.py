@@ -15,6 +15,8 @@ Iceberg-parity properties kept:
     (north rule "per-partition lineage + metrics", BASELINE.json:14)
   * atomic commit: manifest written to a temp name then os.rename
   * resume: open the latest manifest and continue from its round
+  * table properties: a ``props`` dict each manifest carries forward
+  * views: a name ``read()`` answers with a function of the tables
 
 The reference has no storage at all (in-memory sets reset per crawl,
 /root/reference/simple_crawler/crawler.py:244-251); snapshots ARE the
@@ -29,6 +31,7 @@ import os
 import shutil
 import threading
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -112,10 +115,15 @@ class SnapshotStore:
     """Append-only multi-table store with snapshot manifests."""
 
     def __init__(self, spark: SparkSession, root: str,
-                 schemas: dict[str, T.StructType] | None = None):
+                 schemas: dict[str, T.StructType] | None = None,
+                 views: dict[str, Callable[[], DataFrame]] | None = None):
         self.spark = spark
         self.root = root
         self.schemas = dict(schemas or {})
+        # name -> what read() returns for it: a view owns no data dir
+        self.views = dict(views or {})
+        # table properties: durable at the next commit, then carried on
+        self.props: dict = {}
         self._snap_dir = os.path.join(root, "snapshots")
         os.makedirs(self._snap_dir, exist_ok=True)
         # committed state: table -> list of data dirs
@@ -135,6 +143,7 @@ class SnapshotStore:
             self._committed = {k: list(v) for k, v in snap["tables"].items()}
             self._partitions = {k: dict(v)
                                 for k, v in snap.get("partitions", {}).items()}
+            self.props = dict(snap.get("props", {}))
             self._last_snapshot = snap
 
     # -- write ------------------------------------------------------------
@@ -199,6 +208,7 @@ class SnapshotStore:
                 "round": round_no,
                 "tables": tables,
                 "partitions": partitions,
+                "props": dict(self.props),
                 "new_lineage": lineage,
                 "metrics": metrics or {},
             }
@@ -216,10 +226,12 @@ class SnapshotStore:
 
     # -- read -------------------------------------------------------------
 
-    def paths(self, table: str, partition: str | None = None) -> list[str]:
-        """The data dirs read() scans: committed plus pending."""
-        paths = (self._committed.get(table, [])
-                 + [a["path"] for a in self._pending.get(table, [])])
+    def paths(self, table: str, partition: str | None = None,
+              pending: bool = False) -> list[str]:
+        """The data dirs read() scans: committed plus pending
+        (``pending=True``: only the appends not yet committed)."""
+        paths = ([] if pending else self._committed.get(table, [])) \
+            + [a["path"] for a in self._pending.get(table, [])]
         if partition is None:
             return paths
         tags = dict(self._partitions.get(table, {}))
@@ -231,6 +243,8 @@ class SnapshotStore:
         return [p for p in paths if tags.get(p, partition) == partition]
 
     def read(self, table: str, partition: str | None = None) -> DataFrame:
+        if table in self.views:
+            return self.views[table]()
         paths = self.paths(table, partition)
         schema = self.schemas.get(table)
         if not paths:
@@ -274,9 +288,7 @@ class SnapshotStore:
         with self._pending_lock:
             recorded = {a["path"]: a["lineage"]
                         for a in self._pending.get(table, [])}
-        paths = self.paths(table, partition)
-        if pending:
-            paths = [p for p in paths if p in recorded]
+        paths = self.paths(table, partition, pending)
         return sum(f["rows"] for p in paths
                    for f in recorded.get(p) or _parquet_lineage(p))
 
@@ -291,7 +303,7 @@ class SnapshotStore:
         ones (Iceberg rewriteDataFiles / bin-pack analogue). The
         append-per-round/per-batch discipline is what makes commits
         atomic and lineage exact, but at 10^10 URLs it also means a
-        long crawl's seen/results tables accumulate one small dir per
+        long crawl's frontier/results tables accumulate one small dir per
         round — and a scan's task count (and the object-store LIST
         cost) grows with FILE count, not data size. Compaction is the
         standard table-maintenance answer, same cadence as
@@ -305,9 +317,9 @@ class SnapshotStore:
           * ``partition=`` restricts to one partition's group;
           * ``merge_partitions=True`` collapses EVERY selected dir
             into one untagged group — right for tables whose tags are
-            write-provenance only (seen/results tag one dir per
-            round but are never pruned-read; the round lives in a
-            COLUMN). Safe by the store's pruning contract: untagged
+            write-provenance only (results tag one dir per round but
+            are never pruned-read; the round lives in a COLUMN). Safe
+            by the store's pruning contract: untagged
             dirs are conservatively kept by every pruned read, and
             readers guard with a .where — pruning is an optimisation,
             never a correctness dependency;

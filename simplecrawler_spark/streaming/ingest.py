@@ -26,8 +26,8 @@ bypasses crawler state (no robots registration, no seen insertion).
 To feed a FrontierCrawler, use ``FrontierCrawler.ingest_stream``
 (plans/crawl.py), which runs this same canonical_seed_stream but
 treats each micro-batch like a round's discovered links: seen
-anti-join + seen insertion + driver-side authority registration
-(round-2 ADVICE fix).
+anti-join + admission (round_added set) + a robots phase for its
+authorities (round-2 ADVICE fix).
 """
 
 from __future__ import annotations
@@ -73,6 +73,7 @@ def stream_seeds(spark: SparkSession, source_dir: str, store: SnapshotStore,
             F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
             F.lit(None).cast("string").alias("discovered_from"),
             F.lit(round_no).alias("round"),
+            F.lit(None).cast("int").alias("round_added"),  # no admission
         )
         store.append("frontier", rows, partition=f"r{round_no}")
 

@@ -433,6 +433,53 @@ def test_expire_and_recrawl(spark, tmp_path):
     expired.unpersist()
 
 
+def test_partial_expiry_refetches_only_expired(spark, tmp_path):
+    """expire_seen(before_round=2) expires exactly the urls admitted in
+    rounds 0 and 1 (the list the seen table held before it became a
+    view of the frontier). After requeue, only those are refetched,
+    each once; the later admissions stay seen. The crawler_server
+    graph admits every url in round 0, so /world links to a chain of
+    pages admitted in rounds 1, 2 and 3."""
+    from collections import Counter
+
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links,
+    )
+
+    rows = [r for r in crawler_server_rows(BASE)
+            if r["url"] != BASE + "/world"] + [
+        _row(BASE + "/world",
+             body=make_html_from_links(["/hello", "/deep/1"])),
+        _row(BASE + "/deep/1", body=make_html_from_links(["/deep/2", "/"])),
+        _row(BASE + "/deep/2", body=make_html_from_links(["/deep/3"])),
+        _row(BASE + "/deep/3", body="")]
+    crawler = crawl(spark, tmp_path, rows, BASE + "/")
+    last = crawler.store.latest_round()
+    assert last == 4
+
+    expired = crawler.expire_seen(before_round=2)
+    gone = sorted(r.url_norm for r in expired.collect())
+    assert gone == [BASE + p for p in (
+        "/", "/deep/1", "/error/400", "/error/500", "/hello",
+        "/mime/image/png", "/mime/text/css", "/mime/text/pdf", "/world")]
+    assert sorted((r.round_added, r.url_norm)
+                  for r in crawler.store.read("seen").collect()) == [
+        (2, BASE + "/deep/2"), (3, BASE + "/deep/3")]
+
+    assert crawler.requeue(expired) == len(gone)
+    crawler.store.commit_snapshot(last, {})
+    crawler.continue_crawl()
+    refetched = Counter(
+        r.url_norm for r in crawler.results().where(F.col("round") > last)
+        .select("url_norm").collect())
+    assert refetched == {BASE + p: 1 for p in (
+        "/", "/deep/1", "/hello", "/mime/image/png", "/mime/text/css",
+        "/mime/text/pdf", "/world")}
+    seen = sorted(r.url_norm for r in crawler.store.read("seen").collect())
+    assert seen == sorted(gone + [BASE + "/deep/2", BASE + "/deep/3"])
+    expired.unpersist()
+
+
 def test_indegree_priority_schedules_hot_pages_first(spark, tmp_path):
     """G6 (round-2 verdict item 6): with priority_source='indegree' and
     a constrained per-host budget, a page discovered by many links must
@@ -799,6 +846,28 @@ def test_deferred_rediscovered_seed_fetched_once(spark, tmp_path):
     assert _done_seed_urls(c) == seeds
 
 
+def test_budgeted_seen_holds_only_rediscovered_seeds(spark, tmp_path):
+    """Seeds and the budget's deferred copies record no admission: in a
+    budgeted crawl whose pages link to three of five seeds, seen holds
+    exactly those three, once each, however the budget split them, and
+    the rounds' new_urls sum to its row count."""
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links,
+    )
+
+    seeds = [f"http://loop.test/p{i}" for i in range(5)]
+    rows = [_row(s, body=make_html_from_links(seeds[:3])) for s in seeds]
+    cfg = CrawlConfig(max_per_host_per_round=3, obey_robots=False)
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=str(tmp_path / "crawl"))
+    c.crawl(seeds)
+    assert sorted(r.url_norm for r in c.results().collect()) == seeds
+    seen = [r.url_norm for r in c.store.read("seen").collect()]
+    assert sorted(seen) == seeds[:3]
+    assert sum(s["metrics"]["new_urls"]
+               for s in c.store.snapshots()) == len(seen)
+
+
 def test_round0_stream_rows_keep_seed_check_running(spark, tmp_path):
     """A stream batch swept in at round 0 joins the seed table; the
     seed counter must count it too, or its completion stops the seed
@@ -846,6 +915,32 @@ def test_resume_refuses_checkpoint_without_done_seeds(spark, tmp_path):
     resumed = FrontierCrawler.resume(
         spark, TableFetcher(site_graph_df(spark, rows), cfg), root, cfg)
     with pytest.raises(RuntimeError, match="no done_seeds table"):
+        resumed.continue_crawl()
+
+
+def test_resume_refuses_checkpoint_with_seen_table(spark, tmp_path):
+    """A checkpoint that lists a seen table comes from a build that
+    kept seen apart from the frontier: its frontier rows carry no
+    round_added, so resuming would admit every url again."""
+    import glob
+    import json
+
+    cfg = CrawlConfig(max_rounds=1)
+    root = str(tmp_path / "crawl")
+    c = FrontierCrawler(spark, TableFetcher(
+        site_graph_df(spark, crawler_server_rows(BASE)), cfg), cfg, root=root)
+    c.crawl(BASE)
+    assert all("seen" not in s["tables"] for s in c.store.snapshots())
+    for path in glob.glob(os.path.join(root, "**", "snap-*.json"),
+                          recursive=True):
+        with open(path) as fh:
+            snap = json.load(fh)
+        snap["tables"]["seen"] = []
+        with open(path, "w") as fh:
+            json.dump(snap, fh)
+    resumed = FrontierCrawler.resume(spark, TableFetcher(
+        site_graph_df(spark, crawler_server_rows(BASE)), cfg), root, cfg)
+    with pytest.raises(RuntimeError, match="has a seen table"):
         resumed.continue_crawl()
 
 
@@ -1177,17 +1272,23 @@ def test_hits_authority_priority_schedules_ranked_pages_first(
 
 
 def test_compact_after_crawl_preserves_state(spark, tmp_path):
-    """Table maintenance between crawls: compacting the seen/results
-    tables changes file layout only — result set identical, resume
-    from the compacted manifest reaches the same fixpoint."""
+    """Table maintenance between crawls: compacting the results and
+    frontier tables changes file layout only — result set, seen set
+    and the r0 seed count identical (frontier compacts per partition
+    tag), and resume from the compacted manifest reaches the same
+    fixpoint."""
     rows = crawler_server_rows(BASE)
     crawler = crawl(spark, tmp_path / "c", rows, BASE)
     before = crawler.result_urls()
+    seen_before = sorted(crawler.seen().collect())
+    n_seeds = crawler.store.rows("frontier", partition="r0")
     out_r = crawler.store.compact("results", min_dirs=1)
-    out_s = crawler.store.compact("seen", min_dirs=1)
+    out_f = crawler.store.compact("frontier", min_dirs=1)
     assert out_r["dirs_after"] <= out_r["dirs_before"]
-    assert out_s["dirs_after"] <= out_s["dirs_before"]
+    assert out_f["groups_rewritten"] >= 1
     assert crawler.result_urls() == before
+    assert sorted(crawler.seen().collect()) == seen_before
+    assert crawler.store.rows("frontier", partition="r0") == n_seeds
     crawler.store.commit_snapshot(99)
 
     cfg2 = CrawlConfig()

@@ -5,23 +5,33 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.sql import types as T
+
 from simplecrawler_spark.plans import schemas
 from simplecrawler_spark.plans.tables import SnapshotStore
+
+# a small four-column table to round-trip
+SEEN = T.StructType([
+    T.StructField("url_hash", T.LongType(), True),
+    T.StructField("url_norm", T.StringType(), True),
+    T.StructField("host_bucket", T.IntegerType(), True),
+    T.StructField("round_added", T.IntegerType(), True),
+])
 
 
 def _store(spark, root):
     return SnapshotStore(spark, str(root), schemas={
-        "seen": schemas.SEEN, "frontier": schemas.FRONTIER})
+        "seen": SEEN, "frontier": schemas.FRONTIER})
 
 
 def test_append_read_commit(spark, tmp_path):
     st = _store(spark, tmp_path)
     assert st.read("seen").count() == 0  # empty table via schema registry
-    df = spark.createDataFrame([(1, "http://a/", 0, 0)], schemas.SEEN)
+    df = spark.createDataFrame([(1, "http://a/", 0, 0)], SEEN)
     st.append("seen", df)
     assert st.read("seen").count() == 1  # pending visible
     st.commit_snapshot(0, {"new": 1})
-    st.append("seen", spark.createDataFrame([(2, "http://b/", 0, 1)], schemas.SEEN))
+    st.append("seen", spark.createDataFrame([(2, "http://b/", 0, 1)], SEEN))
     st.commit_snapshot(1, {"new": 1})
     assert st.read("seen").count() == 2
     assert st.read_at("seen", 1).count() == 1  # time travel
@@ -29,10 +39,10 @@ def test_append_read_commit(spark, tmp_path):
 
 def test_resume_from_manifest(spark, tmp_path):
     st = _store(spark, tmp_path)
-    st.append("seen", spark.createDataFrame([(1, "http://a/", 0, 0)], schemas.SEEN))
+    st.append("seen", spark.createDataFrame([(1, "http://a/", 0, 0)], SEEN))
     st.commit_snapshot(3, {})
     # uncommitted appends are lost on crash — simulate one
-    st.append("seen", spark.createDataFrame([(9, "http://z/", 0, 9)], schemas.SEEN))
+    st.append("seen", spark.createDataFrame([(9, "http://z/", 0, 9)], SEEN))
 
     resumed = _store(spark, tmp_path)  # fresh open, same root
     assert resumed.latest_round() == 3
@@ -42,7 +52,7 @@ def test_resume_from_manifest(spark, tmp_path):
 def test_lineage_rowcounts(spark, tmp_path):
     st = _store(spark, tmp_path)
     df = spark.createDataFrame(
-        [(i, f"http://h/{i}", 0, 0) for i in range(10)], schemas.SEEN)
+        [(i, f"http://h/{i}", 0, 0) for i in range(10)], SEEN)
     st.append("seen", df)
     manifest = st.commit_snapshot(0, {"fetched": 10.0})
     snap = json.load(open(manifest))
@@ -59,7 +69,7 @@ def test_row_counts_from_footers(spark, tmp_path):
 
     def seen(n, r):
         return spark.createDataFrame(
-            [(i, f"http://h/{r}/{i}", 0, r) for i in range(n)], schemas.SEEN)
+            [(i, f"http://h/{r}/{i}", 0, r) for i in range(n)], SEEN)
 
     p0 = st.append("seen", seen(3, 0), partition="r0")
     assert st.append_rows(p0) == 3
@@ -89,7 +99,7 @@ def test_expire_and_vacuum(spark, tmp_path):
     st = _store(spark, tmp_path)
     for i in range(4):
         st.append("seen", spark.createDataFrame(
-            [(i, f"http://a/{i}", 0, i)], schemas.SEEN))
+            [(i, f"http://a/{i}", 0, i)], SEEN))
         st.commit_snapshot(i, {})
     # overwrite repoints 'seen' at one fresh dir → 4 orphans-to-be
     st.overwrite("seen", st.read("seen"))
@@ -97,7 +107,7 @@ def test_expire_and_vacuum(spark, tmp_path):
     # a crashed append: dir on disk, never committed, not pending
     # (fresh store instance below forgets it)
     st.append("seen", spark.createDataFrame(
-        [(99, "http://z/", 0, 9)], schemas.SEEN))
+        [(99, "http://z/", 0, 9)], SEEN))
 
     st2 = _store(spark, tmp_path)       # reopen: pending forgotten
     n_before = st2.read("seen").count()
@@ -108,7 +118,7 @@ def test_expire_and_vacuum(spark, tmp_path):
         st2.read_at("seen", 1)
     # a pending append right now must NOT be vacuumed
     st2.append("seen", spark.createDataFrame(
-        [(100, "http://p/", 0, 1)], schemas.SEEN))
+        [(100, "http://p/", 0, 1)], SEEN))
     removed = st2.vacuum()
     # gone: the 4 pre-overwrite append dirs + the crashed append
     assert len(removed) == 5
@@ -133,7 +143,7 @@ def test_compact_rewrites_small_dirs(spark, tmp_path):
     for r in range(6):
         df = spark.createDataFrame(
             [(r * 10 + i, f"http://h{r}/{i}", 0, r) for i in range(5)],
-            schemas.SEEN)
+            SEEN)
         st.append("seen", df, partition=f"r{r % 2}")
         st.commit_snapshot(r)
     before = st.read("seen").count()
@@ -174,11 +184,11 @@ def test_compact_leaves_pending_and_small_groups(spark, tmp_path):
     st = _store(spark, tmp_path)
     for r in range(4):
         st.append("seen", spark.createDataFrame(
-            [(r, f"http://h{r}/", 0, r)], schemas.SEEN),
+            [(r, f"http://h{r}/", 0, r)], SEEN),
             partition="rA" if r < 3 else "rB")
     st.commit_snapshot(0)
     st.append("seen", spark.createDataFrame(
-        [(99, "http://pending/", 0, 9)], schemas.SEEN), partition="rA")
+        [(99, "http://pending/", 0, 9)], SEEN), partition="rA")
 
     out = st.compact("seen", partition="rA")
     assert out["groups_rewritten"] == 1
@@ -201,7 +211,7 @@ def test_compact_keeps_dir_committed_during_rewrite(spark, tmp_path,
     st = _store(spark, tmp_path)
     for r in range(3):
         st.append("seen", spark.createDataFrame(
-            [(r, f"http://h{r}/", 0, r)], schemas.SEEN), partition="r0")
+            [(r, f"http://h{r}/", 0, r)], SEEN), partition="r0")
         st.commit_snapshot(r)
     write = DataFrameWriter.parquet
     late: list[str] = []
@@ -211,7 +221,7 @@ def test_compact_keeps_dir_committed_during_rewrite(spark, tmp_path,
         if not late:  # the rewrite's write; the append below writes too
             late.append("")
             late[0] = st.append("seen", spark.createDataFrame(
-                [(99, "http://late/", 0, 3)], schemas.SEEN), partition="r1")
+                [(99, "http://late/", 0, 3)], SEEN), partition="r1")
             st.commit_snapshot(3)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", racing_write)
@@ -236,7 +246,7 @@ def test_compact_merge_partitions(spark, tmp_path):
     st = _store(spark, tmp_path)
     for r in range(5):
         st.append("seen", spark.createDataFrame(
-            [(r, f"http://h{r}/", 0, r)], schemas.SEEN),
+            [(r, f"http://h{r}/", 0, r)], SEEN),
             partition=f"r{r}")
     st.commit_snapshot(0)
     out = st.compact("seen", merge_partitions=True)
@@ -248,3 +258,18 @@ def test_compact_merge_partitions(spark, tmp_path):
     st.commit_snapshot(1)
     st2 = _store(spark, tmp_path)
     assert st2.read("seen").count() == 5
+
+
+def test_props_carry_forward_and_views(spark, tmp_path):
+    """Store properties become durable at the next commit and every
+    later commit carries them; a view answers read() by its name."""
+    st = _store(spark, tmp_path)
+    st.props["floor"] = 3
+    st.commit_snapshot(0)
+    st.commit_snapshot(1)
+    reopened = _store(spark, tmp_path)
+    assert reopened.props == {"floor": 3}
+    assert reopened.last_snapshot["props"] == {"floor": 3}
+
+    st.views["evens"] = lambda: spark.range(4).where("id % 2 = 0")
+    assert sorted(r.id for r in st.read("evens").collect()) == [0, 2]
